@@ -4728,7 +4728,7 @@ def oracle_sql() -> dict[str, str]:
               GROUP BY l1.label
             ),
             degc AS (
-              SELECT lab.label, sum(deg.deg) AS deg_sum
+              SELECT lab.label, CAST(sum(deg.deg) AS BIGINT) AS deg_sum
               FROM deg JOIN lab ON lab.node = deg.node
               GROUP BY lab.label
             )
@@ -4973,7 +4973,7 @@ def oracle_sql() -> dict[str, str]:
               GROUP BY l1.label
             ),
             volc AS (
-              SELECT lab.label, sum(deg.deg) AS vol
+              SELECT lab.label, CAST(sum(deg.deg) AS BIGINT) AS vol
               FROM deg JOIN lab ON lab.node = deg.node
               GROUP BY lab.label
             )

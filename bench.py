@@ -38,6 +38,9 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 HEADLINE_REPEATS = 3
 GROUPS = 3
 CONTROLS = ["exact_dedup", "top_hubs"]
+# the --group child prints its result behind this prefix; the parent reads
+# exactly that line, whatever else (Spark, py4j) reaches stdout
+RESULT_PREFIX = "LINKGRAPH_BENCH_GROUP_RESULT "
 
 # stable order — the fixed group assignment is i % GROUPS over this list
 QUERY_LIST = [
@@ -133,13 +136,15 @@ def run() -> dict:
     # interleaved repeats: barrier + sharded alternate each round; the
     # reported headline is the MEDIAN iterate wall across rounds
     b_iter, b_wall, s_wall, s_iter_ms = [], [], [], []
-    iters = conv = s_iters = None
+    b_iters, s_iters_all = [], []
+    conv = None
     for _ in range(HEADLINE_REPEATS):
         t0 = time.monotonic()
         res = pagerank_barrier(sharded_graph=g, eps=1e-6, max_iter=200)
         b_wall.append(time.monotonic() - t0)
         b_iter.append(sum(mm["wall_ms"] for mm in res.iter_metrics) / 1e3)
-        iters, conv = res.iterations, res.converged
+        b_iters.append(res.iterations)
+        conv = res.converged
 
         t0 = time.monotonic()
         res_sh = pagerank_sharded(edges, eps=1e-6, max_iter=200, sharded_graph=g)
@@ -148,8 +153,16 @@ def run() -> dict:
             sum(mm["wall_ms"] for mm in res_sh.iter_metrics)
             / max(1, len(res_sh.iter_metrics))
         )
-        s_iters = res_sh.iterations
+        s_iters_all.append(res_sh.iterations)
 
+    # the headline divides m·iterations by a median wall: only sound when
+    # every repeat ran the same number of iterations
+    if len(set(b_iters)) != 1 or len(set(s_iters_all)) != 1:
+        raise RuntimeError(
+            f"iteration counts differ across repeats: barrier {b_iters}, "
+            f"sharded {s_iters_all}"
+        )
+    iters, s_iters = b_iters[0], s_iters_all[0]
     iter_sec = statistics.median(b_iter)
     sharded_sec = statistics.median(s_wall)
     edges_per_sec = m * iters / max(iter_sec, 1e-9)
@@ -169,7 +182,16 @@ def run() -> dict:
             raise RuntimeError(
                 f"bench group {grp} failed:\n{proc.stderr[-2000:]}"
             )
-        walls = json.loads(proc.stdout.strip().splitlines()[-1])
+        lines = [
+            ln[len(RESULT_PREFIX):] for ln in proc.stdout.splitlines()
+            if ln.startswith(RESULT_PREFIX)
+        ]
+        if len(lines) != 1:
+            raise RuntimeError(
+                f"bench group {grp}: expected one result line, got "
+                f"{len(lines)}:\n{proc.stdout[-2000:]}"
+            )
+        walls = json.loads(lines[0])
         for c in CONTROLS:
             controls[c].append(walls.pop(c))
         queries.update(walls)
@@ -210,6 +232,6 @@ def run() -> dict:
 
 if __name__ == "__main__":
     if len(sys.argv) >= 3 and sys.argv[1] == "--group":
-        print(json.dumps(run_group(int(sys.argv[2]))))
+        print(RESULT_PREFIX + json.dumps(run_group(int(sys.argv[2]))))
     else:
         print(json.dumps(run()))

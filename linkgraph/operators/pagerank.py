@@ -23,12 +23,14 @@ Two physical strategies, identical semantics (allclose 1e-6 asserted in tests):
 * ``pagerank_sharded`` (plans/shards.py) — partitioned-CSR gather-scatter in
   Arrow-batched numpy kernels over salted, edge-balanced adjacency shards;
   the idiomatic analogue of the reference's MPI design (main_mpi.c:67-154):
-  broadcast dense rank vector ≙ MPI_Allgatherv, driver norm ≙ MPI_Reduce.
+  k iterations per single-task job, or the whole loop in one barrier gang
+  whose task-to-task exchange ≙ MPI_Allgatherv and pid-ordered δ² sum ≙
+  MPI_Reduce.
 
-Per-iteration driver work is ONE Spark action: norm² and the next
-iteration's dangling mass are computed in the same aggregate (piggyback —
-the reference's per-iteration scalar host readback, pagerank_custom.h:261-268,
-batched per SURVEY §4 X7).
+``pagerank_dataframe``'s per-iteration driver work is ONE Spark action: norm²
+and the next iteration's dangling mass are computed in the same aggregate
+(piggyback — the reference's per-iteration scalar host readback,
+pagerank_custom.h:261-268, batched per SURVEY §4 X7).
 """
 
 from __future__ import annotations
@@ -371,41 +373,42 @@ def pagerank_sharded(
     run_id: str | None = None,
     sharded_graph=None,
     batch: bool | None = None,
-    fused: bool | None = None,
     mesh_transport: str | None = None,
     family: str = "a",
     weight_col: str | None = None,
 ) -> PageRankResult:
     """Fast path: PageRank over persisted CSR shards with a numpy
     gather-scatter kernel (plans/shards.py). Semantics identical to
-    ``pagerank_dataframe`` (asserted allclose 1e-6 in tests). Three physical
+    ``pagerank_dataframe`` (asserted allclose 1e-6 in tests). Two physical
     regimes, the reference MPI loop (pagerank_custom_mpi.h:40-79)
-    re-expressed at three fusion levels:
+    re-expressed at two fusion levels:
 
     * small m, no checkpoint → single-task ``spmv_batch``: k iterations
       fused into ONE Spark job (exact in-kernel L2 stop).
-    * otherwise (default, ``fused=True``) → the whole loop runs as ONE
-      barrier gang job via ``plans/barrier.pagerank_barrier``: k = ALL
-      remaining steps between driver norm reads, executor-to-executor
-      partial exchange, checkpoints written in-job every
-      ``checkpoint_interval`` — the distributed extension of the batch
-      fusion (reference precedent: CHECK_CONVERGENCE=0 runs fixed blocks,
-      global_config.h:8-10). No per-iteration Spark job floor.
-    * ``fused=False`` → the legacy per-iteration driver loop (one Spark
-      action per iteration: SpMV partials collected, driver bincount
-      combine — broadcast/collect standing in for Allgatherv/Reduce).
-      Kept for regime-equality tests and as the elastic path (executors
-      may change between iterations; the barrier gang is fixed for the
-      job's lifetime).
+    * otherwise → the whole loop runs as ONE barrier gang job via
+      ``plans/barrier.pagerank_barrier``: k = ALL remaining steps between
+      driver norm reads, executor-to-executor partial exchange,
+      checkpoints written in-job every ``checkpoint_interval`` — the
+      distributed extension of the batch fusion (reference precedent:
+      CHECK_CONVERGENCE=0 runs fixed blocks, global_config.h:8-10). No
+      per-iteration Spark job floor.
 
-    All regimes share the part-ascending combine order, so vectors and
-    stop decisions are bit-identical across them (pinned in tests)."""
+    The batch regime writes no checkpoints, so ``batch=True`` together
+    with ``store`` and ``run_id`` raises ``ValueError``. Both regimes share
+    the part-ascending combine order, so vectors and stop decisions are
+    bit-identical across them (pinned in tests)."""
     import numpy as np
 
     from linkgraph.plans.shards import ShardedGraph
 
     if family not in ("a", "b"):
         raise ValueError(f"family must be 'a' or 'b', got {family!r}")
+    checkpointed = store is not None and run_id is not None
+    if batch and checkpointed:
+        raise ValueError(
+            "pagerank_sharded: batch=True writes no checkpoints — drop "
+            "store/run_id or let the gang regime run (batch=None/False)"
+        )
     if sharded_graph is not None and weight_col is not None and not sharded_graph.weighted:
         raise ValueError(
             "pagerank_sharded: weight_col given but the prebuilt "
@@ -415,8 +418,6 @@ def pagerank_sharded(
     g = sharded_graph or ShardedGraph.build(
         edges, num_shards=num_shards, weight_col=weight_col
     )
-    spark = g.spark
-    n = g.n
 
     # Regime pick ("shuffle partitioning tuned per iteration", north rule):
     # below ~64M edges the whole CSR fits one worker's cache and the
@@ -425,12 +426,8 @@ def pagerank_sharded(
     # (bit-identical combine order, exact in-kernel L2 stop — iteration
     # counts match the oracle). Larger graphs and checkpointed runs fuse
     # the whole loop into one barrier gang job instead (delegation below).
-    use_batch = (
-        batch
-        if batch is not None
-        else g.m <= 64_000_000 and (store is None or run_id is None)
-    )
-    if not use_batch and (fused if fused is not None else True):
+    use_batch = batch if batch is not None else g.m <= 64_000_000 and not checkpointed
+    if not use_batch:
         from linkgraph.plans.barrier import pagerank_barrier
 
         res = pagerank_barrier(
@@ -450,86 +447,34 @@ def pagerank_sharded(
             strategy="sharded",
         )
 
-    start_iter = 0
-    rank = np.full(n, 1.0 / n, dtype=np.float64)
-    if store is not None and run_id is not None and store.latest_iteration(run_id) is not None:
-        start_iter = store.latest_iteration(run_id)
-        snap = store.read_ranks(spark, run_id, start_iter).toPandas()
-        idx = np.searchsorted(g.node_ids, snap["node"].to_numpy())
-        rank = np.zeros(n, dtype=np.float64)
-        rank[idx] = snap["rank"].to_numpy()
-
+    rank = np.full(g.n, 1.0 / g.n, dtype=np.float64)
     norm = float("inf")
     converged = False
     metrics: list[dict] = []
-    it = start_iter
-
-    if use_batch:
-        while it < max_iter and not converged:
-            k = min(16, max_iter - it)
-            t0 = time.monotonic()
-            rank, norms, masses, nnz_total, kernel_ms = g.spmv_batch(
-                rank, k=k, d=d, eps=eps, check_convergence=check_convergence,
-                family=family,
-            )
-            job_ms = (time.monotonic() - t0) * 1e3
-            for j, (norm_j, mass_j) in enumerate(zip(norms, masses)):
-                it += 1
-                metrics.append(
-                    {
-                        "iteration": it,
-                        "norm": float(norm_j),
-                        "mass": float(mass_j),
-                        "wall_ms": job_ms / len(norms),
-                        "kernel_ms": kernel_ms / len(norms),
-                        "nnz": nnz_total // len(norms),
-                        "batched": len(norms),
-                    }
-                )
-            norm = float(norms[-1])
-            converged = bool(check_convergence and norm <= eps)
-
-    start_loop = it
-    for it in range(start_loop + 1, max_iter + 1) if not converged else []:
+    it = 0
+    while it < max_iter and not converged:
+        k = min(16, max_iter - it)
         t0 = time.monotonic()
-        if family == "b":
-            base = (1.0 - d) / n
-        else:
-            leaked = float(rank[g.dangling_mask].sum())
-            base = (leaked + (1.0 - leaked) * (1.0 - d)) / n
-        idx, partial, part_metrics = g.spmv_partials(rank)
-        # second-level combine of (salted) partials: one dense bincount
-        # (np.add.at is ~20× slower per element)
-        new = np.full(n, base, dtype=np.float64)
-        new += d * np.bincount(idx, weights=partial, minlength=n)
-        norm = float(np.sqrt(((new - rank) ** 2).sum()))
-        rank = new
-        wall_ms = (time.monotonic() - t0) * 1e3
-        metrics.append(
-            {
-                "iteration": it,
-                "norm": norm,
-                "mass": float(rank.sum()),
-                "wall_ms": wall_ms,
-                "partitions": len(part_metrics),
-                "nnz": int(part_metrics["nnz"].sum()),
-            }
+        rank, norms, masses, nnz_total, kernel_ms = g.spmv_batch(
+            rank, k=k, d=d, eps=eps, check_convergence=check_convergence,
+            family=family,
         )
-        if store is not None and run_id is not None:
-            # distributed snapshot materialization — never a driver
-            # createDataFrame of all n rows; the temp vector file is
-            # reclaimed once the (synchronous) parquet write consumed it
-            vp = g.publish_vector(rank)
-            pm = part_metrics.copy()
-            pm["iteration"] = it
-            store.write_iteration(
-                run_id, it, g.ranks_df(vector_path=vp), metrics[-1],
-                spark.createDataFrame(pm),
+        job_ms = (time.monotonic() - t0) * 1e3
+        for norm_j, mass_j in zip(norms, masses):
+            it += 1
+            metrics.append(
+                {
+                    "iteration": it,
+                    "norm": float(norm_j),
+                    "mass": float(mass_j),
+                    "wall_ms": job_ms / len(norms),
+                    "kernel_ms": kernel_ms / len(norms),
+                    "nnz": nnz_total // len(norms),
+                    "batched": len(norms),
+                }
             )
-            _os.remove(vp)
-        if check_convergence and norm <= eps:
-            converged = True
-            break
+        norm = float(norms[-1])
+        converged = bool(check_convergence and norm <= eps)
 
     if family == "b":
         # ONE final sum-normalization (pagerank_OCL.h:156-161)

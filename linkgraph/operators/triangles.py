@@ -49,7 +49,12 @@ def triangles_per_vertex(edges: DataFrame) -> DataFrame:
 
 
 def _matched_triangles(edges: DataFrame) -> DataFrame:
-    e = _oriented(edges).persist()
+    return _close_wedges(_oriented(edges).persist())
+
+
+def _close_wedges(e: DataFrame) -> DataFrame:
+    """[u, v, w] per triangle from the oriented edge table ``e``, which the
+    three self-joins read (callers persist it)."""
     e1 = e.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     e2 = e.select(F.col("src").alias("v"), F.col("dst").alias("w"))
     wedges = e1.join(e2, "v")
@@ -60,8 +65,14 @@ def _matched_triangles(edges: DataFrame) -> DataFrame:
 def triangle_count(edges: DataFrame) -> int:
     """Total triangle count (each triangle counted exactly once — the
     orientation is a total order, so every triangle has exactly one
-    low->mid->high wedge closed by one low->high edge)."""
-    return _matched_triangles(edges).count()
+    low->mid->high wedge closed by one low->high edge). The oriented edge
+    table is cached for the self-joins and released once the count is
+    taken."""
+    e = _oriented(edges).persist()
+    try:
+        return _close_wedges(e).count()
+    finally:
+        e.unpersist()
 
 
 def triangle_count_doulion(

@@ -40,10 +40,10 @@ scaling efficiency once the numpy kernel drops below ~1 s/iteration; and
 BarrierTaskContext.allGather has a ~1 s sync floor, so it is used ONCE for
 endpoint rendezvous, never in the loop.
 
-Trade-off vs the driver-loop paths (kept, see operators/pagerank.py):
+Trade-off vs the join-gather path (operators/pagerank.pagerank_dataframe):
 barrier mode needs all P slots simultaneously (gang scheduling) and retries
 the whole stage on task loss, resuming from the last checkpoint; the
-driver-loop paths reschedule per iteration and tolerate executor churn.
+dataframe path reschedules per iteration and tolerates executor churn.
 
 Checkpointing: task 0 (which holds the full assembled vector after round 2)
 writes rank snapshots + per-partition lineage/metrics in the exact
@@ -440,7 +440,6 @@ def pagerank_barrier(
     checkpoint_interval: int = 1,
     mesh_transport: str | None = None,
     replicate: bool | None = None,
-    work_steal: bool | None = None,
     family: str = "a",
     weight_col: str | None = None,
 ):
@@ -489,20 +488,11 @@ def pagerank_barrier(
     path_of = dict(part_dirs)
     build_token = g.build_token  # keys the worker shard cache per build
 
-    # per-run claim directory for intra-iteration work stealing (replicate
-    # path): lives next to the shards (same shared-storage assumption);
-    # O_CREAT|O_EXCL claim files are atomic on POSIX and NFSv4
-    claims_root = os.path.join(g.shard_dir, "claims", uuid.uuid4().hex)
     # task 0 publishes the final vector here — a UNIQUE file, not the
     # mutable rank.npy iteration scratch, so earlier results' lazy plans
     # are never silently retargeted by a later solve on the same graph
     rank_out = os.path.join(g.shard_dir, f"rank_out_{uuid.uuid4().hex}.npy")
     transport = mesh_transport or os.environ.get("LINKGRAPH_MESH", "auto")
-    do_steal = (
-        work_steal
-        if work_steal is not None
-        else os.environ.get("LINKGRAPH_STEAL", "0") == "1"
-    )
     parts_sized = sorted((part, _dir_bytes(path)) for part, path in part_dirs)
     tasks = list(range(P))
 
@@ -529,10 +519,13 @@ def pagerank_barrier(
         # Static deterministic LPT assignment, identical on every task:
         # shards sorted by bytes desc, each assigned to the least-loaded
         # task (the edge-count-balanced block assignment of
-        # main_mpi.c:88-108). A measured-rate adaptive variant was tried
-        # and REVERTED: on this jittery host, rates estimated from the
-        # previous iteration are stale by the next one, and the resulting
-        # misallocation waits exceeded the imbalance they removed.
+        # main_mpi.c:88-108). Measured-cost adaptivity lost on this host
+        # twice: a measured-rate LPT variant (rates from the previous
+        # iteration are stale by the next one; the misallocation waits
+        # exceeded the imbalance they removed) and per-iteration O_EXCL
+        # work stealing (at P=32 a task whose peers were briefly
+        # descheduled claimed nearly every shard and ran the SpMV alone:
+        # 3-7 s iterations vs ~0.1 s static).
         size_of = dict(parts_sized)
         order_desc = [pp for pp, _sz in sorted(parts_sized, key=lambda x: (-x[1], x[0]))]
         load = [0.0] * P
@@ -545,72 +538,28 @@ def pagerank_barrier(
             load[q] += size_of[part]
             assign[q].append(part)
         mine_parts = assign[pid]
-
-        # Work stealing (replicate path only, OPT-IN via work_steal= /
-        # LINKGRAPH_STEAL=1 — default static): measured on this host, the
-        # claims race BACKFIRES at P=32: a task whose peers are briefly
-        # descheduled at iteration start claims nearly every shard and then
-        # runs the whole SpMV alone while 31 tasks idle in the allgather
-        # (observed 3-7 s iterations vs ~0.1 s static). With the gather
-        # allocator stall fixed (shards.py csr_partials scratch) genuine
-        # multi-second stragglers are rare, so static LPT wins; stealing
-        # remains available for environments with real vCPU freezes.
-        # When enabled: the static LPT assignment is
-        # each task's PREFERENCE, not its obligation. Per iteration each
-        # shard is claimed exactly once via an O_EXCL file create; a task
-        # whose vCPU stalls (this hypervisor freezes vCPUs for 100s of ms)
-        # loses its unclaimed shards to peers instead of serializing the
-        # whole gang behind its kernel work — only its (tiny) allgather
-        # message is still waited on. Results stay BIT-identical for every
-        # claim outcome because the combine below concatenates partials in
-        # canonical part-ascending order, not arrival/owner order. The
-        # non-replicate (large-n) path keeps the static assignment: its
-        # partials are routed by segment owner and stealing would only
-        # re-route the same bytes.
-        steal = rep and P > 1 and do_steal
-        mine_set = set(mine_parts)
-        pref_order = mine_parts + [p for p in order_desc if p not in mine_set]
         mesh = _make_mesh(ctx, pid, P, transport)
-        # Streamed partial exchange (replicate + static assignment + shm
-        # mesh): each shard's sums are published the moment the kernel
-        # finishes them, so the transfer overlaps the remaining compute and
-        # the gang's critical path waits only on the slowest task's LAST
-        # shard — not on a bulk post-kernel write+read of its whole share.
-        # Needs the static assignment (receivers must know which keys to
-        # await); stealing randomizes ownership, so it keeps the bulk path.
-        # Only pays when there is compute to overlap: per item it costs
-        # ~P fifo writes + a file create, so a task whose whole kernel
-        # share is a few ms (tiny graphs at high P) is better off with the
-        # single bulk round — gate on per-task shard bytes.
+        # Streamed partial exchange (replicate + shm mesh): each shard's
+        # sums are published the moment the kernel finishes them, so the
+        # transfer overlaps the remaining compute and the gang's critical
+        # path waits only on the slowest task's LAST shard — not on a bulk
+        # post-kernel write+read of its whole share. Receivers know which
+        # keys to await from the static assignment. Only pays when there
+        # is compute to overlap: per item it costs ~P fifo writes + a file
+        # create, so a task whose whole kernel share is a few ms (tiny
+        # graphs at high P) is better off with the single bulk round —
+        # gate on per-task shard bytes.
         stream_min = int(os.environ.get("LINKGRAPH_STREAM_MIN_BYTES", 32 << 20))
         streamed = (
-            rep and P > 1 and not steal and isinstance(mesh, _ShmMesh)
+            rep and P > 1 and isinstance(mesh, _ShmMesh)
             and sum(size_of.values()) // P >= stream_min
         )
-        # Claim directory placement matters: ~P x num_shards O_EXCL
-        # attempts per iteration all target ONE directory, and on a
-        # disk-backed filesystem the directory-inode lock serializes the
-        # gang (measured: seconds per iteration at P=32 on ext4 /tmp).
-        # Same-host (shm mesh) runs claim inside the tmpfs mesh root —
-        # memory-speed creates, swept with the mesh; multi-host runs keep
-        # the shard_dir (shared storage, atomic on NFSv4).
-        claims_dir = (
-            os.path.join(mesh.root, "claims")
-            if isinstance(mesh, _ShmMesh)
-            else claims_root
-        )
-        if steal:
-            os.makedirs(claims_dir, exist_ok=True)
 
-        def _claimed(it_no: int, part: int) -> bool:
-            p = os.path.join(claims_dir, f"it{it_no}_p{part}")
-            if os.path.exists(p):  # lock-free fast path: already claimed
-                return False
-            try:
-                os.close(os.open(p, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
-                return True
-            except FileExistsError:
-                return False
+        def base_of(old: np.ndarray) -> float:
+            if fam_b:
+                return (1.0 - d) / n
+            leaked = float(old[dang_idx].sum())
+            return (leaked + (1.0 - leaked) * (1.0 - d)) / n
 
         try:
             start = start_iter
@@ -680,16 +629,41 @@ def pagerank_barrier(
                 mesh.allgather(None)  # all segments written
             my_metrics: list[dict] = []
             iter_log: list[dict] = []
+
+            def record(it_no, norm, full, met_by_pid, t0, t_kernel, t_route, done):
+                """pid 0's lineage for one iteration: the iter_log entry
+                plus, every ``checkpoint_interval`` iterations and at the
+                stop, the manifest checkpoint with every task's
+                per-partition metrics in pid order."""
+                all_met = [mm for q in sorted(met_by_pid) for mm in met_by_pid[q]]
+                now = time.monotonic()
+                entry = {"iteration": it_no, "norm": norm, "mass": float(full.sum()),
+                         "wall_ms": (now - t0) * 1e3,
+                         "kernel_ms": (t_kernel - t0) * 1e3,
+                         "route_ms": (t_route - t_kernel) * 1e3}
+                if rep:
+                    entry["comb_ms"] = (now - t_route) * 1e3
+                entry["partitions"] = len(all_met)
+                entry["nnz"] = int(sum(mm["nnz"] for mm in all_met))
+                iter_log.append(entry)
+                if ckpt_root is not None and (done or it_no % checkpoint_interval == 0):
+                    from linkgraph.checkpoint import write_iteration_arrays
+
+                    write_iteration_arrays(
+                        ckpt_root, run_id, it_no, ids, np.asarray(full), entry,
+                        [{"iteration": it_no, **mm} for mm in all_met],
+                    )
+
             it = start
             norm = float("inf")
             converged = False
             for it in range(start + 1, max_iter + 1):
                 t0 = time.monotonic()
-                # (1) SpMV partials over this iteration's shards: claimed
-                # (steal path) or statically assigned (shared CSR kernel;
-                # worker-cached decoded arrays). Shared mode gathers from
-                # the host-shared w half of the current parity buffer —
-                # no per-task O(n) multiply, no private copy.
+                # (1) SpMV partials over this task's statically assigned
+                # shards (shared CSR kernel; worker-cached decoded arrays).
+                # Shared mode gathers from the host-shared w half of the
+                # current parity buffer — no per-task O(n) multiply, no
+                # private copy.
                 if shared:
                     cur, nxt = (it - 1) & 1, it & 1
                     w_rank = vecs[cur][1]
@@ -697,9 +671,7 @@ def pagerank_barrier(
                     w_rank = rank * inv_od
                 pmet = []
                 per_shard = []  # (part, u, s)
-                for part in (pref_order if steal else mine_parts):
-                    if steal and not _claimed(it, part):
-                        continue
+                for part in mine_parts:
                     tk = time.monotonic()
                     u, s, nnz = csr_partials(_load_shard(path_of[part], build_token), w_rank)
                     per_shard.append((part, u, s))
@@ -707,259 +679,143 @@ def pagerank_barrier(
                         mesh.stream_put(part, s)
                     pmet.append(
                         {"part_id": part, "nnz": nnz, "rows": len(u),
-                         "wall_ms": (time.monotonic() - tk) * 1e3,
-                         "stolen": part not in mine_set}
+                         "wall_ms": (time.monotonic() - tk) * 1e3}
                     )
                 t_kernel = time.monotonic()
 
-                if streamed:
-                    # close the round: metrics ride the last streamed item;
-                    # every task then combines the full vector in canonical
-                    # part-ascending order (same floats, same order as the
-                    # bulk path => identical stop decisions and vectors)
-                    mesh.stream_put("met", pmet)
-                    got = mesh.stream_collect(
-                        {q: assign[q] + ["met"] for q in range(P) if q != pid}
-                    )
-                    t_route = time.monotonic()
+                if rep:
+                    # (2, replicated) every task collects {part: sums} from
+                    # every peer — streamed items closed by a metrics item,
+                    # or one allgather — and combines the full vector in
+                    # canonical part-ascending order: same floats, same
+                    # order regardless of who computed what => identical
+                    # stop decisions and checkpoint-equal vectors, invariant
+                    # to P and to the exchange. Only the per-iteration sums
+                    # go on the wire — the loop-invariant uniq-dst arrays
+                    # are resolved locally from the shard sidecars
+                    # (_load_uniq, page-cache-shared), halving the mesh
+                    # volume of the route step.
                     sums_by_part = {p: s for p, _u, s in per_shard}
-                    for (_q, key), obj in got.items():
-                        if key != "met":
-                            sums_by_part[key] = obj
+                    met_by_pid = {pid: pmet}
+                    if streamed:
+                        mesh.stream_put("met", pmet)
+                        got = mesh.stream_collect(
+                            {q: assign[q] + ["met"] for q in range(P) if q != pid}
+                        )
+                        for (q, key), obj in got.items():
+                            if key == "met":
+                                met_by_pid[q] = obj
+                            else:
+                                sums_by_part[key] = obj
+                    else:
+                        blocks = mesh.allgather((list(sums_by_part.items()), pmet))
+                        for q, (q_sums, q_met) in blocks.items():
+                            sums_by_part.update(q_sums)
+                            met_by_pid[q] = q_met
+                    t_route = time.monotonic()
                     parts_sorted = sorted(sums_by_part)
-                    all_u = (
-                        np.concatenate(
+                    new = np.full(n, base_of(rank), dtype=np.float64)
+                    if parts_sorted:
+                        all_u = np.concatenate(
                             [_load_uniq(path_of[p], build_token) for p in parts_sorted]
                         )
-                        if parts_sorted else np.empty(0, np.int64)
-                    )
-                    all_s = (
-                        np.concatenate([sums_by_part[p] for p in parts_sorted])
-                        if parts_sorted else np.empty(0, np.float64)
-                    )
-                    all_met = [
-                        mm
-                        for q in range(P)
-                        for mm in (pmet if q == pid else got[(q, "met")])
-                    ]
-                    if fam_b:
-                        base = (1.0 - d) / n
-                    else:
-                        leaked = float(rank[dang_idx].sum())
-                        base = (leaked + (1.0 - leaked) * (1.0 - d)) / n
-                    new = np.full(n, base, dtype=np.float64)
-                    if len(all_u):
-                        new += d * np.bincount(all_u, weights=all_s, minlength=n)
+                        all_s = np.concatenate([sums_by_part[p] for p in parts_sorted])
+                        if len(all_u):
+                            new += d * np.bincount(all_u, weights=all_s, minlength=n)
                     nsq = float(((new - rank) ** 2).sum())
-                    rank = new
-                    norm = float(np.sqrt(nsq))
-                    converged = bool(check_convergence and norm <= eps)
-                    done = converged or it >= max_iter
-                    my_metrics.extend(pmet)
-                    if pid == 0:
-                        iter_log.append(
-                            {"iteration": it, "norm": norm, "mass": float(rank.sum()),
-                             "wall_ms": (time.monotonic() - t0) * 1e3,
-                             "kernel_ms": (t_kernel - t0) * 1e3,
-                             "route_ms": (t_route - t_kernel) * 1e3,
-                             "comb_ms": (time.monotonic() - t_route) * 1e3,
-                             "partitions": len(all_met),
-                             "nnz": int(sum(mm["nnz"] for mm in all_met))}
-                        )
-                        if ckpt_root is not None and (
-                            done or it % checkpoint_interval == 0
-                        ):
-                            from linkgraph.checkpoint import write_iteration_arrays
-
-                            write_iteration_arrays(
-                                ckpt_root, run_id, it, ids, rank, iter_log[-1],
-                                [{"iteration": it, **mm} for mm in all_met],
-                            )
-                    if done:
-                        break
-                    continue
-
-                if rep:
-                    # one allgather of partials; every task combines the
-                    # full vector in canonical part-ascending order (same
-                    # floats, same order regardless of who computed what =>
-                    # identical stop decisions, checkpoint-equal vectors,
-                    # and results invariant to claim outcomes AND to P).
-                    # Only the per-iteration sums go on the wire — the
-                    # loop-invariant uniq-dst arrays are resolved locally
-                    # from the shard sidecars (_load_uniq, page-cache-
-                    # shared), halving the mesh volume of the route step.
-                    blocks = mesh.allgather(
-                        ([(p, s) for p, _u, s in per_shard], pmet)
-                    )
-                    t_route = time.monotonic()
-                    order = sorted(blocks)
-                    flat = sorted(
-                        (t for q in order for t in blocks[q][0]), key=lambda x: x[0]
-                    )
-                    all_u = (
-                        np.concatenate(
-                            [_load_uniq(path_of[p], build_token) for p, _s in flat]
-                        )
-                        if flat else np.empty(0, np.int64)
-                    )
-                    all_s = (
-                        np.concatenate([s for _p, s in flat])
-                        if flat else np.empty(0, np.float64)
-                    )
-                    all_met = [mm for q in order for mm in blocks[q][1]]
-                    if fam_b:
-                        base = (1.0 - d) / n
-                    else:
-                        leaked = float(rank[dang_idx].sum())
-                        base = (leaked + (1.0 - leaked) * (1.0 - d)) / n
-                    new = np.full(n, base, dtype=np.float64)
-                    if len(all_u):
-                        new += d * np.bincount(all_u, weights=all_s, minlength=n)
-                    nsq = float(((new - rank) ** 2).sum())
-                    rank = new
-                    norm = float(np.sqrt(nsq))
-                    converged = bool(check_convergence and norm <= eps)
-                    done = converged or it >= max_iter
-                    my_metrics.extend(pmet)
-                    if pid == 0:
-                        iter_log.append(
-                            {"iteration": it, "norm": norm, "mass": float(rank.sum()),
-                             "wall_ms": (time.monotonic() - t0) * 1e3,
-                             "kernel_ms": (t_kernel - t0) * 1e3,
-                             "route_ms": (t_route - t_kernel) * 1e3,
-                             "comb_ms": (time.monotonic() - t_route) * 1e3,
-                             "partitions": len(all_met),
-                             "nnz": int(sum(mm["nnz"] for mm in all_met))}
-                        )
-                        if ckpt_root is not None and (
-                            done or it % checkpoint_interval == 0
-                        ):
-                            from linkgraph.checkpoint import write_iteration_arrays
-
-                            write_iteration_arrays(
-                                ckpt_root, run_id, it, ids, rank, iter_log[-1],
-                                [{"iteration": it, **mm} for mm in all_met],
-                            )
-                    if done:
-                        break
-                    continue
-
-                # (2) route partial slices to their segment owners (mesh
-                # round 1 — the scatter half of Allgatherv); each shard's
-                # uniq-dst array is sorted, so the slice owned by task q is
-                # one searchsorted range
-                shard_routes = [np.searchsorted(u, seg_bounds) for (_p, u, _s) in per_shard]
-                outgoing = {}
-                for q in range(P):
-                    if q == pid:
-                        continue
-                    pieces = [
-                        (u[c[q]:c[q + 1]], s[c[q]:c[q + 1]])
-                        for (_p, u, s), c in zip(per_shard, shard_routes)
-                        if c[q + 1] > c[q]
-                    ]
-                    outgoing[q] = pieces
-                mine = [
-                    (u[c[pid]:c[pid + 1]], s[c[pid]:c[pid + 1]])
-                    for (_p, u, s), c in zip(per_shard, shard_routes)
-                    if c[pid + 1] > c[pid]
-                ]
-                received = mesh.exchange(outgoing)
-                for q in sorted(received):  # deterministic combine order
-                    mine.extend(received[q])
-                t_route = time.monotonic()
-
-                # (3) owner update of [lo, hi): base + d·contrib, δ² local.
-                # leaked is computed from the full OLD rank — gathered from
-                # the shared buffer (shared path) or the private copy: the
-                # SAME dang_idx order over the same floats either way, so
-                # shm-shared and tcp-private vectors stay bit-identical and
-                # every task reaches the same stop decision.
-                old_full = vecs[cur][0] if shared else rank
-                if fam_b:
-                    base = (1.0 - d) / n
+                    rank = full = new
                 else:
-                    leaked = float(old_full[dang_idx].sum())
-                    base = (leaked + (1.0 - leaked) * (1.0 - d)) / n
-                seg = np.full(hi - lo, base, dtype=np.float64)
-                if mine:
-                    all_u = np.concatenate([u for u, _ in mine])
-                    all_s = np.concatenate([s for _, s in mine])
-                    seg += d * np.bincount(all_u - lo, weights=all_s, minlength=hi - lo)
-                dsq = float(((seg - old_full[lo:hi]) ** 2).sum())
+                    # (2) route partial slices to their segment owners (mesh
+                    # round 1 — the scatter half of Allgatherv); each
+                    # shard's uniq-dst array is sorted, so the slice owned
+                    # by task q is one searchsorted range
+                    shard_routes = [np.searchsorted(u, seg_bounds) for (_p, u, _s) in per_shard]
+                    outgoing = {}
+                    for q in range(P):
+                        if q == pid:
+                            continue
+                        pieces = [
+                            (u[c[q]:c[q + 1]], s[c[q]:c[q + 1]])
+                            for (_p, u, s), c in zip(per_shard, shard_routes)
+                            if c[q + 1] > c[q]
+                        ]
+                        outgoing[q] = pieces
+                    mine = [
+                        (u[c[pid]:c[pid + 1]], s[c[pid]:c[pid + 1]])
+                        for (_p, u, s), c in zip(per_shard, shard_routes)
+                        if c[pid + 1] > c[pid]
+                    ]
+                    received = mesh.exchange(outgoing)
+                    for q in sorted(received):  # deterministic combine order
+                        mine.extend(received[q])
+                    t_route = time.monotonic()
 
-                if shared:
-                    # (4, shared) write own segment into the next-parity
-                    # host-shared buffer — that IS the allgather; only
-                    # scalars + lineage go through the mesh. The scalar
-                    # exchange doubles as the barrier that keeps parity
-                    # reuse safe: a task reaches iteration k+2 (overwriting
-                    # parity k) only after every peer sent its k+1 scalars,
-                    # i.e. after every read of parity k has completed.
-                    vecs[nxt][0, lo:hi] = seg
-                    vecs[nxt][1, lo:hi] = seg * inv_seg
-                    got = mesh.exchange(
-                        {q: (dsq, pmet) for q in range(P) if q != pid}
-                    )
+                    # (3) owner update of [lo, hi): base + d·contrib, δ²
+                    # local. leaked is computed from the full OLD rank —
+                    # gathered from the shared buffer (shared path) or the
+                    # private copy: the SAME dang_idx order over the same
+                    # floats either way, so shm-shared and tcp-private
+                    # vectors stay bit-identical and every task reaches the
+                    # same stop decision.
+                    old_full = vecs[cur][0] if shared else rank
+                    seg = np.full(hi - lo, base_of(old_full), dtype=np.float64)
+                    if mine:
+                        all_u = np.concatenate([u for u, _ in mine])
+                        all_s = np.concatenate([s for _, s in mine])
+                        seg += d * np.bincount(all_u - lo, weights=all_s, minlength=hi - lo)
+                    dsq = float(((seg - old_full[lo:hi]) ** 2).sum())
+
+                    if shared:
+                        # (4, shared) write own segment into the next-parity
+                        # host-shared buffer — that IS the allgather; only
+                        # scalars + lineage go through the mesh. The scalar
+                        # exchange doubles as the barrier that keeps parity
+                        # reuse safe: a task reaches iteration k+2
+                        # (overwriting parity k) only after every peer sent
+                        # its k+1 scalars, i.e. after every read of parity
+                        # k has completed.
+                        vecs[nxt][0, lo:hi] = seg
+                        vecs[nxt][1, lo:hi] = seg * inv_seg
+                        got = mesh.exchange(
+                            {q: (dsq, pmet) for q in range(P) if q != pid}
+                        )
+                        full = vecs[nxt][0]
+                    else:
+                        # (4) allgather segments (mesh round 2) — every task
+                        # re-materializes the full vector, as the
+                        # reference's Allgatherv does
+                        # (pagerank_custom_mpi.h:62-63); per-shard lineage
+                        # metrics piggyback so task 0 logs ALL partitions
+                        segs = mesh.exchange(
+                            {q: (seg, dsq, pmet) for q in range(P) if q != pid}
+                        )
+                        rank = full = np.empty(n, dtype=np.float64)
+                        rank[lo:hi] = seg
+                        got = {}
+                        for q, (qseg, qdsq, qmet) in segs.items():
+                            rank[int(seg_bounds[q]):int(seg_bounds[q + 1])] = qseg
+                            got[q] = (qdsq, qmet)
                     dsq_by_pid = {pid: dsq}
-                    all_met_by_pid = {pid: pmet}
+                    met_by_pid = {pid: pmet}
                     for q, (qdsq, qmet) in got.items():
                         dsq_by_pid[q] = qdsq
-                        all_met_by_pid[q] = qmet
-                else:
-                    # (4) allgather segments (mesh round 2) — every task
-                    # re-materializes the full vector, as the reference's
-                    # Allgatherv does (pagerank_custom_mpi.h:62-63); per-shard
-                    # lineage metrics piggyback so task 0 logs ALL partitions
-                    segs = mesh.exchange(
-                        {q: (seg, dsq, pmet) for q in range(P) if q != pid}
-                    )
-                    new = np.empty(n, dtype=np.float64)
-                    new[lo:hi] = seg
-                    all_met_by_pid = {pid: pmet}
-                    dsq_by_pid = {pid: dsq}
-                    for q, (qseg, qdsq, qmet) in segs.items():
-                        new[int(seg_bounds[q]):int(seg_bounds[q + 1])] = qseg
-                        dsq_by_pid[q] = qdsq
-                        all_met_by_pid[q] = qmet
-                # accumulate δ² in FIXED global pid order (own dsq included
-                # at its sorted position, not first): every task sums the
-                # same floats in the same order, so a last-ulp difference
-                # cannot make tasks disagree on `converged` — a divergent
-                # stop decision would deadlock the mesh. Same invariant as
-                # the replicate path.
-                nsq = 0.0
-                all_met = []
-                for q in sorted(dsq_by_pid):
-                    nsq += dsq_by_pid[q]
-                    all_met.extend(all_met_by_pid[q])
-                if not shared:
-                    rank = new
+                        met_by_pid[q] = qmet
+                    # accumulate δ² in FIXED global pid order (own dsq
+                    # included at its sorted position, not first): every
+                    # task sums the same floats in the same order, so a
+                    # last-ulp difference cannot make tasks disagree on
+                    # `converged` — a divergent stop decision would
+                    # deadlock the mesh.
+                    nsq = 0.0
+                    for q in sorted(dsq_by_pid):
+                        nsq += dsq_by_pid[q]
+
                 norm = float(np.sqrt(nsq))
                 converged = bool(check_convergence and norm <= eps)
                 done = converged or it >= max_iter
                 my_metrics.extend(pmet)
                 if pid == 0:
-                    full = vecs[nxt][0] if shared else rank
-                    iter_log.append(
-                        {"iteration": it, "norm": norm, "mass": float(full.sum()),
-                         "wall_ms": (time.monotonic() - t0) * 1e3,
-                         "kernel_ms": (t_kernel - t0) * 1e3,
-                         "route_ms": (t_route - t_kernel) * 1e3,
-                         "partitions": len(all_met),
-                         "nnz": int(sum(mm["nnz"] for mm in all_met))}
-                    )
-                    if ckpt_root is not None and (
-                        done or it % checkpoint_interval == 0
-                    ):
-                        from linkgraph.checkpoint import write_iteration_arrays
-
-                        write_iteration_arrays(
-                            ckpt_root, run_id, it, ids, np.asarray(full),
-                            iter_log[-1],
-                            [{"iteration": it, **mm} for mm in all_met],
-                        )
+                    record(it, norm, full, met_by_pid, t0, t_kernel, t_route, done)
                 if done:
                     if shared and pid == 0:
                         # materialize before mesh.close() sweeps the tmpfs
@@ -985,10 +841,6 @@ def pagerank_barrier(
             yield {"kind": "task", "pid": pid, "metrics": my_metrics}
         finally:
             mesh.close()
-            if steal and pid == 0:
-                # safe: every task has finished its final claims before
-                # pid 0's last allgather could complete
-                shutil.rmtree(claims_root, ignore_errors=True)
 
     out = sc.parallelize(tasks, P).barrier().mapPartitions(run).collect()
     bc.destroy()

@@ -22,12 +22,13 @@ CSR block resident per MPI rank for the     | shard parquet read ONCE per
 whole run (scattered at :122-126, reused    | Python worker, decoded numpy
 every iteration)                            | arrays cached in-process across
                                             | iterations (worker reuse)
-MPI_Allgatherv of the dense rank vector     | per-iteration rank ndarray shipped
-every iteration (pagerank_custom_mpi.h:62)  | to executors (npy file / broadcast)
+MPI_Allgatherv of the dense rank vector     | partial sums exchanged task-to-
+every iteration (pagerank_custom_mpi.h:62)  | task inside one barrier gang
+                                            | (plans/barrier.py)
 OpenCL gather-scatter kernels               | numpy gather + bincount scatter
-(kernels/pr_custom_matrix_in.cl:112-268)    | inside mapInArrow
-per-iteration scalar readback               | one toPandas() of per-shard
-(pagerank_custom.h:261-268)                 | partial sums + metrics
+(kernels/pr_custom_matrix_in.cl:112-268)    | (csr_partials)
+per-iteration scalar readback               | per-iteration norms returned once
+(pagerank_custom.h:261-268)                 | per k-step job / gang job
 
 Why shard FILES instead of a cached DataFrame: feeding a cached relational
 DataFrame back through the JVM→Arrow→Python pipe re-serializes every edge
@@ -167,13 +168,6 @@ def dense_index(df: DataFrame, col: str = "node") -> DataFrame:
     return _two_level_offsets(df.select(col), col).select(col, F.col("_pos").alias("idx"))
 
 
-# One row PER SHARD, partials packed as binary blobs: shipping n-sized
-# index/contrib arrays as Arrow buffers instead of n rows cuts the Python-
-# worker -> JVM return path from ~0.5M rows/s row-materialization to a
-# buffer copy (measured 150 ms -> ~10 ms at n=68k) — the driver unpacks
-# with np.frombuffer (zero-copy).
-_STEP_SCHEMA = "part_id int, idx binary, contrib binary, nnz long, rows long, wall_ms double"
-
 # Worker-process shard cache: {(shard_path, build_token): decoded arrays}.
 # Lives across iterations because Spark reuses Python workers; the build
 # token (uuid written to meta.json) makes keys unique even when a caller
@@ -187,9 +181,8 @@ _SHARD_CACHE: dict[tuple, tuple] = {}
 # Byte-budget LRU (was a 16-entry cap): with large shards the entry cap
 # forced ~GBs of np.load re-reads per iteration per worker — and unfairly
 # vs the bench's sync-free control, which holds every shard resident. A
-# worker only ever caches shards it actually claims (~2x its fair share
-# under work stealing), so the worst-case fleet footprint is
-# ~2 x total_decoded_bytes regardless of P. Override via
+# worker only caches the shards statically assigned to it, so the fleet
+# footprint is ~total_decoded_bytes regardless of P. Override via
 # LINKGRAPH_SHARD_CACHE_BYTES (read at worker import).
 _SHARD_CACHE_BUDGET = int(
     os.environ.get("LINKGRAPH_SHARD_CACHE_BYTES", 4 << 30)
@@ -386,11 +379,6 @@ def csr_partials(shard, w_rank: np.ndarray):
     the previous block). The scratch buffers are worker-persistent: fresh
     per-call allocations mean mmap/munmap churn whose page zeroing + THP
     compaction measurably FREEZES the process for seconds at random."""
-    if len(shard) == 3:  # back-compat: plan-less tuple from older callers
-        src_s, uniq, starts = shard
-        shard = (src_s, uniq, starts, _block_plan(starts, len(src_s)), None)
-    elif len(shard) == 4:  # back-compat: weight-less tuple
-        shard = (*shard, None)
     src_s, uniq, starts, plan, wt = shard
     nnz = len(src_s)
     if nnz == 0:
@@ -418,39 +406,6 @@ def csr_partials(shard, w_rank: np.ndarray):
     # (per_shard lists in the barrier loop) — hand back a copy, not the
     # reused scratch
     return uniq, out.copy(), nnz
-
-
-def _make_step(rank_path: str, inv_od_path: str, token: str = ""):
-    """Arrow kernel: rows are (part, path) shard descriptors. The rank
-    vector is read from ``rank_path`` (rewritten atomically by the driver
-    each iteration — the MPI_Allgatherv stand-in; one plan object serves
-    every iteration). Emits (kind=0) partial sums + one (kind=1)
-    lineage/metrics row per shard."""
-
-    def step(batches):
-        rank = np.load(rank_path)
-        inv_od = _load_inv_od(inv_od_path, token)
-        w_rank = rank * inv_od  # n ops once per task, not per edge
-        for b in batches:
-            parts = b.column("part").to_pylist()
-            paths = b.column("path").to_pylist()
-            for part, path in zip(parts, paths):
-                t0 = time.monotonic()
-                u, s, nnz = csr_partials(_load_shard(path, token), w_rank)
-                wall_ms = (time.monotonic() - t0) * 1e3
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([part], pa.int32()),
-                        pa.array([u.astype(np.int64, copy=False).tobytes()], pa.binary()),
-                        pa.array([s.tobytes()], pa.binary()),
-                        pa.array([nnz], pa.int64()),
-                        pa.array([len(u)], pa.int64()),
-                        pa.array([wall_ms], pa.float64()),
-                    ],
-                    names=["part_id", "idx", "contrib", "nnz", "rows", "wall_ms"],
-                )
-
-    return step
 
 
 # distributed rank materialization: executors read their [lo, hi) slice of
@@ -496,12 +451,12 @@ def _make_batch_step(rank_path: str, ctl_path: str, inv_od_path: str, token: str
     to ctl.k Family-A iterations locally with the exact per-iteration L2
     stop, and returns the final vector + per-iteration norms as blobs.
 
-    Why: at small m the distributed per-iteration loop is bound by the
-    ~0.2-0.6 s Spark job floor (measured), not the kernel; fusing k
-    iterations amortizes the floor k-fold. The combine (part-ascending
-    concat + np.bincount) replays the driver loop's float order exactly, so
-    results are bit-identical to the per-iteration path and iteration
-    counts match the numpy oracle."""
+    Why: at small m a loop of one Spark job per iteration is bound by the
+    ~0.2-0.6 s job floor (measured), not the kernel; fusing k iterations
+    amortizes the floor k-fold. The combine (part-ascending concat +
+    np.bincount) is the barrier gang's replicated combine, float for
+    float, so results are bit-identical to the gang and iteration counts
+    match the numpy oracle."""
 
     def step(batches):
         rows = []
@@ -577,7 +532,6 @@ class ShardedGraph:
     build_token: str = ""  # unique per build; keys the worker-side caches
     weighted: bool = False  # per-edge w stream present; inv_od is a 0/1 mask
     _owns_dir: bool = True
-    _step_df: DataFrame | None = None
     _batch_df: DataFrame | None = None
 
     @staticmethod
@@ -747,11 +701,9 @@ class ShardedGraph:
             for d in os.listdir(shard_dir)
             if d.startswith("part=")
         )
-        # local relation (not an RDD-backed DF): feeding a handful of path
-        # rows per iteration must not spin up the Python-RDD machinery.
-        # Step-task count = min(shards, cores): per-task dispatch is ~8 ms,
-        # so one task per shard (55 tasks) costs ~2x more wall than cores
-        # tasks at small scale; each task iterates its group of shard rows.
+        # local relation (not an RDD-backed DF): the batch regime feeds
+        # these path rows to its single task and the barrier gang collects
+        # them, neither through the Python-RDD machinery.
         shard_df = (
             spark.createDataFrame(part_dirs, "part int, path string")
             .repartitionByRange(
@@ -923,32 +875,6 @@ class ShardedGraph:
             ),
             _RANKS_SCHEMA,
         )
-
-    def spmv_partials(self, rank: np.ndarray):
-        """One distributed SpMV pass: returns (idx, partial_contrib,
-        per-partition metrics pandas DF). The only Spark action per
-        iteration; ships O(n) down (rank file) and O(n) up (partials).
-        The mapInArrow plan is created once and re-executed per call."""
-        self._publish_rank(rank)
-        if self._step_df is None:
-            self._step_df = self.shard_df.mapInArrow(
-                _make_step(
-                    self.rank_path,
-                    os.path.join(self.shard_dir, "inv_od.npy"),
-                    self.build_token,
-                ),
-                _STEP_SCHEMA,
-            )
-        pdf = self._step_df.toPandas()
-        if len(pdf):
-            idx = np.concatenate([np.frombuffer(b, dtype=np.int64) for b in pdf["idx"]])
-            contrib = np.concatenate(
-                [np.frombuffer(b, dtype=np.float64) for b in pdf["contrib"]]
-            )
-        else:  # pragma: no cover — empty graphs are rejected at build
-            idx = np.empty(0, np.int64)
-            contrib = np.empty(0, np.float64)
-        return idx, contrib, pdf[["part_id", "nnz", "rows", "wall_ms"]]
 
     @property
     def ctl_path(self) -> str:

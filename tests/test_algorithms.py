@@ -91,6 +91,17 @@ def test_triangles_oracle_parity(spark):
     assert triangle_count(fx.edges_df(spark, src, dst)) == oracle.triangle_count(src, dst, n)
 
 
+def test_triangle_count_releases_its_cache(spark):
+    """triangle_count caches the oriented edge table for its self-joins;
+    the number of persisted tables must be unchanged across a call."""
+    src, dst, n = fx.karate_club()
+    df = fx.edges_df(spark, src, dst)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    assert triangle_count(df) == 45
+    assert persisted().size() == before
+
+
 def test_triangles_none(spark):
     src, dst, n = fx.toy_chain_dangling()
     assert triangle_count(fx.edges_df(spark, src, dst)) == 0

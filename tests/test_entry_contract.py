@@ -51,6 +51,26 @@ def test_query_matches_oracle(spark, ddb, name):
     assert spark_rows == duck_rows, f"{name}: value mismatch\nspark={spark_rows[:3]}\nduck={duck_rows[:3]}"
 
 
+@pytest.mark.parametrize("name", ["conductance", "modularity"])
+def test_oracle_integer_column_types_match_spark(spark, ddb, name):
+    """Value equality alone cannot see a type drift: DuckDB's sum() over
+    BIGINT is HUGEINT, which reaches Arrow as decimal128(38, 0) while Spark
+    emits int64. Every integer column of the oracle must carry the Arrow
+    type of the Spark column."""
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import IntegralType
+
+    df = entry_mod.queries()[name](spark, SF)
+    duck = ddb.execute(entry_mod.oracle_sql()[name]).fetch_arrow_table().schema
+    ints = [f for f in df.schema.fields if isinstance(f.dataType, IntegralType)]
+    assert ints, f"{name}: no integer columns to check"
+    for f in ints:
+        assert duck.field(f.name).type == to_arrow_type(f.dataType), (
+            f"{name}.{f.name}: oracle {duck.field(f.name).type} vs "
+            f"spark {f.dataType.simpleString()}"
+        )
+
+
 def test_rows_only_queries_run(spark):
     """Queries without a SQL oracle must still run and return rows."""
     qs = entry_mod.queries()

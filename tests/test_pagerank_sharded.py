@@ -5,9 +5,9 @@ OCL vs MPI implementations and comparing at 1e-6
 (/root/reference/main.c:109-112, main_mpi.c:142-150).
 
 The exhaustive fixture sweep runs on ``pagerank_barrier`` (whole loop in one
-barrier stage — cheap per fixture); the driver-loop ``pagerank_sharded``
-(per-iteration mapInArrow) is pinned by the equivalence, salting, metrics
-and resume tests below.
+barrier stage — cheap per fixture); ``pagerank_sharded`` (single-task batch
+regime, or delegation to the same gang) is pinned by the equivalence,
+salting, metrics and resume tests below.
 """
 
 import numpy as np
@@ -137,14 +137,28 @@ def test_resume_sharded(spark, tmp_path):
     df = fx.edges_df(spark, src, dst)
     store = ParquetManifestStore(str(tmp_path / "ckpt"))
     full = pagerank_barrier(df, eps=1e-9)
-    pagerank_sharded(
-        df, eps=1e-9, max_iter=6, store=store, run_id="r", num_shards=2, fused=False
+    half = pagerank_sharded(
+        df, eps=1e-9, max_iter=6, store=store, run_id="r", num_shards=2
     )
+    assert store.latest_iteration("r") == half.iterations == 6
     resumed = pagerank_sharded(
-        df, eps=1e-9, max_iter=300, store=store, run_id="r", num_shards=2, fused=False
+        df, eps=1e-9, max_iter=300, store=store, run_id="r", num_shards=2
     )
     assert np.allclose(_vec(full), _vec(resumed), atol=1e-9, rtol=0)
     assert resumed.iterations == full.iterations
+
+
+def test_batch_with_checkpoint_store_raises(spark, tmp_path):
+    """The single-task batch regime writes no checkpoints: forcing it with
+    a store + run_id must fail loudly instead of dropping the snapshots."""
+    from linkgraph.checkpoint import ParquetManifestStore
+
+    src, dst, n = fx.karate_club()
+    df = fx.edges_df(spark, src, dst)
+    store = ParquetManifestStore(str(tmp_path / "ckpt"))
+    with pytest.raises(ValueError, match="batch=True writes no checkpoints"):
+        pagerank_sharded(df, eps=1e-9, store=store, run_id="x", batch=True)
+    assert store.latest_iteration("x") is None
 
 
 def test_resume_barrier(spark, tmp_path):
@@ -191,32 +205,6 @@ def test_two_level_prefix_sum_exact_and_distributed(spark):
     assert "windowspecdefinition(0," not in plan.lower().replace(" ", "")
 
 
-def test_batch_and_periter_regimes_identical(spark):
-    """The fused k-iteration batch job must be BIT-compatible with the
-    distributed per-iteration path: same combine order (part-ascending
-    concat + bincount) => same floats, same iteration count (both equal the
-    numpy oracle's count via the identical in-loop L2 stop)."""
-    import numpy as np
-
-    src, dst, n = fx.karate_club()
-    df = fx.edges_df(spark, src, dst)
-    from linkgraph.plans.shards import ShardedGraph
-
-    g = ShardedGraph.build(df, num_shards=3)
-    rb = pagerank_sharded(df, eps=1e-9, max_iter=300, sharded_graph=g, batch=True)
-    rp = pagerank_sharded(
-        df, eps=1e-9, max_iter=300, sharded_graph=g, batch=False, fused=False
-    )
-    vb = {r["node"]: r["rank"] for r in rb.ranks.collect()}
-    vp = {r["node"]: r["rank"] for r in rp.ranks.collect()}
-    assert rb.iterations == rp.iterations
-    assert vb.keys() == vp.keys()
-    assert all(vb[k] == vp[k] for k in vb), "regimes must produce identical floats"
-    assert any(m.get("batched") for m in rb.iter_metrics)
-    assert not any(m.get("batched") for m in rp.iter_metrics)
-    g.unpersist()
-
-
 def test_fused_regime_matches_batch_and_checkpoints(spark, tmp_path):
     """VERDICT r2 #3 — distributed k-step fusion: outside the single-task
     batch regime (large m, or any checkpointed run), ``pagerank_sharded``
@@ -238,9 +226,11 @@ def test_fused_regime_matches_batch_and_checkpoints(spark, tmp_path):
     vf = {r["node"]: r["rank"] for r in rf.ranks.collect()}
     assert vb.keys() == vf.keys()
     assert all(vb[k] == vf[k] for k in vb), "fused gang must reproduce batch floats"
-    # route_ms in the lineage proves the barrier exchange ran (fusion, not
-    # the legacy driver loop)
+    # route_ms in the lineage proves the barrier exchange ran; only the
+    # single-task batch regime tags its iterations as batched
     assert any("route_ms" in m for m in rf.iter_metrics)
+    assert all(m.get("batched") for m in rb.iter_metrics)
+    assert not any(m.get("batched") for m in rf.iter_metrics)
 
     # a store forces the non-batch regime; the fused job checkpoints every
     # iteration and a later call resumes from the manifest
@@ -327,9 +317,8 @@ def _weighted_df(spark, src, dst):
 
 
 def test_weighted_all_strategies_equal_dataframe(spark):
-    """Weighted PageRank through the CSR shard kernel (batch regime), the
-    barrier gang, and the legacy per-iteration loop must match the
-    dataframe path at 1e-6 with identical iteration counts — the weighted
+    """Weighted PageRank through the CSR shard kernel (batch regime) and
+    the barrier gang must match the dataframe path at 1e-6 with identical iteration counts — the weighted
     extension of the cross-strategy equality pin (VERDICT r3 #4)."""
     src, dst, n = fx.karate_club()
     df = _weighted_df(spark, src, dst)
@@ -338,13 +327,9 @@ def test_weighted_all_strategies_equal_dataframe(spark):
     assert g.weighted
     a = pagerank_sharded(df, eps=1e-8, sharded_graph=g, weight_col="wt")
     c = pagerank_barrier(df, eps=1e-8, sharded_graph=g, num_tasks=3)
-    legacy = pagerank_sharded(
-        df, eps=1e-8, sharded_graph=g, weight_col="wt", batch=False, fused=False
-    )
     assert np.allclose(_vec(a), _vec(b), atol=1e-6, rtol=0)
     assert np.allclose(_vec(c), _vec(b), atol=1e-6, rtol=0)
-    assert np.allclose(_vec(legacy), _vec(b), atol=1e-6, rtol=0)
-    assert a.iterations == b.iterations == c.iterations == legacy.iterations
+    assert a.iterations == b.iterations == c.iterations
     g.unpersist()
 
 
@@ -361,17 +346,15 @@ def test_weighted_uniform_equals_unweighted_sharded(spark):
 
 def test_family_b_all_strategies_equal_dataframe(spark):
     """Family B (leaking base + one final normalization) through shard
-    batch kernel / barrier / legacy loop == dataframe path, on the
+    batch kernel / barrier gang == dataframe path, on the
     dangling-heavy fixture where A and B genuinely differ."""
     src, dst, n = fx.toy_chain_dangling()
     df = fx.edges_df(spark, src, dst)
     b = pagerank_dataframe(df, eps=1e-10, family="b")
     a = pagerank_sharded(df, eps=1e-10, family="b")
     c = pagerank_barrier(df, eps=1e-10, family="b", num_tasks=3)
-    legacy = pagerank_sharded(df, eps=1e-10, family="b", batch=False, fused=False)
     assert np.allclose(_vec(a), _vec(b), atol=1e-6, rtol=0)
     assert np.allclose(_vec(c), _vec(b), atol=1e-6, rtol=0)
-    assert np.allclose(_vec(legacy), _vec(b), atol=1e-6, rtol=0)
     assert a.iterations == b.iterations == c.iterations
     # the flag genuinely changes the loop: A conserves unit mass every
     # iteration, B's mass leaks through the dangling tail (the converged
