@@ -254,13 +254,25 @@ def lsh_topk_md5(
       left-associated SQL sum chain term for term.
 
     The xxhash64 ``lsh_topk`` stays the production path (long signatures,
-    no 2k-term expressions). Returns [query_id, neighbor_id, cosine,
-    rank]."""
-    qi = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * F.lit(float(quant)) + F.lit(0.5)).cast(
-            "long"
+    no 2k-term expressions). A vector whose length is not ``dims`` raises
+    (zip_with would null-pad it into the all-"0" bucket). Returns
+    [query_id, neighbor_id, cosine, rank]."""
+    qi = F.when(
+        F.size(vec_col) == dims,
+        F.transform(
+            F.col(vec_col),
+            lambda x: F.floor(x.cast("double") * F.lit(float(quant)) + F.lit(0.5)).cast(
+                "long"
+            ),
         ),
+    ).otherwise(
+        F.raise_error(
+            F.format_string(
+                f"lsh_topk_md5: %s has %d dims, expected {dims}",
+                F.col(id_col).cast("string"),
+                F.size(vec_col),
+            )
+        )
     )
 
     def signatures(df, out_id):

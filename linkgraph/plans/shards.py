@@ -7,11 +7,11 @@ reference                                   | here
 --------------------------------------------|----------------------------------
 contiguous node blocks sized by edge count  | dst-range buckets with exact
 (main_mpi.c:88-108)                         | edge-balanced boundaries from the
-                                            | in-degree CDF (a prefix sum over
-                                            | the n-row degree table — the
-                                            | rowptr build of
-                                            | pagerank_custom.h:128-134, done
-                                            | distributed; SURVEY §4 X4)
+                                            | in-degree CDF (a numpy prefix sum
+                                            | over the collected n-row degree
+                                            | table — the rowptr build of
+                                            | pagerank_custom.h:128-134;
+                                            | SURVEY §4 X4)
 JDS degree-bucketing of skewed rows         | explicit hub split: vertices with
 (readers/mtx_hybrid.h:39-221)               | in_degree > threshold get their
                                             | in-edge lists SALTED across
@@ -44,9 +44,11 @@ gracefully to a re-read when the scheduler moves a shard between workers.
 
 Scale notes (100 TB / 1000-executor design):
 
-* Build cost: two O(m) degree aggregations + one O(m) join-pipeline write;
-  all bucket/salt planning happens on the O(n) degree table. Degree/index
-  join sides are broadcast when small, shuffle+AQE-skew otherwise.
+* Build cost: one O(m) degree aggregation, collected once to the driver
+  (the fast path holds n-sized driver arrays anyway), + one O(m)
+  join-pipeline write. Index, bucket and salt planning is numpy over the
+  O(n) degree table; the n-row plan joins the edges broadcast when small,
+  shuffle+AQE-skew otherwise.
 * Per-iteration driver traffic is O(n_distinct_dst + hubs·salts) partial
   sums, not O(edges): dst-locality from range bucketing keeps each dst in
   ~1 shard (hubs in `salts` shards).
@@ -69,10 +71,11 @@ import time
 from dataclasses import dataclass
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark import TaskContext
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from linkgraph.operators.degrees import in_degrees, out_degrees
@@ -92,80 +95,6 @@ def tune_shuffle_partitions(spark: SparkSession, m_edges: int, floor: int | None
     p = max(floor, math.ceil(m_edges / TARGET_EDGES_PER_SHARD))
     spark.conf.set("spark.sql.shuffle.partitions", str(p))
     return p
-
-
-def _partition_offset_map(local: DataFrame, agg_col):
-    """Collect the tiny per-partition aggregate (≤ #partitions rows) and turn
-    it into a literal pid→exclusive-offset map column. Driver-side on
-    purpose: it removes every single-partition Exchange / global window from
-    the build plan — the n-row table is never funneled through one task.
-    ``local`` must be persisted so _pid stays consistent between this action
-    and later reuse."""
-    totals = {
-        r["_pid"]: r["_v"] for r in local.groupBy("_pid").agg(agg_col.alias("_v")).collect()
-    }
-    off, offsets = 0, {}
-    for pid in sorted(totals):
-        offsets[pid] = off
-        off += int(totals[pid] or 0)
-    if not offsets:
-        return F.lit(0)
-    return F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])[F.col("_pid")]
-
-
-def _two_level_offsets(df: DataFrame, order_col: str) -> DataFrame:
-    """Add [_pid, _local] position columns ordered by ``order_col`` without a
-    global single-partition window: range-repartition, rank locally, compute
-    exclusive per-partition offsets from the tiny per-partition count table
-    (collected driver-side — no global window even over the tiny table).
-    Returns df columns + [_pos] global 0-based position."""
-    spark = df.sparkSession
-    parts = max(2, spark.sparkContext.defaultParallelism)
-    ranged = df.repartitionByRange(parts, order_col)
-    w = Window.partitionBy(F.spark_partition_id()).orderBy(order_col)
-    local = ranged.select(
-        "*",
-        F.spark_partition_id().alias("_pid"),
-        (F.row_number().over(w) - 1).alias("_local"),
-    ).persist()  # pin: _pid/_local must agree between the count action and reuse
-    off_expr = _partition_offset_map(local, F.count(F.lit(1)))
-    return local.withColumn("_pos", F.col("_local") + off_expr)
-
-
-def _two_level_prefix_sum(
-    df: DataFrame, order_col: str, weight_col: str, out_col: str = "_cum"
-) -> DataFrame:
-    """Distributed EXCLUSIVE prefix sum of ``weight_col`` in ``order_col``
-    order — the value-weighted generalization of ``_two_level_offsets``
-    (SURVEY §4 X4 / O2: the CSR-rowptr CDF of pagerank_custom.h:128-134 done
-    distributed). Range-partition, local running sums, per-partition totals
-    collected driver-side into literal offsets. No single-partition Exchange
-    anywhere: survives n ≫ 10^7 where a global window would funnel the whole
-    vertex table through one task."""
-    spark = df.sparkSession
-    parts = max(2, spark.sparkContext.defaultParallelism)
-    ranged = df.repartitionByRange(parts, order_col)
-    w = (
-        Window.partitionBy(F.spark_partition_id())
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = ranged.select(
-        "*",
-        F.spark_partition_id().alias("_pid"),
-        F.coalesce(F.sum(weight_col).over(w), F.lit(0)).cast("long").alias("_lcum"),
-    ).persist()  # pin: _pid/_lcum must agree between the totals action and reuse
-    off_expr = _partition_offset_map(local, F.sum(weight_col))
-    return local.withColumn(out_col, (F.col("_lcum") + off_expr).cast("long")).drop(
-        "_pid", "_lcum"
-    )
-
-
-def dense_index(df: DataFrame, col: str = "node") -> DataFrame:
-    """[col, idx] with idx dense in [0, n), ordered by col — fully
-    distributed densification (the reference uses a driver-side dict,
-    /root/reference/py_src/prepare_graph.py:15-23, which cannot scale)."""
-    return _two_level_offsets(df.select(col), col).select(col, F.col("_pos").alias("idx"))
 
 
 # Worker-process shard cache: {(shard_path, build_token): decoded arrays}.
@@ -514,12 +443,27 @@ def _make_batch_step(rank_path: str, ctl_path: str, inv_od_path: str, token: str
     return step
 
 
+def _shard_paths(spark: SparkSession, shard_dir: str) -> DataFrame:
+    """[part: int, path: string], one row per part dir, part-ascending.
+    ``createDataFrame(list)`` is ``sc.parallelize`` + a Python schema pass
+    (not a local relation), so the frame is persisted: unpersisted, every
+    solve that feeds or collects it would re-run a Python worker over it."""
+    part_dirs = sorted(
+        (int(d.split("=")[1]), os.path.join(shard_dir, d))
+        for d in os.listdir(shard_dir)
+        if d.startswith("part=")
+    )
+    shard_df = spark.createDataFrame(part_dirs, "part int, path string").persist()
+    shard_df.count()
+    return shard_df
+
+
 @dataclass
 class ShardedGraph:
     """Edge-balanced + hub-salted shard files ready to iterate."""
 
     spark: SparkSession
-    shard_df: DataFrame  # [part: int, path: string] — local relation, persisted
+    shard_df: DataFrame  # [part: int, path: string], persisted (_shard_paths)
     shard_dir: str
     node_ids: np.ndarray  # sorted long[n]; idx = position (driver copy)
     dangling_mask: np.ndarray  # bool[n]
@@ -543,10 +487,11 @@ class ShardedGraph:
         shard_dir: str | None = None,
         weight_col: str | None = None,
     ) -> "ShardedGraph":
-        """One-time build: index vertices, plan buckets/salts on the n-row
-        degree table, weight+index edges, write one parquet dir per shard.
-        ``shard_dir`` defaults to a local temp dir (on a cluster: a DFS
-        path). Exactly two O(m) aggregations + one O(m) write pipeline.
+        """One-time build: collect the n-row degree table once, plan the
+        index, buckets and hub salts on it in numpy, then index + part the
+        edges and write one parquet dir per shard. ``shard_dir`` defaults
+        to a local temp dir (on a cluster: a DFS path). One O(m)
+        aggregation + one O(m) write pipeline.
 
         ``weight_col`` builds a WEIGHTED layout: parallel edges are summed,
         each edge stores its normalized transition probability w / Σ_out w
@@ -588,142 +533,114 @@ class ShardedGraph:
                 )
                 .persist()
             )
-            m = wedges.count()  # also fires the out-weight guard
+            wedges.count()  # fires the out-weight guard before any write
         else:
             wedges = None
-            m = edges.count()  # parquet metadata / cheap scan
+
+        # 1) the degree table (the reference scan's histograms,
+        #    helpers/file_helper.h:65-88) — the only O(m) aggregation,
+        #    collected once. Weighted layouts bucket/salt on the AGGREGATED
+        #    pair table's in-degrees (the actual per-dst row counts in the
+        #    shards); out_deg always comes from the raw table — it only
+        #    feeds the node set and the dangling mask.
+        deg = (
+            out_degrees(edges)
+            .join(in_degrees(wedges if weighted else edges), "node", "full_outer")
+            .select(
+                "node",
+                F.coalesce("out_deg", F.lit(0)).alias("out_deg"),
+                F.coalesce("in_deg", F.lit(0)).alias("in_deg"),
+            )
+            .toPandas()
+            .sort_values("node")
+        )
+        n = len(deg)
+        if n == 0:
+            raise ValueError("ShardedGraph.build: empty graph")
+        node_ids = deg["node"].to_numpy()  # sorted; idx = position
+        in_deg = deg["in_deg"].to_numpy()
+        m = int(in_deg.sum())
         num_shards = num_shards or tune_shuffle_partitions(spark, m)
         n_buckets = num_shards * buckets_per_shard
 
-        # 1) degree tables (the reference scan's histograms,
-        #    helpers/file_helper.h:65-88) — the only O(m) aggregations.
-        # Weighted layouts bucket/salt on the AGGREGATED pair table's
-        # in-degrees (those are the actual per-dst row counts in the
-        # shards); od always comes from the raw table — it only feeds the
-        # node set and the dangling mask.
-        od = out_degrees(edges).persist()
-        idg = in_degrees(wedges if weighted else edges)
-
-        # 2) vertex set from the degree keys (avoids a 2m-row distinct),
-        #    dense index via distributed two-level prefix sums
-        verts = (
-            od.select("node").unionByName(idg.select("node")).distinct()
-        )
-        mapping = dense_index(verts, "node").persist()
-        n = mapping.count()
-        if n == 0:
-            raise ValueError("ShardedGraph.build: empty graph")
-
-        # 3) bucket/salt plan on the n-row degree table: exact edge-balanced
-        #    boundaries from the in-degree CDF (cum/in_deg ordered by idx —
-        #    the CSR rowptr prefix sum, pagerank_custom.h:128-134), hub split
-        #    where in_deg > threshold (JDS precedent, mtx_hybrid.h:39-221)
+        # 2) bucket/salt plan: exact edge-balanced boundaries from the
+        #    exclusive in-degree CDF in idx order (the CSR rowptr prefix
+        #    sum, pagerank_custom.h:128-134), hub split where
+        #    in_deg > threshold (JDS precedent, mtx_hybrid.h:39-221).
         hub_threshold = max(1, int(hub_salt_factor * m / num_shards))
-        deg_idx = mapping.join(idg, "node", "left").select(
-            "idx", F.coalesce("in_deg", F.lit(0)).alias("in_deg")
-        )
         per_bucket = max(1, math.ceil(m / n_buckets))
-        # exclusive CDF of in-degree => bucket = floor(cdf / per_bucket);
-        # fully distributed two-level prefix sum — no single-partition window
-        # over the n-row table (that was a hard scale-killer beyond n~10^7)
-        plan = _two_level_prefix_sum(deg_idx, "idx", "in_deg", "_cdf").select(
-            F.col("idx").alias("dst_idx"),
-            F.least(F.lit(n_buckets - 1), (F.col("_cdf") / per_bucket).cast("int")).alias(
-                "bucket"
-            ),
-            F.when(
-                F.col("in_deg") > hub_threshold,
-                # cap: splitting one hub beyond the shard count adds task
-                # overhead without adding parallelism (each salt is a task)
-                F.least(
-                    F.ceil(F.col("in_deg") / hub_threshold).cast("int"),
-                    F.lit(max(2, num_shards)),
-                ),
-            ).alias("salts"),
-        ).persist()
+        cdf = np.cumsum(in_deg) - in_deg
+        bucket = np.minimum(n_buckets - 1, (cdf / per_bucket).astype(np.int64))
+        hub = in_deg > hub_threshold
+        # cap: splitting one hub beyond the shard count adds task overhead
+        # without adding parallelism (each salt is a task)
+        salts = np.where(
+            hub, np.minimum(np.ceil(in_deg / hub_threshold), max(2, num_shards)), 0
+        ).astype(np.int64)
+        # hub salt ranges follow the buckets, in idx order
+        base = np.where(hub, n_buckets + np.cumsum(salts) - salts, bucket)
+        hub_count = int(hub.sum())
+        n_parts = n_buckets + int(salts.sum())
 
-        hubs = plan.filter(F.col("salts").isNotNull()).orderBy("dst_idx").collect()
-        hub_count = len(hubs)
-        salt_offsets = {}
-        off = n_buckets
-        for h in hubs:
-            salt_offsets[int(h["dst_idx"])] = off
-            off += int(h["salts"])
-        n_parts = off
-        if hub_count:
-            off_map = F.create_map(*[F.lit(x) for kv in salt_offsets.items() for x in kv])
-            part_expr = F.when(
-                F.col("salts").isNotNull(),
-                off_map[F.col("dst_idx")] + F.pmod(F.xxhash64("src_idx"), F.col("salts")),
-            ).otherwise(F.col("bucket"))
-        else:
-            part_expr = F.col("bucket")
-
-        # 4) the O(m) pipeline: index + part assignment, one shuffle into
+        # 3) the O(m) pipeline: index + part assignment, one shuffle into
         #    shard layout, one parquet dir per part id. No per-edge weight
         #    column: 1/outdeg ships once as an n-array (X1 gather hoisting,
         #    done n-sized instead of m-sized). int32 indices while n < 2^31
-        #    — halves the iteration memory stream.
+        #    — halves the iteration memory stream, and is the type the hub
+        #    salt hashes.
         idx_t = "int" if n < 2**31 else "long"
-        # n-row sides broadcast explicitly while they plausibly fit executor
-        # memory (~24 B/row; 50M rows ~ 1.2 GB): without the hint the
-        # relation's post-shuffle size estimate routes the THREE m-row
-        # joins through sort-merge shuffles of the edge table. Beyond the
-        # cutoff (1e9-vertex graphs) the joins shuffle — correct either way.
+        plan = spark.createDataFrame(
+            pd.DataFrame({
+                "node": node_ids,
+                "idx": np.arange(n, dtype=np.int32 if n < 2**31 else np.int64),
+                "base": base.astype(np.int32),
+                "salts": salts.astype(np.int32),
+            }),
+            f"node long, idx {idx_t}, base int, salts int",
+        )
+        # the n-row plan broadcasts explicitly while it plausibly fits
+        # executor memory (~20 B/row; 50M rows ~ 1 GB): without the hint
+        # its size estimate routes the m-row joins through sort-merge
+        # shuffles of the edge table. Beyond the cutoff (1e9-vertex graphs)
+        # the joins shuffle — correct either way.
         _bc = F.broadcast if n <= 50_000_000 else (lambda df: df)
         edge_src = wedges if weighted else edges.select("src", "dst")
-        out_cols = [
-            F.col("src_idx").cast(idx_t).alias("src_idx"),
-            F.col("dst_idx").cast(idx_t).alias("dst_idx"),
-        ] + ([F.col("w").cast("double").alias("w")] if weighted else []) + [
-            F.col("part")
-        ]
+        src_side = plan.select(F.col("node").alias("src"), F.col("idx").alias("src_idx"))
+        dst_side = plan.select(
+            F.col("node").alias("dst"), F.col("idx").alias("dst_idx"), "base", "salts"
+        )
+        out_cols = ["src_idx", "dst_idx"] + (["w"] if weighted else []) + ["part"]
         (
             edge_src
-            .join(_bc(mapping.select(F.col("node").alias("src"), F.col("idx").alias("src_idx"))), "src")
-            .join(_bc(mapping.select(F.col("node").alias("dst"), F.col("idx").alias("dst_idx"))), "dst")
-            .join(_bc(plan.select("dst_idx", "bucket", "salts")), "dst_idx")
-            .withColumn("part", part_expr.cast("int"))
+            .join(_bc(src_side), "src")
+            .join(_bc(dst_side), "dst")
+            .withColumn(
+                "part",
+                F.when(
+                    F.col("salts") > 0,
+                    F.col("base") + F.pmod(F.xxhash64("src_idx"), F.col("salts")),
+                ).otherwise(F.col("base")).cast("int"),
+            )
             .select(*out_cols)
             # hash- not range-repartition, deliberately: dense part ids make
             # hash%n_parts collide (~1/e of write tasks empty, a few carrying
-            # 2-4 parts — a bounded write-stage tail), but repartitionByRange
-            # would SAMPLE the child to pick boundaries, i.e. execute the
-            # three m-row joins twice. At scale the doubled map work costs
-            # more than the write tail (measured equal at sf0.1).
+            # 2-4 parts — a bounded write-stage tail), but a range
+            # repartition would SAMPLE the child to pick boundaries, i.e.
+            # execute the m-row joins twice. At scale the doubled map work
+            # costs more than the write tail (measured equal at sf0.1).
             .repartition(n_parts, "part")
             .write.mode("overwrite")
             .partitionBy("part")
             .parquet(shard_dir)
         )
-        part_dirs = sorted(
-            (int(d.split("=")[1]), os.path.join(shard_dir, d))
-            for d in os.listdir(shard_dir)
-            if d.startswith("part=")
-        )
-        # local relation (not an RDD-backed DF): the batch regime feeds
-        # these path rows to its single task and the barrier gang collects
-        # them, neither through the Python-RDD machinery.
-        shard_df = (
-            spark.createDataFrame(part_dirs, "part int, path string")
-            .repartitionByRange(
-                min(len(part_dirs), spark.sparkContext.defaultParallelism), "part"
-            )
-            .persist()
-        )
-        shard_df.count()
+        if wedges is not None:
+            wedges.unpersist()
+        shard_df = _shard_paths(spark, shard_dir)
 
         # driver-side vertex state (same envelope as the MPI design's
-        # per-rank dense vector): sorted node ids, out-degrees (-> 1/outdeg
-        # array + dangling mask — the leaves[] list of custom_matrix.h:40-59)
-        mp = (
-            mapping.join(od, "node", "left")
-            .select("idx", "node", F.coalesce("out_deg", F.lit(0)).alias("out_deg"))
-            .orderBy("idx")
-            .toPandas()
-        )
-        node_ids = mp["node"].to_numpy()
-        out_deg = mp["out_deg"].to_numpy().astype(np.float64)
+        # per-rank dense vector): 1/outdeg array + dangling mask — the
+        # leaves[] list of custom_matrix.h:40-59
+        out_deg = deg["out_deg"].to_numpy().astype(np.float64)
         dangling_mask = out_deg == 0
         if weighted:
             # weights ship pre-normalized per edge; the n-vector is just the
@@ -744,11 +661,6 @@ class ShardedGraph:
                  "build_token": build_token, "weighted": weighted},
                 f,
             )
-        od.unpersist()
-        plan.unpersist()
-        mapping.unpersist()
-        if wedges is not None:
-            wedges.unpersist()
 
         return ShardedGraph(
             spark=spark,
@@ -779,22 +691,9 @@ class ShardedGraph:
             meta = json.load(f)
         inv_od = np.load(os.path.join(shard_dir, "inv_od.npy"))
         node_ids = np.load(os.path.join(shard_dir, "node_ids.npy"))
-        part_dirs = sorted(
-            (int(d.split("=")[1]), os.path.join(shard_dir, d))
-            for d in os.listdir(shard_dir)
-            if d.startswith("part=")
-        )
-        shard_df = (
-            spark.createDataFrame(part_dirs, "part int, path string")
-            .repartitionByRange(
-                min(len(part_dirs), spark.sparkContext.defaultParallelism), "part"
-            )
-            .persist()
-        )
-        shard_df.count()
         return ShardedGraph(
             spark=spark,
-            shard_df=shard_df,
+            shard_df=_shard_paths(spark, shard_dir),
             shard_dir=shard_dir,
             node_ids=node_ids,
             dangling_mask=inv_od == 0.0,

@@ -817,6 +817,20 @@ def test_lsh_md5_recall_and_invariance(spark, emb):
     )
 
 
+def test_lsh_md5_dims_mismatch_raises(spark):
+    """A vector whose length is not ``dims`` fails loudly instead of being
+    null-padded into the all-"0" bucket."""
+    vec = [float(i % 3) - 1.0 for i in range(8)]
+    emb = spark.createDataFrame(
+        [(1, vec), (2, vec[:5]), (3, vec[::-1])], "vec_id long, embedding array<float>"
+    )
+    good = emb.filter(F.col("vec_id") != 2)
+    rows = similarity.lsh_topk_md5(good, good, k=1, bits=2, tables=1, dims=8).collect()
+    assert {r["query_id"] for r in rows} <= {1, 3}
+    with pytest.raises(Exception, match="2 has 5 dims, expected 8"):
+        similarity.lsh_topk_md5(emb, good, k=1, bits=2, tables=1, dims=8).collect()
+
+
 def test_ivf_quant_recall_and_invariance(spark, emb):
     q = emb.filter(F.col("vec_id") < 10)
     exact = similarity.cosine_topk(emb, q, k=5).collect()
