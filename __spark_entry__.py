@@ -911,7 +911,7 @@ def q_pagerank_b_k5(spark, sf_dir):
 def q_pagerank_ws_k5(spark, sf_dir):
     """Weighted PageRank through the SHARDED CSR engine (plans/shards.py
     per-edge weight sidecar — the reference's COO data[] slot,
-    readers/mtx_sparse.h:123-132 — + the fused batch kernel), five fixed
+    readers/mtx_sparse.h:123-132 — + the barrier gang), five fixed
     Family-A iterations on the same reply-count-weighted graph as
     q_pagerank_w_k5. Node names are densified via xxhash64 for the dense
     vector layout and mapped back before returning, so the SAME
@@ -945,9 +945,9 @@ def q_pagerank_ws_k5(spark, sf_dir):
 
 
 def q_pagerank_bs_k5(spark, sf_dir):
-    """Family-B PageRank through the SHARDED engine (batch kernel with the
+    """Family-B PageRank through the SHARDED engine (the gang's
     family-aware combine: plain (1-d)/n base, leaking mass, ONE final
-    sum-normalization applied by the driver), five fixed iterations on
+    sum-normalization at publish), five fixed iterations on
     the same bipartite graph as q_pagerank_b_k5, names densified via
     xxhash64 and mapped back — the second semantic family's fast path,
     value-checked by the same unrolled-CTE B oracle."""

@@ -3,14 +3,14 @@
 Headline metric: PageRank edges-processed/sec to 1e-6 convergence
 (edges × iterations ÷ iterate wall, BASELINE.json metric) on the
 deterministic synthetic transcript-derived edge table sized by the sf of
-$SPARK_GRAFT_SF_DIR, run on local[$SPARK_GRAFT_CPUS] via the sharded
-Arrow-kernel path.
+$SPARK_GRAFT_SF_DIR, run on local[$SPARK_GRAFT_CPUS] via the barrier
+gang over the shard layout.
 
 Protocol (round-5, per the round-4 VERDICT):
 
-* The HEADLINE engines (barrier gang loop, sharded mapInArrow loop) run
-  INTERLEAVED for HEADLINE_REPEATS rounds and the reported number comes
-  from the MEDIAN iterate wall — single-shot draws inside a long session
+* The HEADLINE engine (the barrier gang loop) runs HEADLINE_REPEATS
+  times and the reported number comes from the MEDIAN iterate wall —
+  single-shot draws inside a long session
   carry up to 3× noise (measured, BENCH/outliers_r4.json), so one draw
   can neither prove nor clear a round-over-round delta.
 * The per-query walls run in GROUPS fresh-JVM subprocesses with a FIXED
@@ -115,7 +115,6 @@ def run() -> dict:
     sys.path.insert(0, REPO)
     from linkgraph.session import get_spark
     from linkgraph.sources import derive_edges, generate_transcripts
-    from linkgraph.operators.pagerank import pagerank_sharded
     from linkgraph.plans.barrier import pagerank_barrier
     from linkgraph.plans.shards import ShardedGraph
 
@@ -133,10 +132,8 @@ def run() -> dict:
     g = ShardedGraph.build(edges)
     build_sec = time.monotonic() - t0
 
-    # interleaved repeats: barrier + sharded alternate each round; the
-    # reported headline is the MEDIAN iterate wall across rounds
-    b_iter, b_wall, s_wall, s_iter_ms = [], [], [], []
-    b_iters, s_iters_all = [], []
+    # repeats; the reported headline is the MEDIAN iterate wall
+    b_iter, b_wall, b_iters = [], [], []
     conv = None
     for _ in range(HEADLINE_REPEATS):
         t0 = time.monotonic()
@@ -146,25 +143,12 @@ def run() -> dict:
         b_iters.append(res.iterations)
         conv = res.converged
 
-        t0 = time.monotonic()
-        res_sh = pagerank_sharded(edges, eps=1e-6, max_iter=200, sharded_graph=g)
-        s_wall.append(time.monotonic() - t0)
-        s_iter_ms.append(
-            sum(mm["wall_ms"] for mm in res_sh.iter_metrics)
-            / max(1, len(res_sh.iter_metrics))
-        )
-        s_iters_all.append(res_sh.iterations)
-
     # the headline divides m·iterations by a median wall: only sound when
     # every repeat ran the same number of iterations
-    if len(set(b_iters)) != 1 or len(set(s_iters_all)) != 1:
-        raise RuntimeError(
-            f"iteration counts differ across repeats: barrier {b_iters}, "
-            f"sharded {s_iters_all}"
-        )
-    iters, s_iters = b_iters[0], s_iters_all[0]
+    if len(set(b_iters)) != 1:
+        raise RuntimeError(f"iteration counts differ across repeats: {b_iters}")
+    iters = b_iters[0]
     iter_sec = statistics.median(b_iter)
-    sharded_sec = statistics.median(s_wall)
     edges_per_sec = m * iters / max(iter_sec, 1e-9)
     g.unpersist()
     edges.unpersist()
@@ -209,16 +193,12 @@ def run() -> dict:
             "iterations": iters,
             "converged": conv,
             "headline_protocol": (
-                f"median of {HEADLINE_REPEATS} interleaved repeats; "
+                f"median of {HEADLINE_REPEATS} repeats; "
                 f"query walls from {GROUPS} fresh-JVM groups"
             ),
             "barrier_wall_sec": round(statistics.median(b_wall), 3),
             "barrier_iterate_sec": round(iter_sec, 3),
             "barrier_iterate_all": [round(x, 3) for x in b_iter],
-            "sharded_wall_sec": round(sharded_sec, 3),
-            "sharded_wall_all": [round(x, 3) for x in s_wall],
-            "sharded_iter_ms": round(statistics.median(s_iter_ms), 1),
-            "sharded_edges_per_sec": round(m * s_iters / sharded_sec, 1),
             "shard_build_sec": round(build_sec, 3),
             "gen_wall_sec": round(gen_sec, 3),
             "controls": {

@@ -60,7 +60,8 @@ def main(argv: list[str] | None = None) -> dict:
         choices=["auto", "barrier", "sharded", "dataframe"],
         default="barrier",
         help="physical engine; auto picks by regime (n over the dense "
-        "budget -> dataframe, small m -> fused sharded batch, else barrier)",
+        "budget -> dataframe, else barrier); sharded is an older name of "
+        "barrier",
     )
     p.add_argument(
         "--shard-dir",
@@ -89,7 +90,7 @@ def main(argv: list[str] | None = None) -> dict:
     from pyspark.sql import SparkSession
 
     from linkgraph.checkpoint import ParquetManifestStore
-    from linkgraph.operators.pagerank import pagerank_dataframe, pagerank_sharded
+    from linkgraph.operators.pagerank import pagerank_dataframe
     from linkgraph.sources import derive_edges, generate_transcripts
 
     spark = SparkSession.builder.appName("linkgraph-pagerank").getOrCreate()
@@ -180,15 +181,9 @@ def main(argv: list[str] | None = None) -> dict:
             g = ShardedGraph.build(edges, num_shards=args.num_shards, shard_dir=args.shard_dir)
         m = g.m
         build_sec = time.monotonic() - t0
-        fn = {
-            "barrier": pagerank_barrier,
-            "sharded": pagerank_sharded,
-        }[strategy]
-        # mesh choice reaches the gang loop on BOTH paths (the sharded
-        # engine's fused regime delegates to the barrier runner)
         kw = {"mesh_transport": args.mesh} if args.mesh else {}
         t0 = time.monotonic()
-        res = fn(
+        res = pagerank_barrier(
             edges,
             d=args.damping,
             eps=args.eps,

@@ -20,11 +20,12 @@ Two physical strategies, identical semantics (allclose 1e-6 asserted in tests):
   reference loops over all i∈[0,n), pagerank_custom.h:81). This path has no
   driver-size assumptions — it is the unbounded-scale fallback.
 
-* ``pagerank_sharded`` (plans/shards.py) — partitioned-CSR gather-scatter in
-  Arrow-batched numpy kernels over salted, edge-balanced adjacency shards;
-  the idiomatic analogue of the reference's MPI design (main_mpi.c:67-154):
-  k iterations per single-task job, or the whole loop in one barrier gang
-  whose task-to-task exchange ≙ MPI_Allgatherv and pid-ordered δ² sum ≙
+* ``pagerank_barrier`` (plans/barrier.py; ``pagerank_sharded`` is the same
+  engine under its older name) — partitioned-CSR gather-scatter in numpy
+  kernels over salted, edge-balanced adjacency shards (plans/shards.py),
+  the idiomatic analogue of the reference's MPI design
+  (main_mpi.c:67-154): the whole loop runs in one barrier gang whose
+  task-to-task exchange ≙ MPI_Allgatherv and pid-ordered δ² sum ≙
   MPI_Reduce.
 
 ``pagerank_dataframe``'s per-iteration driver work is ONE Spark action: norm²
@@ -54,8 +55,8 @@ class PageRankResult:
     strategy: str = ""  # physical strategy that produced the result
 
 
-# Driver/executor budget for the dense-vector engines (sharded/barrier):
-# they hold node_ids + inv_od + rank + next-rank as n-sized float64/int64
+# Driver/executor budget for the dense-vector engine (the barrier gang):
+# it holds node_ids + inv_od + rank + next-rank as n-sized float64/int64
 # arrays (~33 B/vertex with the dangling mask) on the driver and in each
 # barrier task — the reference MPI design's envelope (every rank holds the
 # full vector, pagerank_custom_mpi.h:62-63). `pagerank(..., strategy="auto")`
@@ -362,138 +363,18 @@ def personalized_pagerank(
     )
 
 
-def pagerank_sharded(
-    edges: DataFrame,
-    d: float = 0.85,
-    eps: float = 1e-6,
-    max_iter: int = 200,
-    check_convergence: bool = True,
-    num_shards: int | None = None,
-    store=None,
-    run_id: str | None = None,
-    sharded_graph=None,
-    batch: bool | None = None,
-    mesh_transport: str | None = None,
-    family: str = "a",
-    weight_col: str | None = None,
-) -> PageRankResult:
-    """Fast path: PageRank over persisted CSR shards with a numpy
-    gather-scatter kernel (plans/shards.py). Semantics identical to
-    ``pagerank_dataframe`` (asserted allclose 1e-6 in tests). Two physical
-    regimes, the reference MPI loop (pagerank_custom_mpi.h:40-79)
-    re-expressed at two fusion levels:
+def pagerank_sharded(edges: DataFrame | None = None, **kw) -> PageRankResult:
+    """The gang engine under its older name: ``plans/barrier.pagerank_barrier``
+    with the same keyword arguments. The contract queries, the CLI's
+    ``--strategy sharded`` and tests call it by this name."""
+    from linkgraph.plans.barrier import pagerank_barrier
 
-    * small m, no checkpoint → single-task ``spmv_batch``: k iterations
-      fused into ONE Spark job (exact in-kernel L2 stop).
-    * otherwise → the whole loop runs as ONE barrier gang job via
-      ``plans/barrier.pagerank_barrier``: k = ALL remaining steps between
-      driver norm reads, executor-to-executor partial exchange,
-      checkpoints written in-job every ``checkpoint_interval`` — the
-      distributed extension of the batch fusion (reference precedent:
-      CHECK_CONVERGENCE=0 runs fixed blocks, global_config.h:8-10). No
-      per-iteration Spark job floor.
-
-    The batch regime writes no checkpoints, so ``batch=True`` together
-    with ``store`` and ``run_id`` raises ``ValueError``. Both regimes share
-    the part-ascending combine order, so vectors and stop decisions are
-    bit-identical across them (pinned in tests)."""
-    import numpy as np
-
-    from linkgraph.plans.shards import ShardedGraph
-
-    if family not in ("a", "b"):
-        raise ValueError(f"family must be 'a' or 'b', got {family!r}")
-    checkpointed = store is not None and run_id is not None
-    if batch and checkpointed:
-        raise ValueError(
-            "pagerank_sharded: batch=True writes no checkpoints — drop "
-            "store/run_id or let the gang regime run (batch=None/False)"
-        )
-    if sharded_graph is not None and weight_col is not None and not sharded_graph.weighted:
-        raise ValueError(
-            "pagerank_sharded: weight_col given but the prebuilt "
-            "sharded_graph was built unweighted — rebuild with "
-            "ShardedGraph.build(..., weight_col=...)"
-        )
-    g = sharded_graph or ShardedGraph.build(
-        edges, num_shards=num_shards, weight_col=weight_col
-    )
-
-    # Regime pick ("shuffle partitioning tuned per iteration", north rule):
-    # below ~64M edges the whole CSR fits one worker's cache and the
-    # per-iteration Spark job floor (measured 0.2-0.6 s on this host)
-    # dwarfs the kernel, so k iterations are FUSED into one single-task job
-    # (bit-identical combine order, exact in-kernel L2 stop — iteration
-    # counts match the oracle). Larger graphs and checkpointed runs fuse
-    # the whole loop into one barrier gang job instead (delegation below).
-    use_batch = batch if batch is not None else g.m <= 64_000_000 and not checkpointed
-    if not use_batch:
-        from linkgraph.plans.barrier import pagerank_barrier
-
-        res = pagerank_barrier(
-            d=d, eps=eps, max_iter=max_iter,
-            check_convergence=check_convergence, store=store, run_id=run_id,
-            sharded_graph=g, mesh_transport=mesh_transport, family=family,
-        )
-        ranks_df = res.ranks
-        if sharded_graph is None:
-            # we own the temp shard dir (barrier saw a prebuilt graph and
-            # leaves ownership here): pin the result, then reclaim
-            ranks_df = ranks_df.localCheckpoint(eager=True)
-            g.unpersist()
-        return PageRankResult(
-            ranks=ranks_df, iterations=res.iterations, norm=res.norm,
-            converged=res.converged, iter_metrics=res.iter_metrics,
-            strategy="sharded",
-        )
-
-    rank = np.full(g.n, 1.0 / g.n, dtype=np.float64)
-    norm = float("inf")
-    converged = False
-    metrics: list[dict] = []
-    it = 0
-    while it < max_iter and not converged:
-        k = min(16, max_iter - it)
-        t0 = time.monotonic()
-        rank, norms, masses, nnz_total, kernel_ms = g.spmv_batch(
-            rank, k=k, d=d, eps=eps, check_convergence=check_convergence,
-            family=family,
-        )
-        job_ms = (time.monotonic() - t0) * 1e3
-        for norm_j, mass_j in zip(norms, masses):
-            it += 1
-            metrics.append(
-                {
-                    "iteration": it,
-                    "norm": float(norm_j),
-                    "mass": float(mass_j),
-                    "wall_ms": job_ms / len(norms),
-                    "kernel_ms": kernel_ms / len(norms),
-                    "nnz": nnz_total // len(norms),
-                    "batched": len(norms),
-                }
-            )
-        norm = float(norms[-1])
-        converged = bool(check_convergence and norm <= eps)
-
-    if family == "b":
-        # ONE final sum-normalization (pagerank_OCL.h:156-161)
-        rank = rank / rank.sum()
-    ranks_df = g.ranks_df(rank)
-    if sharded_graph is None:
-        # pin the distributed result in executor storage before the owned
-        # temp shard dir (which the plan's mmap reader needs) is removed
-        ranks_df = ranks_df.localCheckpoint(eager=True)
-        g.unpersist()
-    return PageRankResult(
-        ranks=ranks_df, iterations=it, norm=norm, converged=converged,
-        iter_metrics=metrics, strategy="sharded",
-    )
+    return pagerank_barrier(edges, **kw)
 
 
 def choose_strategy(
     n: int,
-    m: int,
+    m: int = 0,
     *,
     family: str = "a",
     weighted: bool = False,
@@ -504,18 +385,17 @@ def choose_strategy(
     spark-submit job so the CLI can resolve the engine from cheap scalars
     (meta.json n/m, or two O(m) aggregations) BEFORE any O(n) driver
     materialization — loading a shard layout's node arrays just to decide
-    to fall back to the dataframe engine would defeat the budget."""
+    to fall back to the dataframe engine would defeat the budget. ``m``
+    and the family/weighted/checkpointed flags no longer change the pick;
+    they stay so existing callers keep working."""
     budget = dense_budget_bytes if dense_budget_bytes is not None else DENSE_BUDGET_BYTES
-    # family "b" and weighted graphs run through the SAME shard/barrier
-    # engines since the per-edge weight sidecar + family-aware combine
-    # landed (round 4); only the dense-vector budget and non-integral ids
-    # (checked by the caller) force the dataframe plan
-    del family, weighted  # kept for signature stability
-    if n * DENSE_BYTES_PER_VERTEX > budget:
-        return "dataframe"
-    if m <= 64_000_000 and not checkpointed:
-        return "sharded"
-    return "barrier"
+    # family "b" and weighted graphs run through the SAME gang engine (the
+    # per-edge weight sidecar + family-aware combine), and the gang beats
+    # the deleted single-task batch regime at small m too (341k-edge ingest
+    # graph: P=4 gang 0.68 s, batch 1.14 s); only the dense-vector budget
+    # and non-integral ids (checked by the caller) force the dataframe plan
+    del m, family, weighted, checkpointed
+    return "dataframe" if n * DENSE_BYTES_PER_VERTEX > budget else "barrier"
 
 
 def pagerank(
@@ -541,17 +421,16 @@ def pagerank(
 
     * n over the dense-vector budget (``dense_budget_bytes``, default
       LINKGRAPH_DENSE_BUDGET_BYTES / 16 GiB ≈ 5×10^8 vertices), or
-      family "b" → ``pagerank_dataframe`` — the unbounded join-gather plan
-      with no driver-size assumptions.
-    * small m (whole CSR fits one worker's cache) → ``pagerank_sharded``'s
-      k-fused single-task batch regime.
-    * otherwise → ``pagerank_barrier`` — the distributed fused loop: every
-      iteration's exchange happens executor-to-executor inside ONE barrier
-      stage (no per-iteration Spark job floor), checkpoints via ``store``.
+      non-integral ids → ``pagerank_dataframe`` — the unbounded join-gather
+      plan with no driver-size assumptions.
+    * otherwise → ``pagerank_barrier`` — the fused loop: every iteration's
+      exchange happens executor-to-executor inside ONE barrier stage (no
+      per-iteration Spark job floor), checkpoints via ``store``.
 
-    ``strategy`` forces a specific engine ("dataframe" | "sharded" |
-    "barrier"); "auto" applies the regime rules above. The chosen engine is
-    recorded in ``PageRankResult.strategy``."""
+    ``strategy`` forces a specific engine ("dataframe" | "barrier";
+    "sharded" is an older spelling of "barrier"); "auto" applies the
+    regime rules above. The chosen engine is recorded in
+    ``PageRankResult.strategy``."""
     budget = dense_budget_bytes if dense_budget_bytes is not None else DENSE_BUDGET_BYTES
     if edges is None and (sharded_graph is None or strategy == "dataframe"):
         raise ValueError(
@@ -561,14 +440,7 @@ def pagerank(
 
     if strategy == "auto":
         integral = ("byte", "short", "int", "long", "integer", "bigint")
-        if sharded_graph is not None:
-            n_est, m_est = sharded_graph.n, sharded_graph.m
-            strategy = choose_strategy(
-                n_est, m_est, family=family, weighted=weight_col is not None,
-                checkpointed=store is not None and run_id is not None,
-                dense_budget_bytes=budget,
-            )
-        elif any(
+        if sharded_graph is None and any(
             dict(edges.dtypes).get(c) not in integral for c in ("src", "dst")
         ):
             # the shard layout's dense vectors need integral ids — string
@@ -576,16 +448,10 @@ def pagerank(
             # fast path densify first, e.g. F.xxhash64 — q_pagerank pattern)
             strategy = "dataframe"
         else:
-            # two cheap O(m) aggregations; one-time vs. the whole run
-            from linkgraph.operators.degrees import vertices as _verts
-
-            n_est = _verts(edges).count()
-            m_est = edges.count()
-            strategy = choose_strategy(
-                n_est, m_est, family=family, weighted=weight_col is not None,
-                checkpointed=store is not None and run_id is not None,
-                dense_budget_bytes=budget,
-            )
+            # the rule needs only n: free from a layout, else one cheap
+            # O(m) aggregation, one-time vs. the whole run
+            n_est = sharded_graph.n if sharded_graph is not None else vertices(edges).count()
+            strategy = choose_strategy(n_est, dense_budget_bytes=budget)
         if strategy == "dataframe" and edges is None:
             raise ValueError(
                 f"pagerank: n={n_est} exceeds the dense-vector budget and "
@@ -599,14 +465,7 @@ def pagerank(
             check_convergence=check_convergence, store=store, run_id=run_id,
             family=family, weight_col=weight_col,
         )
-    if strategy == "sharded":
-        return pagerank_sharded(
-            edges, d=d, eps=eps, max_iter=max_iter,
-            check_convergence=check_convergence, num_shards=num_shards,
-            store=store, run_id=run_id, sharded_graph=sharded_graph,
-            family=family, weight_col=weight_col,
-        )
-    if strategy == "barrier":
+    if strategy in ("barrier", "sharded"):
         from linkgraph.plans.barrier import pagerank_barrier
 
         return pagerank_barrier(

@@ -36,14 +36,23 @@ stop and broadcasts done (:65-76)           | segment messages; every task sums
 
 Why not per-iteration Spark jobs here: a driver-synchronized loop pays task
 dispatch + result collection (~0.2-0.5 s) every iteration, which caps
-scaling efficiency once the numpy kernel drops below ~1 s/iteration; and
-BarrierTaskContext.allGather has a ~1 s sync floor, so it is used ONCE for
-endpoint rendezvous, never in the loop.
+scaling efficiency once the numpy kernel drops below ~1 s/iteration.
+
+Rendezvous: the tasks exchange mesh endpoints through a one-shot TCP
+registration server on the driver (_Rendezvous), not through Spark's
+BarrierTaskContext.allGather/barrier(). Those carry a measured 1.00 s
+sync floor (a 4-task barrier stage: 0.42 s without a sync, 1.40 s with
+one allGather; the slowest task waited 1.003-1.008 s every time), more
+than the rest of a small solve. The driver registration costs the tasks'
+start stagger (0.06-0.12 s). The RDD's barrier() stays: it is what gang-
+schedules the P tasks.
 
 Trade-off vs the join-gather path (operators/pagerank.pagerank_dataframe):
-barrier mode needs all P slots simultaneously (gang scheduling) and retries
-the whole stage on task loss, resuming from the last checkpoint; the
-dataframe path reschedules per iteration and tolerates executor churn.
+barrier mode needs all P slots simultaneously (gang scheduling), and Spark
+never retries a failed barrier ResultStage, so a task failure fails the
+solve. Calling again with the same ``store``/``run_id`` resumes from the
+last committed snapshot. The dataframe path reschedules per iteration and
+tolerates executor churn.
 
 Checkpointing: task 0 (which holds the full assembled vector after round 2)
 writes rank snapshots + per-partition lineage/metrics in the exact
@@ -53,12 +62,14 @@ per checkpoint interval, resumable mid-convergence (north rule).
 
 from __future__ import annotations
 
+import hmac
+import json
 import os
 import pickle
+import secrets
 import shutil
 import socket
 import struct
-import uuid
 import threading
 import time
 
@@ -303,26 +314,20 @@ class _ShmMesh:
 
 
 class _Mesh:
-    """Full-mesh peer connections among the P barrier tasks, established via
-    one allGather of listening endpoints (the only use of Spark's barrier
-    sync — it has a ~1 s floor, so the loop never touches it)."""
+    """Full-mesh TCP peer connections among the P barrier tasks. ``server``
+    is this task's listening socket and ``addrs`` every task's "host:port"
+    in pid order, as the driver rendezvous returned them."""
 
-    def __init__(self, ctx, pid: int, P: int, server=None, addrs=None):
+    def __init__(self, pid: int, P: int, server=None, addrs=None):
         self.pid = pid
         self.P = P
         self.conns: dict[int, socket.socket] = {}
         self._server = server
         if P == 1:
             return
-        if self._server is None:
-            host = socket.gethostbyname(socket.gethostname())
-            self._server = socket.create_server(("", 0))
-            self._server.settimeout(600)
-            port = self._server.getsockname()[1]
-            addrs = ctx.allGather(f"{host}:{port}")
         # connect to lower pids; accept from higher pids
         for q in range(pid):
-            h, p = addrs[q].split(":")[:2]
+            h, p = addrs[q].split(":")
             s = socket.create_connection((h, int(p)), timeout=600)
             s.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
             _send_msg(s, {"pid": pid})
@@ -388,30 +393,133 @@ class _Mesh:
             self._server.close()
 
 
-def _make_mesh(ctx, pid: int, P: int, mode: str = "auto"):
-    """Transport selection, decided identically on every task from ONE
-    barrier allGather advertising (host, tcp port, shm-writable, uuid):
-    same host everywhere + writable /dev/shm => _ShmMesh (single-round
-    tmpfs file exchange, MPI's same-node shared-memory BTL analogue);
-    otherwise the TCP full mesh. mode ("auto"|"tcp"|"shm", default from
-    LINKGRAPH_MESH at the driver) forces a choice — tests use it for
-    transport-parity assertions."""
-    if P == 1 or mode == "tcp":
-        return _Mesh(ctx, pid, P)
+class _Rendezvous:
+    """One-shot driver-side registration for one gang launch: a TCP server
+    on ``host`` (port 0) served by a daemon thread. Each task sends one JSON
+    line {secret, pid, addr, shm_ok}; a line whose secret does not match
+    (hmac.compare_digest), whose pid is out of range or already registered,
+    or that does not parse, gets its connection dropped. Nothing received
+    is unpickled: this is a listening socket. Once all P pids registered,
+    the server stops accepting and every task receives the same JSON reply:
+    the pid-ordered addresses and shm flags, plus the shm mesh root the
+    driver named. ``close`` (a ``finally`` around the stage's collect)
+    closes the server and every accepted socket, so a failed stage leaves
+    no thread, port or shm root behind and no task waits on a dead
+    driver."""
+
+    def __init__(self, host: str, P: int):
+        self.P = P
+        self.secret = secrets.token_hex(16)
+        self.root = "lg_mesh_" + secrets.token_hex(16)
+        self._server = socket.create_server((host, 0))
+        self._server.settimeout(0.2)  # accept() polls the close flag
+        self.address = (host, self._server.getsockname()[1], self.secret)
+        self._conns: list[socket.socket] = []
+        self._closed = threading.Event()
+        self._thread = threading.Thread(
+            target=self._serve, name="linkgraph-rendezvous", daemon=True
+        )
+        self._thread.start()
+
+    def _registration(self, conn: socket.socket, taken: dict):
+        try:
+            with conn.makefile("rb") as f:
+                msg = json.loads(f.readline(4096))
+            pid = msg["pid"]
+            if (
+                hmac.compare_digest(str(msg["secret"]).encode(), self.secret.encode())
+                and type(pid) is int and 0 <= pid < self.P and pid not in taken
+            ):
+                return pid, str(msg["addr"]), bool(msg["shm_ok"])
+        except (OSError, ValueError, TypeError, KeyError):
+            pass
+        return None
+
+    def _serve(self) -> None:
+        regs: dict[int, tuple] = {}
+        try:
+            while len(regs) < self.P and not self._closed.is_set():
+                try:
+                    conn, _ = self._server.accept()
+                except socket.timeout:
+                    continue
+                self._conns.append(conn)
+                conn.settimeout(10)
+                reg = self._registration(conn, regs)
+                if reg is None:
+                    conn.close()
+                    continue
+                regs[reg[0]] = (conn, reg[1], reg[2])
+            if len(regs) < self.P:
+                return
+            self._server.close()  # the group is complete: stop accepting
+            reply = json.dumps({
+                "addrs": [regs[q][1] for q in range(self.P)],
+                "shm": [regs[q][2] for q in range(self.P)],
+                "root": self.root,
+            }).encode() + b"\n"
+            for q in range(self.P):
+                regs[q][0].sendall(reply)
+        except OSError:
+            pass  # closed by the driver, or a task went away: the stage fails
+        finally:
+            self._server.close()
+
+    def close(self) -> None:
+        self._closed.set()
+        self._server.close()
+        for c in list(self._conns):
+            try:
+                c.shutdown(socket.SHUT_RDWR)  # wakes a blocked readline
+            except OSError:
+                pass
+            c.close()
+        self._thread.join()
+        for c in self._conns:  # also any accepted while the loop above ran
+            c.close()
+        # a failed stage's tasks never swept the shm root; a no-op when the
+        # gang finished (pid 0 removed it) or ran on other hosts
+        shutil.rmtree(os.path.join("/dev/shm", self.root), ignore_errors=True)
+
+
+def _register(address: tuple, pid: int, addr: str, shm_ok: bool) -> dict:
+    """Task side of _Rendezvous: send this task's registration, block for
+    the group's reply."""
+    host, port, secret = address
+    with socket.create_connection((host, port), timeout=600) as s:
+        s.sendall(json.dumps(
+            {"secret": secret, "pid": pid, "addr": addr, "shm_ok": shm_ok}
+        ).encode() + b"\n")
+        with s.makefile("rb") as f:
+            line = f.readline()
+    if not line:
+        raise ConnectionError("gang rendezvous: the driver closed the registration")
+    return json.loads(line)
+
+
+def _make_mesh(pid: int, P: int, rendezvous: tuple | None, mode: str = "auto"):
+    """Register with the driver, then pick the transport identically on
+    every task from the one reply: same host everywhere + writable
+    /dev/shm => _ShmMesh (single-round tmpfs file exchange, MPI's
+    same-node shared-memory BTL analogue); otherwise the TCP full mesh.
+    mode ("auto"|"tcp"|"shm", default from LINKGRAPH_MESH at the driver)
+    forces a choice — tests use it for transport-parity assertions."""
+    if P == 1:
+        return _Mesh(pid, P)
     host = socket.gethostbyname(socket.gethostname())
     server = socket.create_server(("", 0))
     server.settimeout(600)
-    port = server.getsockname()[1]
-    shm_ok = os.access("/dev/shm", os.W_OK)
-    token = uuid.uuid4().hex if pid == 0 else "-"
-    ads = ctx.allGather(f"{host}:{port}:{int(shm_ok)}:{token}")
-    same_host = len({a.split(":")[0] for a in ads}) == 1
-    all_shm = all(a.split(":")[2] == "1" for a in ads)
-    if mode == "shm" or (same_host and all_shm):
+    reply = _register(
+        rendezvous, pid, f"{host}:{server.getsockname()[1]}",
+        os.access("/dev/shm", os.W_OK),
+    )
+    addrs = reply["addrs"]
+    same_host = len({a.split(":")[0] for a in addrs}) == 1
+    if mode == "shm" or (mode != "tcp" and same_host and all(reply["shm"])):
         server.close()
         if pid == 0:
-            # insurance against leaked dirs from hard-killed runs (a stage
-            # retry re-rendezvouses under a fresh uuid): sweep stale roots
+            # insurance against leaked dirs from hard-killed runs (each
+            # launch names a fresh root): sweep stale roots
             now = time.time()
             for name in os.listdir("/dev/shm"):
                 if name.startswith("lg_mesh_"):
@@ -421,9 +529,8 @@ def _make_mesh(ctx, pid: int, P: int, mode: str = "auto"):
                             shutil.rmtree(p, ignore_errors=True)
                     except OSError:
                         pass
-        root = os.path.join("/dev/shm", "lg_mesh_" + ads[0].split(":")[3])
-        return _ShmMesh(pid, P, root)
-    return _Mesh(ctx, pid, P, server=server, addrs=ads)
+        return _ShmMesh(pid, P, os.path.join("/dev/shm", reply["root"]))
+    return _Mesh(pid, P, server, addrs)
 
 
 def pagerank_barrier(
@@ -467,9 +574,7 @@ def pagerank_barrier(
     spark = g.spark
     sc = spark.sparkContext
     n, node_ids = g.n, g.node_ids
-    P = num_tasks or sc.defaultParallelism
-    part_dirs = [(r["part"], r["path"]) for r in g.shard_df.collect()]
-    P = max(1, min(P, max(1, len(part_dirs))))
+    P = max(1, min(num_tasks or sc.defaultParallelism, len(g.parts)))
     # contiguous vertex segments, one owner task each (main_mpi.c:88-108)
     seg_bounds = np.linspace(0, n, P + 1).astype(np.int64)
 
@@ -485,24 +590,25 @@ def pagerank_barrier(
     ckpt_root = store.root if store is not None and run_id is not None else None
     dangling_idx = np.flatnonzero(g.dangling_mask)
     bc = sc.broadcast((rank0, dangling_idx, g.inv_od, node_ids if ckpt_root else None))
-    path_of = dict(part_dirs)
+    path_of = dict(g.parts)
     build_token = g.build_token  # keys the worker shard cache per build
 
-    # task 0 publishes the final vector here — a UNIQUE file, not the
-    # mutable rank.npy iteration scratch, so earlier results' lazy plans
-    # are never silently retargeted by a later solve on the same graph
-    rank_out = os.path.join(g.shard_dir, f"rank_out_{uuid.uuid4().hex}.npy")
+    # task 0 publishes the final vector here — a UNIQUE file, so earlier
+    # results' lazy plans are never silently retargeted by a later solve
+    # on the same graph
+    rank_out = os.path.join(g.shard_dir, f"rank_out_{secrets.token_hex(16)}.npy")
     transport = mesh_transport or os.environ.get("LINKGRAPH_MESH", "auto")
-    parts_sized = sorted((part, _dir_bytes(path)) for part, path in part_dirs)
+    parts_sized = [(part, _dir_bytes(path)) for part, path in g.parts]
     tasks = list(range(P))
+    rdv = _Rendezvous(sc.getConf().get("spark.driver.host"), P) if P > 1 else None
+    rendezvous = rdv.address if rdv is not None else None
 
     def run(it_rows):
         from pyspark import BarrierTaskContext
 
         from linkgraph.plans.shards import _load_shard, _load_uniq
 
-        ctx = BarrierTaskContext.get()
-        pid = ctx.partitionId()
+        pid = BarrierTaskContext.get().partitionId()
         list(it_rows)  # drain; partition index IS the task id
         rank_init, dang_idx, inv_od, ids = bc.value
         rank = rank_init.copy()
@@ -538,7 +644,7 @@ def pagerank_barrier(
             load[q] += size_of[part]
             assign[q].append(part)
         mine_parts = assign[pid]
-        mesh = _make_mesh(ctx, pid, P, transport)
+        mesh = _make_mesh(pid, P, rendezvous, transport)
         # Streamed partial exchange (replicate + shm mesh): each shard's
         # sums are published the moment the kernel finishes them, so the
         # transfer overlaps the remaining compute and the gang's critical
@@ -562,39 +668,6 @@ def pagerank_barrier(
             return (leaked + (1.0 - leaked) * (1.0 - d)) / n
 
         try:
-            start = start_iter
-            if ckpt_root is not None:
-                # intra-job stage-retry resume: start_iter/rank0 were
-                # resolved ONCE on the driver and captured in the broadcast;
-                # a barrier stage retry restarts every task, so task 0
-                # re-reads the latest committed manifest iteration here and
-                # the mesh agrees on it via one startup allgather (never in
-                # the loop). Without this, a retry would redo work from the
-                # original vector (correct but not "resume").
-                payload = None
-                if pid == 0:
-                    import pyarrow.parquet as paq
-
-                    from linkgraph.checkpoint import ParquetManifestStore
-
-                    st = ParquetManifestStore(ckpt_root)
-                    li = st.latest_iteration(run_id)
-                    if li is not None and li > start:
-                        entry = next(
-                            e
-                            for e in st._read_manifest(run_id)["iterations"]
-                            if e["iteration"] == li
-                        )
-                        t = paq.read_table(entry["rank_path"])
-                        r = np.zeros(n, dtype=np.float64)
-                        r[np.searchsorted(ids, t.column("node").to_numpy())] = t.column(
-                            "rank"
-                        ).to_numpy()
-                        payload = (li, r)
-                resumed = mesh.allgather(payload).get(0)
-                if resumed is not None:
-                    start, rank = resumed[0], resumed[1].copy()
-
             # Shared rank buffers (segment-routed path, same-host mesh):
             # ONE ping/pong pair of n-vector mmaps on the mesh tmpfs holds
             # rank and w=rank·inv_od; each task writes only its own
@@ -623,7 +696,7 @@ def pagerank_barrier(
                 vecs = [np.memmap(b, dtype=np.float64, mode="r+", shape=(2, n))
                         for b in bufs]
                 inv_seg = inv_od[lo:hi]
-                cur = start & 1
+                cur = start_iter & 1
                 vecs[cur][0, lo:hi] = rank[lo:hi]
                 vecs[cur][1, lo:hi] = rank[lo:hi] * inv_seg
                 mesh.allgather(None)  # all segments written
@@ -654,10 +727,10 @@ def pagerank_barrier(
                         [{"iteration": it_no, **mm} for mm in all_met],
                     )
 
-            it = start
+            it = start_iter
             norm = float("inf")
             converged = False
-            for it in range(start + 1, max_iter + 1):
+            for it in range(start_iter + 1, max_iter + 1):
                 t0 = time.monotonic()
                 # (1) SpMV partials over this task's statically assigned
                 # shards (shared CSR kernel; worker-cached decoded arrays).
@@ -842,8 +915,12 @@ def pagerank_barrier(
         finally:
             mesh.close()
 
-    out = sc.parallelize(tasks, P).barrier().mapPartitions(run).collect()
-    bc.destroy()
+    try:
+        out = sc.parallelize(tasks, P).barrier().mapPartitions(run).collect()
+    finally:
+        if rdv is not None:
+            rdv.close()
+        bc.destroy()
     res = next(o for o in out if o["kind"] == "result")
     ranks_df = g.ranks_df(vector_path=rank_out)  # published by task 0
     if sharded_graph is None:

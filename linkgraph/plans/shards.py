@@ -28,7 +28,7 @@ every iteration (pagerank_custom_mpi.h:62)  | task inside one barrier gang
 OpenCL gather-scatter kernels               | numpy gather + bincount scatter
 (kernels/pr_custom_matrix_in.cl:112-268)    | (csr_partials)
 per-iteration scalar readback               | per-iteration norms returned once
-(pagerank_custom.h:261-268)                 | per k-step job / gang job
+(pagerank_custom.h:261-268)                 | per gang job
 
 Why shard FILES instead of a cached DataFrame: feeding a cached relational
 DataFrame back through the JVM→Arrow→Python pipe re-serializes every edge
@@ -67,14 +67,12 @@ import math
 import os
 import shutil
 import tempfile
-import time
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -102,7 +100,7 @@ def tune_shuffle_partitions(spark: SparkSession, m_edges: int, floor: int | None
 # token (uuid written to meta.json) makes keys unique even when a caller
 # rebuilds into the same shard_dir within one app. Bounded LRU.
 # Shards carry NO per-edge weight: weight = 1/outdeg(src) is a function of
-# src, kept as one n-sized float64 array per task (see _load_inv_od) — this
+# src, kept as one n-sized float64 array per task (ShardedGraph.inv_od) — this
 # cuts the per-edge memory stream from 24 B to 8 B (int32 src + int32 dst),
 # which is what the aggregate SpMV throughput is bound by at high core
 # counts. Float math is bit-identical: 1/outdeg is computed once either way.
@@ -117,7 +115,6 @@ _SHARD_CACHE_BUDGET = int(
     os.environ.get("LINKGRAPH_SHARD_CACHE_BYTES", 4 << 30)
 )
 _SHARD_CACHE_BYTES = 0
-_INV_CACHE: dict[tuple, np.ndarray] = {}
 
 
 def _decode_csr(path: str):
@@ -240,19 +237,6 @@ def _load_uniq(path: str, token: str = "") -> np.ndarray:
     return arr
 
 
-def _load_inv_od(path: str, token: str = "") -> np.ndarray:
-    """Static per-build 1/outdeg array (the hoisted COO data[] of
-    readers/mtx_sparse.h:123-132) — cached per worker, keyed by
-    (path, build token) like _load_shard."""
-    key = (path, token)
-    arr = _INV_CACHE.get(key)
-    if arr is None:
-        if len(_INV_CACHE) > 4:
-            _INV_CACHE.clear()
-        arr = _INV_CACHE[key] = np.load(path)
-    return arr
-
-
 _GATHER_SCRATCH = np.empty(0, dtype=np.float64)
 _OUT_SCRATCH = np.empty(0, dtype=np.float64)
 
@@ -347,8 +331,8 @@ _RANKS_CHUNK = 1 << 20  # rows per Arrow batch (~16 MB)
 
 def _make_ranks_reader(node_ids_path: str, rank_path: str):
     """Arrow kernel: rows are (lo, hi) vertex-segment descriptors; each task
-    mmap-slices the published node_ids.npy / rank.npy (shared storage, same
-    assumption as the iteration loop's rank file) and emits its segment as
+    mmap-slices the published node_ids.npy / rank vector file (shared
+    storage, the same assumption as the shard files) and emits its segment as
     [node, rank] batches — only the slice is ever faulted into memory."""
 
     def read(batches):
@@ -369,93 +353,13 @@ def _make_ranks_reader(node_ids_path: str, rank_path: str):
     return read
 
 
-# k-batched fused-iteration job: ONE row back per job.
-_BATCH_SCHEMA = "rank binary, norms binary, masses binary, iterations int, nnz long, wall_ms double"
-
-
-def _make_batch_step(rank_path: str, ctl_path: str, inv_od_path: str, token: str):
-    """Arrow kernel for the small-graph fused regime: the single task holds
-    EVERY shard (worker-cached CSR — the reference's serial path,
-    pagerank_custom.h:59-96, re-hosted in a reused Python worker), runs up
-    to ctl.k Family-A iterations locally with the exact per-iteration L2
-    stop, and returns the final vector + per-iteration norms as blobs.
-
-    Why: at small m a loop of one Spark job per iteration is bound by the
-    ~0.2-0.6 s job floor (measured), not the kernel; fusing k iterations
-    amortizes the floor k-fold. The combine (part-ascending concat +
-    np.bincount) is the barrier gang's replicated combine, float for
-    float, so results are bit-identical to the gang and iteration counts
-    match the numpy oracle."""
-
-    def step(batches):
-        rows = []
-        for b in batches:
-            rows.extend(zip(b.column("part").to_pylist(), b.column("path").to_pylist()))
-        rows.sort()  # part-ascending — the driver combine's concat order
-        rank = np.load(rank_path)
-        ctl = np.load(ctl_path)  # [k, d, eps, check_convergence, family_b]
-        k, d, eps, check = int(ctl[0]), float(ctl[1]), float(ctl[2]), bool(ctl[3])
-        fam_b = bool(ctl[4]) if len(ctl) > 4 else False
-        inv_od = _load_inv_od(inv_od_path, token)
-        dang = np.flatnonzero(inv_od == 0.0)
-        n = len(rank)
-        shards = [(part, _load_shard(path, token)) for part, path in rows]
-        t0 = time.monotonic()
-        norms, masses = [], []
-        nnz_total = 0
-        for _ in range(k):
-            if fam_b:  # mtx/OCL family: plain teleport base, mass leaks
-                base = (1.0 - d) / n
-            else:
-                leaked = float(rank[dang].sum())
-                base = (leaked + (1.0 - leaked) * (1.0 - d)) / n
-            w_rank = rank * inv_od
-            us, ss = [], []
-            for _part, shard in shards:
-                u, s, nnz = csr_partials(shard, w_rank)
-                us.append(u)
-                ss.append(s)
-                nnz_total += nnz
-            idx = np.concatenate(us) if us else np.empty(0, np.int64)
-            con = np.concatenate(ss) if ss else np.empty(0, np.float64)
-            new = np.full(n, base, dtype=np.float64)
-            if len(idx):
-                new += d * np.bincount(idx, weights=con, minlength=n)
-            norm = float(np.sqrt(((new - rank) ** 2).sum()))
-            norms.append(norm)
-            rank = new
-            masses.append(float(rank.sum()))
-            if check and norm <= eps:
-                break
-        wall_ms = (time.monotonic() - t0) * 1e3
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([rank.tobytes()], pa.binary()),
-                pa.array([np.asarray(norms).tobytes()], pa.binary()),
-                pa.array([np.asarray(masses).tobytes()], pa.binary()),
-                pa.array([len(norms)], pa.int32()),
-                pa.array([nnz_total], pa.int64()),
-                pa.array([wall_ms], pa.float64()),
-            ],
-            names=["rank", "norms", "masses", "iterations", "nnz", "wall_ms"],
-        )
-
-    return step
-
-
-def _shard_paths(spark: SparkSession, shard_dir: str) -> DataFrame:
-    """[part: int, path: string], one row per part dir, part-ascending.
-    ``createDataFrame(list)`` is ``sc.parallelize`` + a Python schema pass
-    (not a local relation), so the frame is persisted: unpersisted, every
-    solve that feeds or collects it would re-run a Python worker over it."""
-    part_dirs = sorted(
+def _shard_paths(shard_dir: str) -> list[tuple[int, str]]:
+    """[(part, path)], one entry per part dir, part-ascending."""
+    return sorted(
         (int(d.split("=")[1]), os.path.join(shard_dir, d))
         for d in os.listdir(shard_dir)
         if d.startswith("part=")
     )
-    shard_df = spark.createDataFrame(part_dirs, "part int, path string").persist()
-    shard_df.count()
-    return shard_df
 
 
 @dataclass
@@ -463,7 +367,7 @@ class ShardedGraph:
     """Edge-balanced + hub-salted shard files ready to iterate."""
 
     spark: SparkSession
-    shard_df: DataFrame  # [part: int, path: string], persisted (_shard_paths)
+    parts: list[tuple[int, str]]  # [(part, path)], part-ascending
     shard_dir: str
     node_ids: np.ndarray  # sorted long[n]; idx = position (driver copy)
     dangling_mask: np.ndarray  # bool[n]
@@ -476,7 +380,6 @@ class ShardedGraph:
     build_token: str = ""  # unique per build; keys the worker-side caches
     weighted: bool = False  # per-edge w stream present; inv_od is a 0/1 mask
     _owns_dir: bool = True
-    _batch_df: DataFrame | None = None
 
     @staticmethod
     def build(
@@ -635,7 +538,6 @@ class ShardedGraph:
         )
         if wedges is not None:
             wedges.unpersist()
-        shard_df = _shard_paths(spark, shard_dir)
 
         # driver-side vertex state (same envelope as the MPI design's
         # per-rank dense vector): 1/outdeg array + dangling mask — the
@@ -664,7 +566,7 @@ class ShardedGraph:
 
         return ShardedGraph(
             spark=spark,
-            shard_df=shard_df,
+            parts=_shard_paths(shard_dir),
             shard_dir=shard_dir,
             node_ids=node_ids,
             dangling_mask=dangling_mask,
@@ -693,7 +595,7 @@ class ShardedGraph:
         node_ids = np.load(os.path.join(shard_dir, "node_ids.npy"))
         return ShardedGraph(
             spark=spark,
-            shard_df=_shard_paths(spark, shard_dir),
+            parts=_shard_paths(shard_dir),
             shard_dir=shard_dir,
             node_ids=node_ids,
             dangling_mask=inv_od == 0.0,
@@ -710,23 +612,10 @@ class ShardedGraph:
             _owns_dir=False,
         )
 
-    @property
-    def rank_path(self) -> str:
-        return os.path.join(self.shard_dir, "rank.npy")
-
-    def _publish_rank(self, rank: np.ndarray) -> None:
-        """Atomically publish the iteration's rank vector for executors
-        (tmp write + rename; the Allgatherv stand-in — on a cluster this
-        file lives on shared storage or becomes a broadcast)."""
-        tmp = self.rank_path + ".tmp.npy"
-        np.save(tmp, rank)
-        os.replace(tmp, self.rank_path)
-
     def publish_vector(self, rank: np.ndarray, name: str | None = None) -> str:
         """Atomically write an n-vector to a UNIQUE file under shard_dir and
-        return its path. Result materializations must NOT read the mutable
-        per-iteration ``rank.npy`` scratch: a later solve on the same graph
-        would silently retarget every earlier lazy result plan."""
+        return its path. A shared file name would let a later solve on the
+        same graph silently retarget every earlier lazy result plan."""
         import uuid
 
         path = os.path.join(
@@ -755,7 +644,7 @@ class ShardedGraph:
         if rank is not None:
             vector_path = self.publish_vector(rank)
         if vector_path is None:
-            vector_path = self.rank_path
+            raise ValueError("ranks_df: give a rank vector or a published vector_path")
         parts = max(
             1,
             min(
@@ -775,50 +664,6 @@ class ShardedGraph:
             _RANKS_SCHEMA,
         )
 
-    @property
-    def ctl_path(self) -> str:
-        return os.path.join(self.shard_dir, "batch_ctl.npy")
-
-    def spmv_batch(self, rank: np.ndarray, k: int, d: float, eps: float,
-                   check_convergence: bool = True, family: str = "a"):
-        """Run up to ``k`` fused iterations in ONE single-task Spark job
-        (see _make_batch_step). ``family`` picks the semantic family
-        (SURVEY §2.8): "a" = per-iteration dangling redistribution, "b" =
-        plain (1-d)/n base with leaking mass (the caller normalizes ONCE
-        after convergence — normalizing mid-run would change the B
-        trajectory). Returns (rank, norms, masses, nnz_total,
-        kernel_wall_ms). Intended for the small-graph regime where the
-        whole CSR fits one worker's cache — pagerank_sharded picks the
-        regime."""
-        self._publish_rank(rank)
-        ctl = np.array([
-            float(k), d, eps, 1.0 if check_convergence else 0.0,
-            1.0 if family == "b" else 0.0,
-        ])
-        tmp = self.ctl_path + ".tmp.npy"
-        np.save(tmp, ctl)
-        os.replace(tmp, self.ctl_path)
-        if self._batch_df is None:
-            feed = self.shard_df.coalesce(1)
-            self._batch_df = feed.mapInArrow(
-                _make_batch_step(
-                    self.rank_path,
-                    self.ctl_path,
-                    os.path.join(self.shard_dir, "inv_od.npy"),
-                    self.build_token,
-                ),
-                _BATCH_SCHEMA,
-            )
-        row = self._batch_df.toPandas().iloc[0]
-        return (
-            np.frombuffer(row["rank"], dtype=np.float64).copy(),
-            np.frombuffer(row["norms"], dtype=np.float64),
-            np.frombuffer(row["masses"], dtype=np.float64),
-            int(row["nnz"]),
-            float(row["wall_ms"]),
-        )
-
     def unpersist(self):
-        self.shard_df.unpersist()
         if self._owns_dir:
             shutil.rmtree(self.shard_dir, ignore_errors=True)

@@ -207,7 +207,7 @@ def test_weighted_runs_on_every_strategy(spark):
     res_b = pagerank(df, strategy="barrier", weight_col="weight", eps=1e-8)
     assert res_b.strategy == "barrier"
     res = pagerank(df, strategy="auto", weight_col="weight", eps=1e-8)
-    assert res.strategy == "sharded"
+    assert res.strategy == "barrier"
     got_b = {r["node"]: r["rank"] for r in res_b.ranks.collect()}
     got = {r["node"]: r["rank"] for r in res.ranks.collect()}
     want = {
