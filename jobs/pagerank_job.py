@@ -49,7 +49,7 @@ def main(argv: list[str] | None = None) -> dict:
         "--family",
         choices=["a", "b"],
         default="a",
-        help="semantic family (dataframe strategy only): a = custom family "
+        help="semantic family: a = custom family "
         "with per-iteration dangling redistribution (the correctness "
         "anchor); b = mtx/OCL family, leak + final sum-normalization "
         "(pagerank_OCL.h:156-161) — for diffing against main_ocl outputs",
@@ -73,16 +73,7 @@ def main(argv: list[str] | None = None) -> dict:
     p.add_argument("--run-id", default=None)
     p.add_argument("--output", default=None, help="parquet path for the rank table")
     p.add_argument("--top-k", type=int, default=0, help="also print top-k actors")
-    p.add_argument(
-        "--mesh", default=None, choices=["auto", "tcp", "shm"],
-        help="barrier mesh transport (default auto: shm when the gang "
-             "shares one host, else TCP full mesh)")
     args = p.parse_args(argv)
-    # fail fast on incompatible flags — BEFORE any (potentially long) graph
-    # build is paid for. auto IS allowed with family b: the dispatch rule
-    # resolves it to the dataframe engine.
-    if args.family != "a" and args.strategy not in ("dataframe", "auto"):
-        p.error("--family b is only implemented for --strategy dataframe")
 
     # Session: when launched by spark-submit the master/conf come from the
     # submit command line; getOrCreate() picks them up. Standalone python
@@ -98,28 +89,17 @@ def main(argv: list[str] | None = None) -> dict:
 
     prebuilt = args.shard_dir and os.path.exists(os.path.join(args.shard_dir, "meta.json"))
 
-    # Resolve the auto strategy from CHEAP scalars (meta.json, or two O(m)
-    # aggregations over the edge table) BEFORE any O(n) driver
+    # Resolve the auto strategy from a CHEAP scalar (meta.json's n, or one
+    # O(m) aggregation over the edge table) BEFORE any O(n) driver
     # materialization or shard build — loading a 10^9-vertex layout's node
     # arrays just to decide to fall back to the dataframe engine would
     # defeat the dense budget the dispatch exists to enforce.
-    strategy = args.strategy
-    if strategy == "auto":
-        from linkgraph.operators.pagerank import choose_strategy
+    from linkgraph.operators.pagerank import choose_strategy
 
-        if prebuilt:
-            with open(os.path.join(args.shard_dir, "meta.json")) as f:
-                meta = json.load(f)
-            n_est, m_est = meta["n"], meta["m"]
-        elif args.family != "a":
-            n_est = m_est = 0  # dataframe regardless; skip the pre-counts
-        else:
-            n_est = m_est = None  # resolved below once edges exist
-        if n_est is not None:
-            strategy = choose_strategy(
-                n_est, m_est, family=args.family,
-                checkpointed=bool(args.checkpoint_dir and args.run_id),
-            )
+    strategy = args.strategy
+    if strategy == "auto" and prebuilt:
+        with open(os.path.join(args.shard_dir, "meta.json")) as f:
+            strategy = choose_strategy(json.load(f)["n"])
 
     t_ingest0 = time.monotonic()
     edges = None
@@ -148,14 +128,10 @@ def main(argv: list[str] | None = None) -> dict:
     ingest_sec = time.monotonic() - t_ingest0
 
     if strategy == "auto":
-        # no prebuilt layout and family a: resolve from the edge table
+        # no prebuilt layout: resolve from the edge table
         from linkgraph.operators.degrees import vertices
-        from linkgraph.operators.pagerank import choose_strategy
 
-        strategy = choose_strategy(
-            vertices(edges).count(), m, family=args.family,
-            checkpointed=bool(args.checkpoint_dir and args.run_id),
-        )
+        strategy = choose_strategy(vertices(edges).count())
     if strategy == "dataframe" and edges is None:
         p.error(
             "auto resolved to the dataframe engine (n exceeds the dense "
@@ -181,7 +157,6 @@ def main(argv: list[str] | None = None) -> dict:
             g = ShardedGraph.build(edges, num_shards=args.num_shards, shard_dir=args.shard_dir)
         m = g.m
         build_sec = time.monotonic() - t0
-        kw = {"mesh_transport": args.mesh} if args.mesh else {}
         t0 = time.monotonic()
         res = pagerank_barrier(
             edges,
@@ -192,7 +167,7 @@ def main(argv: list[str] | None = None) -> dict:
             store=store,
             run_id=args.run_id,
             sharded_graph=g,
-            **kw,
+            family=args.family,
         )
         wall = time.monotonic() - t0
     else:

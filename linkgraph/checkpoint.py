@@ -75,6 +75,26 @@ class ParquetManifestStore:
             json.dump(manifest, f, indent=1)
         os.replace(tmp, self._manifest_path(run_id))  # atomic commit point
 
+    def _commit_iteration(
+        self, run_id: str, iteration: int, rank_path: str,
+        metrics_path: str | None, iter_metrics: dict,
+    ) -> None:
+        """Make one written snapshot visible: replace the iteration's
+        manifest entry (if any) and commit the manifest."""
+        manifest = self._read_manifest(run_id)
+        manifest["iterations"] = [
+            e for e in manifest["iterations"] if e["iteration"] != iteration
+        ] + [
+            {
+                "iteration": iteration,
+                "rank_path": rank_path,
+                "metrics_path": metrics_path,
+                "committed_at": time.time(),
+                **{k: v for k, v in iter_metrics.items() if k != "iteration"},
+            }
+        ]
+        self._commit_manifest(run_id, manifest)
+
     # ---- public API ----
     def latest_iteration(self, run_id: str) -> int | None:
         its = self._read_manifest(run_id)["iterations"]
@@ -95,25 +115,25 @@ class ParquetManifestStore:
         if partition_metrics is not None:
             metrics_path = os.path.join(d, "metrics", f"iter={iteration}")
             partition_metrics.write.mode("overwrite").parquet(metrics_path)
-        manifest = self._read_manifest(run_id)
-        manifest["iterations"] = [
-            e for e in manifest["iterations"] if e["iteration"] != iteration
-        ] + [
-            {
-                "iteration": iteration,
-                "rank_path": rank_path,
-                "metrics_path": metrics_path,
-                "committed_at": time.time(),
-                **{k: v for k, v in iter_metrics.items() if k != "iteration"},
-            }
-        ]
-        self._commit_manifest(run_id, manifest)
+        self._commit_iteration(run_id, iteration, rank_path, metrics_path, iter_metrics)
+
+    def _rank_path(self, run_id: str, iteration: int) -> str:
+        return next(
+            e["rank_path"] for e in self._read_manifest(run_id)["iterations"]
+            if e["iteration"] == iteration
+        )
 
     def read_ranks(self, spark: SparkSession, run_id: str, iteration: int) -> DataFrame:
-        entry = next(
-            e for e in self._read_manifest(run_id)["iterations"] if e["iteration"] == iteration
-        )
-        return spark.read.parquet(entry["rank_path"])
+        return spark.read.parquet(self._rank_path(run_id, iteration))
+
+    def read_rank_arrays(self, spark: SparkSession, run_id: str, iteration: int):
+        """One snapshot as numpy (node, rank) arrays, read on the driver
+        with pyarrow: no Spark job. ``spark`` is unused here; it keeps the
+        signature of IcebergStore.read_rank_arrays."""
+        import pyarrow.parquet as pq
+
+        t = pq.read_table(self._rank_path(run_id, iteration), columns=["node", "rank"])
+        return t.column("node").to_numpy(), t.column("rank").to_numpy()
 
     def read_metrics(self, spark: SparkSession, run_id: str) -> DataFrame | None:
         paths = [
@@ -156,20 +176,9 @@ def write_iteration_arrays(
         os.makedirs(metrics_path, exist_ok=True)
         cols = {k: [m[k] for m in partition_metrics] for k in partition_metrics[0]}
         pq.write_table(pa.table(cols), os.path.join(metrics_path, "part-0.parquet"))
-    store = ParquetManifestStore(root)
-    manifest = store._read_manifest(run_id)
-    manifest["iterations"] = [
-        e for e in manifest["iterations"] if e["iteration"] != iteration
-    ] + [
-        {
-            "iteration": iteration,
-            "rank_path": rank_path,
-            "metrics_path": metrics_path,
-            "committed_at": time.time(),
-            **{k: v for k, v in iter_metrics.items() if k != "iteration"},
-        }
-    ]
-    store._commit_manifest(run_id, manifest)
+    ParquetManifestStore(root)._commit_iteration(
+        run_id, iteration, rank_path, metrics_path, iter_metrics
+    )
 
 
 class IcebergStore:
@@ -211,3 +220,8 @@ class IcebergStore:
         return spark.sql(
             f"SELECT node, rank FROM {self._table(run_id)} WHERE iteration = {iteration}"
         )
+
+    def read_rank_arrays(self, spark, run_id, iteration):
+        """One snapshot as numpy (node, rank) arrays, read through Spark."""
+        snap = self.read_ranks(spark, run_id, iteration).toPandas()
+        return snap["node"].to_numpy(), snap["rank"].to_numpy()

@@ -372,29 +372,18 @@ def pagerank_sharded(edges: DataFrame | None = None, **kw) -> PageRankResult:
     return pagerank_barrier(edges, **kw)
 
 
-def choose_strategy(
-    n: int,
-    m: int = 0,
-    *,
-    family: str = "a",
-    weighted: bool = False,
-    checkpointed: bool = False,
-    dense_budget_bytes: int | None = None,
-) -> str:
+def choose_strategy(n: int, *, dense_budget_bytes: int | None = None) -> str:
     """The regime rule behind ``pagerank(strategy="auto")``, shared with the
     spark-submit job so the CLI can resolve the engine from cheap scalars
-    (meta.json n/m, or two O(m) aggregations) BEFORE any O(n) driver
+    (meta.json n, or one O(m) aggregation) BEFORE any O(n) driver
     materialization — loading a shard layout's node arrays just to decide
-    to fall back to the dataframe engine would defeat the budget. ``m``
-    and the family/weighted/checkpointed flags no longer change the pick;
-    they stay so existing callers keep working."""
+    to fall back to the dataframe engine would defeat the budget."""
     budget = dense_budget_bytes if dense_budget_bytes is not None else DENSE_BUDGET_BYTES
     # family "b" and weighted graphs run through the SAME gang engine (the
     # per-edge weight sidecar + family-aware combine), and the gang beats
     # the deleted single-task batch regime at small m too (341k-edge ingest
     # graph: P=4 gang 0.68 s, batch 1.14 s); only the dense-vector budget
     # and non-integral ids (checked by the caller) force the dataframe plan
-    del m, family, weighted, checkpointed
     return "dataframe" if n * DENSE_BYTES_PER_VERTEX > budget else "barrier"
 
 

@@ -17,18 +17,20 @@ contiguous node blocks per rank             | each task OWNS a contiguous
                                             | of the rank vector
 per-rank partial SpMV + OpenMP              | per-task numpy CSR kernel
 (pagerank_custom_mpi.h:53-60)               | (plans/shards.py csr_partials)
-MPI_Allgatherv re-materializes the dense    | two full-mesh rounds per
-vector on every rank every iteration        | iteration (shm files intra-host,
-(pagerank_custom_mpi.h:62-63)               | TCP sockets across hosts — the
-                                            | same-node/cross-node transport
-                                            | split every MPI stack makes):
-                                            | (1) partial sums
+MPI_Allgatherv re-materializes the dense    | two full-mesh TCP rounds per
+vector on every rank every iteration        | iteration, one communicator for
+(pagerank_custom_mpi.h:62-63)               | every message: (1) partial sums
                                             | routed to their segment OWNER,
                                             | (2) updated segments allgathered
                                             | — O(n/P) per link, all links in
                                             | parallel (the star variant's
                                             | O(n·P) fan-out from task 0 was
-                                            | measured serial-bottlenecked)
+                                            | measured serial-bottlenecked).
+                                            | A one-host gang at large n
+                                            | writes its segments into host-
+                                            | shared /dev/shm rank buffers
+                                            | instead, and round (2) shrinks
+                                            | to scalars
 MPI_Reduce of the norm; rank 0 decides      | per-segment δ² piggybacks on the
 stop and broadcasts done (:65-76)           | segment messages; every task sums
                                             | them and decides IDENTICALLY
@@ -45,7 +47,8 @@ sync floor (a 4-task barrier stage: 0.42 s without a sync, 1.40 s with
 one allGather; the slowest task waited 1.003-1.008 s every time), more
 than the rest of a small solve. The driver registration costs the tasks'
 start stagger (0.06-0.12 s). The RDD's barrier() stays: it is what gang-
-schedules the P tasks.
+schedules the P tasks. The same per-launch secret authenticates the mesh:
+a task accepts a peer connection only after its JSON hello carries it.
 
 Trade-off vs the join-gather path (operators/pagerank.pagerank_dataframe):
 barrier mode needs all P slots simultaneously (gang scheduling), and Spark
@@ -80,9 +83,9 @@ from linkgraph.plans.shards import ShardedGraph, csr_partials
 _MSG_LIMIT = 1 << 34
 
 
-def _send_msg(sock: socket.socket, obj) -> None:
+def _frame(obj) -> bytes:
     data = pickle.dumps(obj, protocol=pickle.HIGHEST_PROTOCOL)
-    sock.sendall(struct.pack("<Q", len(data)) + data)
+    return struct.pack("<Q", len(data)) + data
 
 
 def _recv_exact(sock: socket.socket, size: int) -> bytes:
@@ -112,231 +115,60 @@ def _dir_bytes(path: str) -> int:
     )
 
 
-class _ShmMesh:
-    """Intra-host transport: pickled messages through files on a tmpfs
-    (/dev/shm), write-to-tmp-then-rename for atomicity, spin-then-sleep
-    polling for arrival. The MPI precedent is the shared-memory BTL every
-    MPI stack selects for same-node ranks — the TCP mesh below stays the
-    multi-host data plane, but when every barrier task lands on one host
-    (always true on local[N]; common for small gangs on big executors) the
-    single-round file exchange replaces log2(P) sequential TCP rounds and
-    cuts the per-iteration sync floor by ~an order of magnitude at P=32.
-
-    Collectives are SPMD-ordered (every task calls the same sequence of
-    exchange/allgather), so a per-instance sequence number names each
-    round's files. A task deletes its OWN files two rounds back — by then
-    every reader has provably consumed them (reaching round k requires
-    having completed round k-1, which requires having read all round k-2
-    inputs)."""
-
-    def __init__(self, pid: int, P: int, root: str):
-        self.pid = pid
-        self.P = P
-        self.root = root
-        self.seq = 0
-        self._mine: list[list[str]] = []  # my files per round, for cleanup
-        self._rx: dict[int, int] = {}  # peer -> incoming fifo fd
-        self._tx: dict[int, int] = {}  # peer -> outgoing fifo fd (lazy)
-        os.makedirs(root, exist_ok=True)
-        # One FIFO per ordered peer pair for arrival signaling: a reader
-        # BLOCKS in the kernel on its incoming fifo (zero CPU) instead of
-        # exists()-polling. Polling was measured self-defeating at P=32:
-        # ~20 waiting tasks in 0.2-2 ms sleep/wake loops steal enough CPU
-        # from the still-computing tasks to stretch the very tail the gang
-        # is waiting on (a feedback loop; engine sat at 4-17x the sync-free
-        # control). Protocol: writer renames the payload file THEN writes
-        # one byte to the reader's fifo; one byte <=> one message, in SPMD
-        # round order, so a blocking 1-byte read == "next payload is on
-        # disk". Pipe buffers (64 KiB) never fill at 1 B/round.
-        for q in range(P):
-            if q != pid:
-                try:
-                    os.mkfifo(os.path.join(root, f"f_{q}_{pid}"))
-                except FileExistsError:
-                    pass
-        for q in range(P):
-            if q != pid:
-                # O_NONBLOCK so open succeeds before the writer arrives;
-                # reads themselves block via select() below
-                self._rx[q] = os.open(
-                    os.path.join(root, f"f_{q}_{pid}"),
-                    os.O_RDONLY | os.O_NONBLOCK,
-                )
-
-    def _signal(self, q: int) -> None:
-        fd = self._tx.get(q)
-        if fd is None:
-            # writer-side open blocks with ENXIO until the reader has
-            # opened; the reader opens all incoming fifos in __init__, so
-            # this resolves within the rendezvous window
-            path = os.path.join(self.root, f"f_{self.pid}_{q}")
-            deadline = time.monotonic() + 600
-            while True:
-                try:
-                    fd = os.open(path, os.O_WRONLY | os.O_NONBLOCK)
-                    break
-                except OSError:
-                    if time.monotonic() > deadline:
-                        raise TimeoutError(f"shm mesh: no reader on {path}")
-                    time.sleep(0.001)
-            self._tx[q] = fd
-        os.write(fd, b"\x01")
-
-    def _await_byte(self, q: int, deadline: float) -> None:
-        import select
-
-        fd = self._rx[q]
-        while True:
-            try:
-                if os.read(fd, 1):
-                    return
-            except BlockingIOError:
-                pass
-            timeout = deadline - time.monotonic()
-            if timeout <= 0:
-                raise TimeoutError(f"shm mesh: no signal from peer {q}")
-            select.select([fd], [], [], min(timeout, 60.0))
-
-    def _write(self, name: str, obj) -> str:
-        path = os.path.join(self.root, name)
-        tmp = path + f".tmp{self.pid}"
-        with open(tmp, "wb") as f:
-            f.write(pickle.dumps(obj, protocol=pickle.HIGHEST_PROTOCOL))
-        os.rename(tmp, path)
-        return path
-
-    def _read(self, name: str, peer: int, deadline: float):
-        self._await_byte(peer, deadline)
-        with open(os.path.join(self.root, name), "rb") as f:
-            return pickle.load(f)
-
-    def _round_files(self, written: list[str]):
-        self._mine.append(written)
-        self.seq += 1
-        if len(self._mine) > 2:
-            for path in self._mine.pop(0):
-                try:
-                    os.unlink(path)
-                except OSError:
-                    pass
-
-    def exchange(self, outgoing: dict[int, object]):
-        if self.P == 1:
-            return {}
-        k = self.seq
-        written = []
-        for q, msg in outgoing.items():
-            written.append(self._write(f"s{k}_p{self.pid}_to_{q}", msg))
-            self._signal(q)
-        deadline = time.monotonic() + 600
-        got = {
-            q: self._read(f"s{k}_p{q}_to_{self.pid}", q, deadline)
-            for q in range(self.P)
-            if q != self.pid
-        }
-        self._round_files(written)
-        return got
-
-    def allgather(self, payload) -> dict[int, object]:
-        if self.P == 1:
-            return {self.pid: payload}
-        k = self.seq
-        written = [self._write(f"s{k}_p{self.pid}", payload)]
-        for q in range(self.P):
-            if q != self.pid:
-                self._signal(q)
-        deadline = time.monotonic() + 600
-        got = {
-            q: self._read(f"s{k}_p{q}", q, deadline)
-            for q in range(self.P)
-            if q != self.pid
-        }
-        got[self.pid] = payload
-        self._round_files(written)
-        return got
-
-    def stream_put(self, key, obj) -> None:
-        """Streamed collective, write half: publish one keyed item of the
-        CURRENT round to every peer immediately (called mid-compute, so the
-        transfer overlaps the remaining kernel work). Pairs with
-        stream_collect, which closes the round. One signal byte per peer
-        per item keeps the byte<=>message accounting of the fifo protocol:
-        the reader issues one blocking read per EXPECTED item."""
-        self._stream_written = getattr(self, "_stream_written", [])
-        self._stream_written.append(
-            self._write(f"s{self.seq}_p{self.pid}_{key}", obj)
-        )
-        for q in range(self.P):
-            if q != self.pid:
-                self._signal(q)
-
-    def stream_collect(self, expected: dict[int, list]) -> dict[tuple, object]:
-        """Streamed collective, read half: collect every peer's items for
-        this round. ``expected[q]`` lists peer q's keys in q's write order
-        (deterministic static assignment — every task derives the same
-        lists), so per-peer sequential blocking reads consume signals in
-        order. Returns {(q, key): obj}. Closes the round."""
-        deadline = time.monotonic() + 600
-        got = {}
-        for q in range(self.P):
-            if q == self.pid:
-                continue
-            for key in expected.get(q, ()):
-                got[(q, key)] = self._read(f"s{self.seq}_p{q}_{key}", q, deadline)
-        self._round_files(getattr(self, "_stream_written", []))
-        self._stream_written = []
-        return got
-
-    def close(self):
-        # A task must NOT delete its recent files here — a slower peer may
-        # still be reading the final round (deleting would starve its
-        # read). Each departing task signals pid 0 one final byte; pid 0
-        # waits for every depart signal (bounded) and sweeps the dir.
-        try:
-            if self.pid != 0 and self.P > 1:
-                self._signal(0)
-            elif self.pid == 0:
-                deadline = time.monotonic() + 600
-                try:
-                    for q in range(1, self.P):
-                        self._await_byte(q, deadline)
-                except (TimeoutError, OSError):
-                    pass  # a dead peer fails the stage anyway; still sweep
-        except (TimeoutError, OSError):
-            pass
-        for fd in list(self._rx.values()) + list(self._tx.values()):
-            try:
-                os.close(fd)
-            except OSError:
-                pass
-        if self.pid == 0:
-            shutil.rmtree(self.root, ignore_errors=True)
+def _recv_line(sock: socket.socket, limit: int = 4096) -> bytes:
+    """One newline-terminated line, read byte by byte so nothing the peer
+    sends after it is consumed."""
+    buf = bytearray()
+    while len(buf) < limit:
+        b = sock.recv(1)
+        if not b or b == b"\n":
+            break
+        buf += b
+    return bytes(buf)
 
 
 class _Mesh:
     """Full-mesh TCP peer connections among the P barrier tasks. ``server``
-    is this task's listening socket and ``addrs`` every task's "host:port"
-    in pid order, as the driver rendezvous returned them."""
+    is this task's listening socket, ``addrs`` every task's "host:port" in
+    pid order, as the driver rendezvous returned them, and ``secret`` the
+    launch secret. A connection counts as a peer only after its first line,
+    a JSON hello ``{secret, pid}``, passes ``hmac.compare_digest`` and names
+    a higher pid not yet connected; anything else is closed unread, so no
+    byte from an unauthenticated socket reaches ``pickle.loads``."""
 
-    def __init__(self, pid: int, P: int, server=None, addrs=None):
+    def __init__(self, pid: int, P: int, server=None, addrs=None, secret: str = ""):
         self.pid = pid
         self.P = P
         self.conns: dict[int, socket.socket] = {}
         self._server = server
         if P == 1:
             return
+        hello = json.dumps({"secret": secret, "pid": pid}).encode() + b"\n"
         # connect to lower pids; accept from higher pids
         for q in range(pid):
-            h, p = addrs[q].split(":")
+            h, p = addrs[q].rsplit(":", 1)
             s = socket.create_connection((h, int(p)), timeout=600)
             s.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-            _send_msg(s, {"pid": pid})
+            s.sendall(hello)
             self.conns[q] = s
         while len(self.conns) < P - 1:
             c, _ = self._server.accept()
+            c.settimeout(10)  # a silent hello is dropped, not waited on
+            try:
+                msg = json.loads(_recv_line(c))
+                q = msg["pid"]
+                ok = (
+                    hmac.compare_digest(str(msg["secret"]).encode(), secret.encode())
+                    and type(q) is int and pid < q < P and q not in self.conns
+                )
+            except (OSError, ValueError, TypeError, KeyError):
+                ok = False
+            if not ok:
+                c.close()
+                continue
+            c.settimeout(None)
             c.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-            hello = _recv_msg(c)
-            self.conns[hello["pid"]] = c
+            self.conns[q] = c
 
     def exchange(self, outgoing: dict[int, object]):
         """Send outgoing[q] to each peer q; receive one message from every
@@ -345,14 +177,11 @@ class _Mesh:
         buffers fill). Returns {q: message}."""
         if self.P == 1:
             return {}
-        payloads = {
-            q: pickle.dumps(outgoing[q], protocol=pickle.HIGHEST_PROTOCOL)
-            for q in self.conns
-        }
+        payloads = {q: _frame(outgoing[q]) for q in self.conns}
 
         def _send_all():
             for q, data in payloads.items():
-                self.conns[q].sendall(struct.pack("<Q", len(data)) + data)
+                self.conns[q].sendall(data)
 
         t = threading.Thread(target=_send_all)
         t.start()
@@ -372,11 +201,8 @@ class _Mesh:
             r = 1
             while r < self.P:
                 partner = self.pid ^ r
-                data = pickle.dumps(blocks, protocol=pickle.HIGHEST_PROTOCOL)
                 conn = self.conns[partner]
-                t = threading.Thread(
-                    target=conn.sendall, args=(struct.pack("<Q", len(data)) + data,)
-                )
+                t = threading.Thread(target=conn.sendall, args=(_frame(blocks),))
                 t.start()
                 blocks.update(_recv_msg(conn))
                 t.join()
@@ -393,6 +219,30 @@ class _Mesh:
             self._server.close()
 
 
+_SHM = "/dev/shm"
+
+
+def _host_shared(addrs: list[str], shm_ok: list[bool]) -> bool:
+    """Whether the gang can share its rank buffers through /dev/shm: every
+    task registered from one host, and every task can write there."""
+    return len({a.rsplit(":", 1)[0] for a in addrs}) == 1 and all(shm_ok)
+
+
+def _sweep_stale_roots() -> None:
+    """Remove buffer roots that hard-killed runs left in /dev/shm over two
+    hours ago (each launch names a fresh root, so nothing live is that
+    old)."""
+    now = time.time()
+    for name in os.listdir(_SHM):
+        if name.startswith("lg_mesh_"):
+            path = os.path.join(_SHM, name)
+            try:
+                if now - os.path.getmtime(path) > 7200:
+                    shutil.rmtree(path, ignore_errors=True)
+            except OSError:
+                pass
+
+
 class _Rendezvous:
     """One-shot driver-side registration for one gang launch: a TCP server
     on ``host`` (port 0) served by a daemon thread. Each task sends one JSON
@@ -401,16 +251,19 @@ class _Rendezvous:
     or that does not parse, gets its connection dropped. Nothing received
     is unpickled: this is a listening socket. Once all P pids registered,
     the server stops accepting and every task receives the same JSON reply:
-    the pid-ordered addresses and shm flags, plus the shm mesh root the
-    driver named. ``close`` (a ``finally`` around the stage's collect)
-    closes the server and every accepted socket, so a failed stage leaves
-    no thread, port or shm root behind and no task waits on a dead
-    driver."""
+    the pid-ordered mesh addresses and ``root``, the /dev/shm directory for
+    host-shared rank buffers. ``root`` is null unless the gang asked for
+    shared buffers (``shm``) and ``_host_shared`` holds; pid 0 creates it.
+    ``close`` (a ``finally`` around the stage's collect) closes the server
+    and every accepted socket and removes the root, so a finished or failed
+    stage leaves no thread, port or buffer behind and no task waits on a
+    dead driver."""
 
-    def __init__(self, host: str, P: int):
+    def __init__(self, host: str, P: int, shm: bool = False):
         self.P = P
+        self.shm = shm
         self.secret = secrets.token_hex(16)
-        self.root = "lg_mesh_" + secrets.token_hex(16)
+        self.root = os.path.join(_SHM, "lg_mesh_" + secrets.token_hex(16))
         self._server = socket.create_server((host, 0))
         self._server.settimeout(0.2)  # accept() polls the close flag
         self.address = (host, self._server.getsockname()[1], self.secret)
@@ -453,11 +306,13 @@ class _Rendezvous:
             if len(regs) < self.P:
                 return
             self._server.close()  # the group is complete: stop accepting
-            reply = json.dumps({
-                "addrs": [regs[q][1] for q in range(self.P)],
-                "shm": [regs[q][2] for q in range(self.P)],
-                "root": self.root,
-            }).encode() + b"\n"
+            addrs = [regs[q][1] for q in range(self.P)]
+            shared = self.shm and _host_shared(addrs, [regs[q][2] for q in range(self.P)])
+            if shared:
+                _sweep_stale_roots()
+            reply = json.dumps(
+                {"addrs": addrs, "root": self.root if shared else None}
+            ).encode() + b"\n"
             for q in range(self.P):
                 regs[q][0].sendall(reply)
         except OSError:
@@ -477,9 +332,9 @@ class _Rendezvous:
         self._thread.join()
         for c in self._conns:  # also any accepted while the loop above ran
             c.close()
-        # a failed stage's tasks never swept the shm root; a no-op when the
-        # gang finished (pid 0 removed it) or ran on other hosts
-        shutil.rmtree(os.path.join("/dev/shm", self.root), ignore_errors=True)
+        # the tasks keep their buffer mappings until they exit; the name
+        # goes now (a no-op when no root was granted or created)
+        shutil.rmtree(self.root, ignore_errors=True)
 
 
 def _register(address: tuple, pid: int, addr: str, shm_ok: bool) -> dict:
@@ -497,40 +352,19 @@ def _register(address: tuple, pid: int, addr: str, shm_ok: bool) -> dict:
     return json.loads(line)
 
 
-def _make_mesh(pid: int, P: int, rendezvous: tuple | None, mode: str = "auto"):
-    """Register with the driver, then pick the transport identically on
-    every task from the one reply: same host everywhere + writable
-    /dev/shm => _ShmMesh (single-round tmpfs file exchange, MPI's
-    same-node shared-memory BTL analogue); otherwise the TCP full mesh.
-    mode ("auto"|"tcp"|"shm", default from LINKGRAPH_MESH at the driver)
-    forces a choice — tests use it for transport-parity assertions."""
+def _make_mesh(pid: int, P: int, rendezvous: tuple | None):
+    """Register with the driver and connect the TCP full mesh. Returns the
+    mesh and the driver's buffer root (None: private rank buffers)."""
     if P == 1:
-        return _Mesh(pid, P)
+        return _Mesh(pid, P), None
     host = socket.gethostbyname(socket.gethostname())
-    server = socket.create_server(("", 0))
+    server = socket.create_server((host, 0))  # bound where it registers
     server.settimeout(600)
     reply = _register(
         rendezvous, pid, f"{host}:{server.getsockname()[1]}",
-        os.access("/dev/shm", os.W_OK),
+        os.access(_SHM, os.W_OK),
     )
-    addrs = reply["addrs"]
-    same_host = len({a.split(":")[0] for a in addrs}) == 1
-    if mode == "shm" or (mode != "tcp" and same_host and all(reply["shm"])):
-        server.close()
-        if pid == 0:
-            # insurance against leaked dirs from hard-killed runs (each
-            # launch names a fresh root): sweep stale roots
-            now = time.time()
-            for name in os.listdir("/dev/shm"):
-                if name.startswith("lg_mesh_"):
-                    p = os.path.join("/dev/shm", name)
-                    try:
-                        if now - os.path.getmtime(p) > 7200:
-                            shutil.rmtree(p, ignore_errors=True)
-                    except OSError:
-                        pass
-        return _ShmMesh(pid, P, os.path.join("/dev/shm", reply["root"]))
-    return _Mesh(pid, P, server, addrs)
+    return _Mesh(pid, P, server, reply["addrs"], rendezvous[2]), reply["root"]
 
 
 def pagerank_barrier(
@@ -545,7 +379,6 @@ def pagerank_barrier(
     run_id: str | None = None,
     sharded_graph: ShardedGraph | None = None,
     checkpoint_interval: int = 1,
-    mesh_transport: str | None = None,
     replicate: bool | None = None,
     family: str = "a",
     weight_col: str | None = None,
@@ -582,10 +415,9 @@ def pagerank_barrier(
     rank0 = np.full(n, 1.0 / n, dtype=np.float64)
     if store is not None and run_id is not None and store.latest_iteration(run_id) is not None:
         start_iter = store.latest_iteration(run_id)
-        snap = store.read_ranks(spark, run_id, start_iter).toPandas()
-        idx = np.searchsorted(node_ids, snap["node"].to_numpy())
+        snap_nodes, snap_ranks = store.read_rank_arrays(spark, run_id, start_iter)
         rank0 = np.zeros(n, dtype=np.float64)
-        rank0[idx] = snap["rank"].to_numpy()
+        rank0[np.searchsorted(node_ids, snap_nodes)] = snap_ranks
 
     ckpt_root = store.root if store is not None and run_id is not None else None
     dangling_idx = np.flatnonzero(g.dangling_mask)
@@ -597,10 +429,19 @@ def pagerank_barrier(
     # results' lazy plans are never silently retargeted by a later solve
     # on the same graph
     rank_out = os.path.join(g.shard_dir, f"rank_out_{secrets.token_hex(16)}.npy")
-    transport = mesh_transport or os.environ.get("LINKGRAPH_MESH", "auto")
     parts_sized = [(part, _dir_bytes(path)) for part, path in g.parts]
     tasks = list(range(P))
-    rdv = _Rendezvous(sc.getConf().get("spark.driver.host"), P) if P > 1 else None
+    # Combine strategy by vertex-count regime:
+    # * small n: allgather ALL partials (recursive doubling) and combine
+    #   the full vector on every task — O(n) replicated work is cheap,
+    #   and 2·log2(P) messages beat 4·(P-1) (latency dominates).
+    # * large n: route partials to segment owners, allgather segments —
+    #   replicated combine would cost O(n) numpy + O(n·P) traffic.
+    rep = replicate if replicate is not None else n <= (1 << 19)
+    rdv = (
+        _Rendezvous(sc.getConf().get("spark.driver.host"), P, shm=not rep)
+        if P > 1 else None
+    )
     rendezvous = rdv.address if rdv is not None else None
 
     def run(it_rows):
@@ -613,14 +454,6 @@ def pagerank_barrier(
         rank_init, dang_idx, inv_od, ids = bc.value
         rank = rank_init.copy()
         lo, hi = int(seg_bounds[pid]), int(seg_bounds[pid + 1])
-
-        # Combine strategy by vertex-count regime:
-        # * small n: allgather ALL partials (recursive doubling) and combine
-        #   the full vector on every task — O(n) replicated work is cheap,
-        #   and 2·log2(P) messages beat 4·(P-1) (latency dominates).
-        # * large n: route partials to segment owners, allgather segments —
-        #   replicated combine would cost O(n) numpy + O(n·P) traffic.
-        rep = replicate if replicate is not None else n <= (1 << 19)
 
         # Static deterministic LPT assignment, identical on every task:
         # shards sorted by bytes desc, each assigned to the least-loaded
@@ -635,31 +468,13 @@ def pagerank_barrier(
         size_of = dict(parts_sized)
         order_desc = [pp for pp, _sz in sorted(parts_sized, key=lambda x: (-x[1], x[0]))]
         load = [0.0] * P
-        # full assignment (not just own): every task derives the same
-        # per-peer part lists, which is what lets the streamed partial
-        # exchange below know exactly which keyed items to await from whom
-        assign: list[list[int]] = [[] for _ in range(P)]
+        mine_parts = []
         for part in order_desc:
             q = min(range(P), key=lambda i: (load[i] + size_of[part], i))
             load[q] += size_of[part]
-            assign[q].append(part)
-        mine_parts = assign[pid]
-        mesh = _make_mesh(pid, P, rendezvous, transport)
-        # Streamed partial exchange (replicate + shm mesh): each shard's
-        # sums are published the moment the kernel finishes them, so the
-        # transfer overlaps the remaining compute and the gang's critical
-        # path waits only on the slowest task's LAST shard — not on a bulk
-        # post-kernel write+read of its whole share. Receivers know which
-        # keys to await from the static assignment. Only pays when there
-        # is compute to overlap: per item it costs ~P fifo writes + a file
-        # create, so a task whose whole kernel share is a few ms (tiny
-        # graphs at high P) is better off with the single bulk round —
-        # gate on per-task shard bytes.
-        stream_min = int(os.environ.get("LINKGRAPH_STREAM_MIN_BYTES", 32 << 20))
-        streamed = (
-            rep and P > 1 and isinstance(mesh, _ShmMesh)
-            and sum(size_of.values()) // P >= stream_min
-        )
+            if q == pid:
+                mine_parts.append(part)
+        mesh, root = _make_mesh(pid, P, rendezvous)
 
         def base_of(old: np.ndarray) -> float:
             if fam_b:
@@ -668,8 +483,8 @@ def pagerank_barrier(
             return (leaked + (1.0 - leaked) * (1.0 - d)) / n
 
         try:
-            # Shared rank buffers (segment-routed path, same-host mesh):
-            # ONE ping/pong pair of n-vector mmaps on the mesh tmpfs holds
+            # Shared rank buffers (segment-routed path, one-host gang):
+            # ONE ping/pong pair of n-vector mmaps on /dev/shm holds
             # rank and w=rank·inv_od; each task writes only its own
             # [lo,hi) segment (no races) and every task's gather reads the
             # SAME physical pages. This is Spark-broadcast semantics for
@@ -679,16 +494,17 @@ def pagerank_barrier(
             # at n=4M: 32-proc aggregate gather 2.05G/s shared vs 1.62G/s
             # private, self-relative efficiency 0.87 vs 0.37 — see
             # BENCH/BASELINE.md). The per-iteration exchange shrinks to
-            # one scalar plus lineage per task: writing your segment IS
-            # the allgather. tmpfs pages cannot be hugepage-backed here
+            # one scalar plus lineage per task over TCP: writing your
+            # segment IS the allgather. tmpfs pages cannot be hugepage-backed here
             # (shmem_enabled=never), which costs ~2x single-proc gather
             # TLB overhead vs THP-backed private arrays — the right trade
             # exactly when n·P exceeds LLC, which is the regime this path
             # is selected for.
-            shared = (not rep) and isinstance(mesh, _ShmMesh)
+            shared = root is not None
             if shared:
-                bufs = [os.path.join(mesh.root, f"vec{p}.buf") for p in (0, 1)]
+                bufs = [os.path.join(root, f"vec{p}.buf") for p in (0, 1)]
                 if pid == 0:
+                    os.mkdir(root, 0o700)
                     for b in bufs:
                         with open(b, "wb") as f:
                             f.truncate(2 * n * 8)  # [rank | w] halves
@@ -700,6 +516,10 @@ def pagerank_barrier(
                 vecs[cur][0, lo:hi] = rank[lo:hi]
                 vecs[cur][1, lo:hi] = rank[lo:hi] * inv_seg
                 mesh.allgather(None)  # all segments written
+                if pid == 0:
+                    # every task has mapped both buffers: the mappings
+                    # outlive the names, so nothing stays in /dev/shm
+                    shutil.rmtree(root, ignore_errors=True)
             my_metrics: list[dict] = []
             iter_log: list[dict] = []
 
@@ -748,8 +568,6 @@ def pagerank_barrier(
                     tk = time.monotonic()
                     u, s, nnz = csr_partials(_load_shard(path_of[part], build_token), w_rank)
                     per_shard.append((part, u, s))
-                    if streamed:
-                        mesh.stream_put(part, s)
                     pmet.append(
                         {"part_id": part, "nnz": nnz, "rows": len(u),
                          "wall_ms": (time.monotonic() - tk) * 1e3}
@@ -758,33 +576,21 @@ def pagerank_barrier(
 
                 if rep:
                     # (2, replicated) every task collects {part: sums} from
-                    # every peer — streamed items closed by a metrics item,
-                    # or one allgather — and combines the full vector in
-                    # canonical part-ascending order: same floats, same
-                    # order regardless of who computed what => identical
-                    # stop decisions and checkpoint-equal vectors, invariant
-                    # to P and to the exchange. Only the per-iteration sums
+                    # every peer in one allgather and combines the full
+                    # vector in canonical part-ascending order: same floats,
+                    # same order regardless of who computed what =>
+                    # identical stop decisions and checkpoint-equal vectors,
+                    # invariant to P. Only the per-iteration sums
                     # go on the wire — the loop-invariant uniq-dst arrays
                     # are resolved locally from the shard sidecars
                     # (_load_uniq, page-cache-shared), halving the mesh
                     # volume of the route step.
                     sums_by_part = {p: s for p, _u, s in per_shard}
                     met_by_pid = {pid: pmet}
-                    if streamed:
-                        mesh.stream_put("met", pmet)
-                        got = mesh.stream_collect(
-                            {q: assign[q] + ["met"] for q in range(P) if q != pid}
-                        )
-                        for (q, key), obj in got.items():
-                            if key == "met":
-                                met_by_pid[q] = obj
-                            else:
-                                sums_by_part[key] = obj
-                    else:
-                        blocks = mesh.allgather((list(sums_by_part.items()), pmet))
-                        for q, (q_sums, q_met) in blocks.items():
-                            sums_by_part.update(q_sums)
-                            met_by_pid[q] = q_met
+                    blocks = mesh.allgather((list(sums_by_part.items()), pmet))
+                    for q, (q_sums, q_met) in blocks.items():
+                        sums_by_part.update(q_sums)
+                        met_by_pid[q] = q_met
                     t_route = time.monotonic()
                     parts_sorted = sorted(sums_by_part)
                     new = np.full(n, base_of(rank), dtype=np.float64)
@@ -827,7 +633,7 @@ def pagerank_barrier(
                     # local. leaked is computed from the full OLD rank —
                     # gathered from the shared buffer (shared path) or the
                     # private copy: the SAME dang_idx order over the same
-                    # floats either way, so shm-shared and tcp-private
+                    # floats either way, so shared and private
                     # vectors stay bit-identical and every task reaches the
                     # same stop decision.
                     old_full = vecs[cur][0] if shared else rank
@@ -891,8 +697,7 @@ def pagerank_barrier(
                     record(it, norm, full, met_by_pid, t0, t_kernel, t_route, done)
                 if done:
                     if shared and pid == 0:
-                        # materialize before mesh.close() sweeps the tmpfs
-                        rank = np.array(vecs[nxt][0])
+                        rank = np.array(vecs[nxt][0])  # the vector to publish
                     break
 
             if pid == 0:

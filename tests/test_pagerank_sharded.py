@@ -310,6 +310,50 @@ def test_gang_task_count_bit_identical_and_checkpoints(spark, tmp_path):
     g.unpersist()
 
 
+def test_resumed_gang_runs_one_spark_job(spark, tmp_path):
+    """A resume on a prebuilt layout reads its snapshot on the driver with
+    pyarrow, so the gang is the call's only Spark job."""
+    from linkgraph.checkpoint import ParquetManifestStore
+
+    src, dst, n = fx.karate_club()
+    g = ShardedGraph.build(fx.edges_df(spark, src, dst), num_shards=4)
+    store = ParquetManifestStore(str(tmp_path / "ckpt"))
+    pagerank_barrier(sharded_graph=g, eps=1e-9, max_iter=5, store=store, run_id="j")
+    sc = spark.sparkContext
+    sc.setJobGroup("test-resume-jobs", "resumed gang")
+    try:
+        res = pagerank_barrier(
+            sharded_graph=g, eps=1e-9, max_iter=300, store=store, run_id="j"
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("test-resume-jobs")
+    full = pagerank_barrier(sharded_graph=g, eps=1e-9, max_iter=300)
+    assert res.iterations == full.iterations
+    assert np.array_equal(_vec(res), _vec(full))
+    g.unpersist()
+    assert len(jobs) == 1, f"{len(jobs)} jobs"
+
+
+def test_read_rank_arrays_matches_the_spark_read(spark, tmp_path):
+    """The driver-side snapshot read returns what ``read_ranks`` returns,
+    also for a multi-file snapshot Spark wrote."""
+    from linkgraph.checkpoint import ParquetManifestStore
+
+    src, dst, n = fx.karate_club()
+    store = ParquetManifestStore(str(tmp_path / "ckpt"))
+    pagerank_dataframe(
+        fx.edges_df(spark, src, dst).repartition(3), eps=1e-9, max_iter=2,
+        store=store, run_id="d",
+    )
+    nodes, ranks = store.read_rank_arrays(spark, "d", 2)
+    want = store.read_ranks(spark, "d", 2).toPandas().sort_values("node")
+    order = np.argsort(nodes)
+    assert np.array_equal(nodes[order], want["node"].to_numpy())
+    assert np.array_equal(ranks[order], want["rank"].to_numpy())
+
+
 def test_auto_dispatch_regimes(spark, tmp_path):
     """`pagerank(strategy="auto")` must (a) pick the barrier gang at
     contract scale, (b) fall back to the UNBOUNDED dataframe plan when n
@@ -437,9 +481,9 @@ def test_weighted_family_b_combined(spark):
 def test_weighted_auto_dispatch_and_guards(spark):
     from linkgraph.operators.pagerank import choose_strategy, pagerank
 
-    # weighted / family b no longer force the dataframe plan
-    assert choose_strategy(100, 100, weighted=True) == "barrier"
-    assert choose_strategy(100, 100, family="b") == "barrier"
+    # weighted / family b no longer force the dataframe plan: only n does
+    assert choose_strategy(100) == "barrier"
+    assert choose_strategy(100, dense_budget_bytes=1) == "dataframe"
     src, dst, n = fx.karate_club()
     df = _weighted_df(spark, src, dst)
     res = pagerank(df, eps=1e-8, weight_col="wt")

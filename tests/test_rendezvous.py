@@ -1,10 +1,12 @@
 """The gang's driver-side rendezvous (plans/barrier._Rendezvous): tasks
 register their mesh endpoint over one TCP connection to the driver and all
-receive the same pid-ordered reply; anything without the launch secret is
-refused, and closing the server releases every waiting task."""
+receive the same pid-ordered reply, with a /dev/shm buffer root only for a
+one-host gang that asked for shared buffers; anything without the launch
+secret is refused, and closing the server releases every waiting task."""
 
 import os
 import random
+import shutil
 import socket
 import threading
 import time
@@ -20,35 +22,41 @@ def _rendezvous_threads():
     return [t for t in threading.enumerate() if t.name == "linkgraph-rendezvous"]
 
 
-def test_rendezvous_replies_in_pid_order():
-    P = 4
-    rdv = _Rendezvous("127.0.0.1", P)
+def _register_all(rdv, addrs, shm_ok, order):
     replies, errors = {}, []
 
     def register(pid):
         try:
-            replies[pid] = _register(rdv.address, pid, f"h{pid}:{7000 + pid}", pid != 2)
-        except Exception as e:  # surfaced by the asserts below
+            replies[pid] = _register(rdv.address, pid, addrs[pid], shm_ok[pid])
+        except Exception as e:  # surfaced by the callers' asserts
             errors.append(e)
 
+    threads = []
+    for pid in order:
+        t = threading.Thread(target=register, args=(pid,))
+        t.start()
+        threads.append(t)
+        time.sleep(0.02)
+    for t in threads:
+        t.join(30)
+    assert not errors
+    return replies
+
+
+def test_rendezvous_replies_in_pid_order():
+    P = 4
+    rdv = _Rendezvous("127.0.0.1", P, shm=True)
     order = list(range(P))
     random.Random(5).shuffle(order)
     try:
-        threads = []
-        for pid in order:
-            t = threading.Thread(target=register, args=(pid,))
-            t.start()
-            threads.append(t)
-            time.sleep(0.02)
-        for t in threads:
-            t.join(30)
-        assert not errors
+        replies = _register_all(
+            rdv, [f"h{q}:{7000 + q}" for q in range(P)], [True] * P, order
+        )
         assert sorted(replies) == list(range(P))
         for reply in replies.values():
             assert reply == {
                 "addrs": [f"h{q}:{7000 + q}" for q in range(P)],
-                "shm": [q != 2 for q in range(P)],
-                "root": rdv.root,
+                "root": None,  # four hosts: no shared buffers
             }
         # the group is complete: the server no longer accepts
         with pytest.raises(ConnectionError):
@@ -56,6 +64,30 @@ def test_rendezvous_replies_in_pid_order():
     finally:
         rdv.close()
     assert not rdv._thread.is_alive()
+
+
+def test_rendezvous_grants_a_buffer_root_to_a_one_host_gang():
+    addrs = [f"127.0.0.1:{7000 + q}" for q in range(3)]
+    stale = f"/dev/shm/lg_mesh_stale_{os.getpid()}"
+    os.makedirs(stale)
+    os.utime(stale, (time.time() - 3 * 3600,) * 2)
+    try:
+        for shm, shm_ok, granted in (
+            (True, [True] * 3, True),
+            (True, [True, False, True], False),  # one task cannot write there
+            (False, [True] * 3, False),  # the replicated path asks for none
+        ):
+            rdv = _Rendezvous("127.0.0.1", 3, shm=shm)
+            try:
+                replies = _register_all(rdv, addrs, shm_ok, [2, 0, 1])
+            finally:
+                rdv.close()
+            root = rdv.root if granted else None
+            assert [r["root"] for r in replies.values()] == [root] * 3
+            assert not os.path.exists(rdv.root)  # named, not created
+        assert not os.path.exists(stale)  # swept when a root was granted
+    finally:
+        shutil.rmtree(stale, ignore_errors=True)
 
 
 def test_rendezvous_refuses_wrong_secret_and_garbage():
