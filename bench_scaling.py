@@ -424,13 +424,9 @@ probes (no Spark, no engine):
 Fix (linkgraph/plans/shards.py csr_partials): the gather+segment-reduce
 is fused over 16K-edge tiles with a precomputed per-shard tile plan
 (cross-tile segment carry); only the 4 B/edge src stream leaves the
-core. Two sync-path reductions followed: the replicate-mode exchange
-ships only per-iteration sums (static uniq-dst arrays resolve locally
-from page-cache-shared sidecars), and with the shm mesh each shard's
-sums stream to peers the moment its kernel finishes — transfer overlaps
-compute, and the gang waits only on the slowest task's LAST shard.
-Combine order is part-ascending on every path: bit-identical vectors
-and stop decisions.
+core. The gang has one combine: each shard's partial sums go to the
+owner of their vertex segment, which combines them part-ascending, so
+vectors and stop decisions are bit-identical for every task count.
 
 ## Scaling evidence: concurrent disjoint-core pairs (weather-cancelling)
 

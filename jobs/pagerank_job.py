@@ -216,16 +216,6 @@ def main(argv: list[str] | None = None) -> dict:
         # resolved engine (auto dispatch records its pick), not the flag
         "strategy": getattr(res, "strategy", "") or strategy,
     }
-    if os.environ.get("LG_DEBUG_ITERS"):
-        import statistics as _st
-
-        ms = res.iter_metrics
-        for k in ("wall_ms", "kernel_ms", "route_ms", "comb_ms"):
-            vals = [m[k] for m in ms if k in m]
-            if vals:
-                out[f"dbg_{k}_median"] = round(_st.median(vals), 1)
-                out[f"dbg_{k}_max"] = round(max(vals), 1)
-        out["dbg_first3_wall"] = [round(m["wall_ms"], 1) for m in ms[:3]]
     if args.top_k:
         from linkgraph.operators.pagerank import top_k
 

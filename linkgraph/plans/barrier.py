@@ -17,24 +17,25 @@ contiguous node blocks per rank             | each task OWNS a contiguous
                                             | of the rank vector
 per-rank partial SpMV + OpenMP              | per-task numpy CSR kernel
 (pagerank_custom_mpi.h:53-60)               | (plans/shards.py csr_partials)
-MPI_Allgatherv re-materializes the dense    | two full-mesh TCP rounds per
-vector on every rank every iteration        | iteration, one communicator for
-(pagerank_custom_mpi.h:62-63)               | every message: (1) partial sums
-                                            | routed to their segment OWNER,
-                                            | (2) updated segments allgathered
-                                            | — O(n/P) per link, all links in
-                                            | parallel (the star variant's
-                                            | O(n·P) fan-out from task 0 was
-                                            | measured serial-bottlenecked).
-                                            | A one-host gang at large n
-                                            | writes its segments into host-
-                                            | shared /dev/shm rank buffers
-                                            | instead, and round (2) shrinks
-                                            | to scalars
+MPI_Allgatherv re-materializes the dense    | one combine, over one TCP full
+vector on every rank every iteration        | mesh: (1) one route round sends
+(pagerank_custom_mpi.h:62-63)               | each shard's partial sums to the
+                                            | OWNER of their [lo, hi) segment,
+                                            | which combines them in part-
+                                            | ascending order (so the floats
+                                            | do not depend on P) and updates
+                                            | its segment; (2) the vector is
+                                            | reassembled either by a write
+                                            | into host-shared /dev/shm rank
+                                            | buffers (one-host gang; the
+                                            | round carries only scalars) or
+                                            | by a segment allgather — O(n/P)
+                                            | per link, all links in parallel
 MPI_Reduce of the norm; rank 0 decides      | per-segment δ² piggybacks on the
-stop and broadcasts done (:65-76)           | segment messages; every task sums
-                                            | them and decides IDENTICALLY
-                                            | (same floats, same order)
+stop and broadcasts done (:65-76)           | round (2) messages; every task
+                                            | sums them and decides
+                                            | IDENTICALLY (same floats, same
+                                            | order)
 
 Why not per-iteration Spark jobs here: a driver-synchronized loop pays task
 dispatch + result collection (~0.2-0.5 s) every iteration, which caps
@@ -78,7 +79,7 @@ import time
 
 import numpy as np
 
-from linkgraph.plans.shards import ShardedGraph, csr_partials
+from linkgraph.plans.shards import ShardedGraph, csr_partials, save_npy_atomic
 
 _MSG_LIMIT = 1 << 34
 
@@ -189,29 +190,6 @@ class _Mesh:
         t.join()
         return got
 
-    def allgather(self, payload) -> dict[int, object]:
-        """Everyone ends with every task's payload. Recursive doubling when
-        P is a power of two (MPI's allgather: log2(P) pairwise exchanges —
-        per-message latency dominates at these sizes, so 2·log2(P) messages
-        beat the mesh's 2·(P-1)); mesh broadcast otherwise."""
-        if self.P == 1:
-            return {self.pid: payload}
-        if self.P & (self.P - 1) == 0:
-            blocks = {self.pid: payload}
-            r = 1
-            while r < self.P:
-                partner = self.pid ^ r
-                conn = self.conns[partner]
-                t = threading.Thread(target=conn.sendall, args=(_frame(blocks),))
-                t.start()
-                blocks.update(_recv_msg(conn))
-                t.join()
-                r <<= 1
-            return blocks
-        got = self.exchange({q: payload for q in self.conns})
-        got[self.pid] = payload
-        return got
-
     def close(self):
         for c in self.conns.values():
             c.close()
@@ -252,16 +230,15 @@ class _Rendezvous:
     is unpickled: this is a listening socket. Once all P pids registered,
     the server stops accepting and every task receives the same JSON reply:
     the pid-ordered mesh addresses and ``root``, the /dev/shm directory for
-    host-shared rank buffers. ``root`` is null unless the gang asked for
-    shared buffers (``shm``) and ``_host_shared`` holds; pid 0 creates it.
+    host-shared rank buffers. ``root`` is null unless ``_host_shared``
+    holds; pid 0 creates it.
     ``close`` (a ``finally`` around the stage's collect) closes the server
     and every accepted socket and removes the root, so a finished or failed
     stage leaves no thread, port or buffer behind and no task waits on a
     dead driver."""
 
-    def __init__(self, host: str, P: int, shm: bool = False):
+    def __init__(self, host: str, P: int):
         self.P = P
-        self.shm = shm
         self.secret = secrets.token_hex(16)
         self.root = os.path.join(_SHM, "lg_mesh_" + secrets.token_hex(16))
         self._server = socket.create_server((host, 0))
@@ -307,7 +284,7 @@ class _Rendezvous:
                 return
             self._server.close()  # the group is complete: stop accepting
             addrs = [regs[q][1] for q in range(self.P)]
-            shared = self.shm and _host_shared(addrs, [regs[q][2] for q in range(self.P)])
+            shared = _host_shared(addrs, [regs[q][2] for q in range(self.P)])
             if shared:
                 _sweep_stale_roots()
             reply = json.dumps(
@@ -379,7 +356,6 @@ def pagerank_barrier(
     run_id: str | None = None,
     sharded_graph: ShardedGraph | None = None,
     checkpoint_interval: int = 1,
-    replicate: bool | None = None,
     family: str = "a",
     weight_col: str | None = None,
 ):
@@ -431,23 +407,13 @@ def pagerank_barrier(
     rank_out = os.path.join(g.shard_dir, f"rank_out_{secrets.token_hex(16)}.npy")
     parts_sized = [(part, _dir_bytes(path)) for part, path in g.parts]
     tasks = list(range(P))
-    # Combine strategy by vertex-count regime:
-    # * small n: allgather ALL partials (recursive doubling) and combine
-    #   the full vector on every task — O(n) replicated work is cheap,
-    #   and 2·log2(P) messages beat 4·(P-1) (latency dominates).
-    # * large n: route partials to segment owners, allgather segments —
-    #   replicated combine would cost O(n) numpy + O(n·P) traffic.
-    rep = replicate if replicate is not None else n <= (1 << 19)
-    rdv = (
-        _Rendezvous(sc.getConf().get("spark.driver.host"), P, shm=not rep)
-        if P > 1 else None
-    )
+    rdv = _Rendezvous(sc.getConf().get("spark.driver.host"), P) if P > 1 else None
     rendezvous = rdv.address if rdv is not None else None
 
     def run(it_rows):
         from pyspark import BarrierTaskContext
 
-        from linkgraph.plans.shards import _load_shard, _load_uniq
+        from linkgraph.plans.shards import _load_shard
 
         pid = BarrierTaskContext.get().partitionId()
         list(it_rows)  # drain; partition index IS the task id
@@ -483,7 +449,7 @@ def pagerank_barrier(
             return (leaked + (1.0 - leaked) * (1.0 - d)) / n
 
         try:
-            # Shared rank buffers (segment-routed path, one-host gang):
+            # Shared rank buffers (one-host gang):
             # ONE ping/pong pair of n-vector mmaps on /dev/shm holds
             # rank and w=rank·inv_od; each task writes only its own
             # [lo,hi) segment (no races) and every task's gather reads the
@@ -498,8 +464,8 @@ def pagerank_barrier(
             # segment IS the allgather. tmpfs pages cannot be hugepage-backed here
             # (shmem_enabled=never), which costs ~2x single-proc gather
             # TLB overhead vs THP-backed private arrays — the right trade
-            # exactly when n·P exceeds LLC, which is the regime this path
-            # is selected for.
+            # exactly when n·P exceeds LLC; below that both buffer kinds
+            # measure within noise (BENCH/BASELINE.md).
             shared = root is not None
             if shared:
                 bufs = [os.path.join(root, f"vec{p}.buf") for p in (0, 1)]
@@ -508,14 +474,14 @@ def pagerank_barrier(
                     for b in bufs:
                         with open(b, "wb") as f:
                             f.truncate(2 * n * 8)  # [rank | w] halves
-                mesh.allgather(None)  # buffers exist
+                mesh.exchange({q: None for q in mesh.conns})  # buffers exist
                 vecs = [np.memmap(b, dtype=np.float64, mode="r+", shape=(2, n))
                         for b in bufs]
                 inv_seg = inv_od[lo:hi]
                 cur = start_iter & 1
                 vecs[cur][0, lo:hi] = rank[lo:hi]
                 vecs[cur][1, lo:hi] = rank[lo:hi] * inv_seg
-                mesh.allgather(None)  # all segments written
+                mesh.exchange({q: None for q in mesh.conns})  # segments written
                 if pid == 0:
                     # every task has mapped both buffers: the mappings
                     # outlive the names, so nothing stays in /dev/shm
@@ -533,11 +499,9 @@ def pagerank_barrier(
                 entry = {"iteration": it_no, "norm": norm, "mass": float(full.sum()),
                          "wall_ms": (now - t0) * 1e3,
                          "kernel_ms": (t_kernel - t0) * 1e3,
-                         "route_ms": (t_route - t_kernel) * 1e3}
-                if rep:
-                    entry["comb_ms"] = (now - t_route) * 1e3
-                entry["partitions"] = len(all_met)
-                entry["nnz"] = int(sum(mm["nnz"] for mm in all_met))
+                         "route_ms": (t_route - t_kernel) * 1e3,
+                         "partitions": len(all_met),
+                         "nnz": int(sum(mm["nnz"] for mm in all_met))}
                 iter_log.append(entry)
                 if ckpt_root is not None and (done or it_no % checkpoint_interval == 0):
                     from linkgraph.checkpoint import write_iteration_arrays
@@ -574,120 +538,84 @@ def pagerank_barrier(
                     )
                 t_kernel = time.monotonic()
 
-                if rep:
-                    # (2, replicated) every task collects {part: sums} from
-                    # every peer in one allgather and combines the full
-                    # vector in canonical part-ascending order: same floats,
-                    # same order regardless of who computed what =>
-                    # identical stop decisions and checkpoint-equal vectors,
-                    # invariant to P. Only the per-iteration sums
-                    # go on the wire — the loop-invariant uniq-dst arrays
-                    # are resolved locally from the shard sidecars
-                    # (_load_uniq, page-cache-shared), halving the mesh
-                    # volume of the route step.
-                    sums_by_part = {p: s for p, _u, s in per_shard}
-                    met_by_pid = {pid: pmet}
-                    blocks = mesh.allgather((list(sums_by_part.items()), pmet))
-                    for q, (q_sums, q_met) in blocks.items():
-                        sums_by_part.update(q_sums)
-                        met_by_pid[q] = q_met
-                    t_route = time.monotonic()
-                    parts_sorted = sorted(sums_by_part)
-                    new = np.full(n, base_of(rank), dtype=np.float64)
-                    if parts_sorted:
-                        all_u = np.concatenate(
-                            [_load_uniq(path_of[p], build_token) for p in parts_sorted]
-                        )
-                        all_s = np.concatenate([sums_by_part[p] for p in parts_sorted])
-                        if len(all_u):
-                            new += d * np.bincount(all_u, weights=all_s, minlength=n)
-                    nsq = float(((new - rank) ** 2).sum())
-                    rank = full = new
-                else:
-                    # (2) route partial slices to their segment owners (mesh
-                    # round 1 — the scatter half of Allgatherv); each
-                    # shard's uniq-dst array is sorted, so the slice owned
-                    # by task q is one searchsorted range
-                    shard_routes = [np.searchsorted(u, seg_bounds) for (_p, u, _s) in per_shard]
-                    outgoing = {}
+                # (2) route each shard's partial slices to their segment
+                # owners (one mesh round — the scatter half of
+                # Allgatherv); each shard's uniq-dst array is sorted, so
+                # the slice owned by task q is one searchsorted range.
+                # Pieces carry their part id: the owner combines them
+                # part-ascending, so the floats do not depend on which
+                # task computed which shard, nor on P.
+                pieces = {q: [] for q in range(P)}
+                for part, u, s in per_shard:
+                    c = np.searchsorted(u, seg_bounds)
                     for q in range(P):
-                        if q == pid:
-                            continue
-                        pieces = [
-                            (u[c[q]:c[q + 1]], s[c[q]:c[q + 1]])
-                            for (_p, u, s), c in zip(per_shard, shard_routes)
-                            if c[q + 1] > c[q]
-                        ]
-                        outgoing[q] = pieces
-                    mine = [
-                        (u[c[pid]:c[pid + 1]], s[c[pid]:c[pid + 1]])
-                        for (_p, u, s), c in zip(per_shard, shard_routes)
-                        if c[pid + 1] > c[pid]
-                    ]
-                    received = mesh.exchange(outgoing)
-                    for q in sorted(received):  # deterministic combine order
-                        mine.extend(received[q])
-                    t_route = time.monotonic()
+                        if c[q + 1] > c[q]:
+                            pieces[q].append((part, u[c[q]:c[q + 1]], s[c[q]:c[q + 1]]))
+                mine = pieces.pop(pid)
+                for q_pieces in mesh.exchange(pieces).values():
+                    mine.extend(q_pieces)
+                mine.sort(key=lambda piece: piece[0])
+                t_route = time.monotonic()
 
-                    # (3) owner update of [lo, hi): base + d·contrib, δ²
-                    # local. leaked is computed from the full OLD rank —
-                    # gathered from the shared buffer (shared path) or the
-                    # private copy: the SAME dang_idx order over the same
-                    # floats either way, so shared and private
-                    # vectors stay bit-identical and every task reaches the
-                    # same stop decision.
-                    old_full = vecs[cur][0] if shared else rank
-                    seg = np.full(hi - lo, base_of(old_full), dtype=np.float64)
-                    if mine:
-                        all_u = np.concatenate([u for u, _ in mine])
-                        all_s = np.concatenate([s for _, s in mine])
-                        seg += d * np.bincount(all_u - lo, weights=all_s, minlength=hi - lo)
-                    dsq = float(((seg - old_full[lo:hi]) ** 2).sum())
+                # (3) owner update of [lo, hi): base + d·contrib, δ²
+                # local. leaked is computed from the full OLD rank —
+                # gathered from the shared buffer (shared path) or the
+                # private copy: the SAME dang_idx order over the same
+                # floats either way, so shared and private
+                # vectors stay bit-identical and every task reaches the
+                # same stop decision.
+                old_full = vecs[cur][0] if shared else rank
+                seg = np.full(hi - lo, base_of(old_full), dtype=np.float64)
+                if mine:
+                    all_u = np.concatenate([u for _p, u, _s in mine])
+                    all_s = np.concatenate([s for _p, _u, s in mine])
+                    seg += d * np.bincount(all_u - lo, weights=all_s, minlength=hi - lo)
+                dsq = float(((seg - old_full[lo:hi]) ** 2).sum())
 
-                    if shared:
-                        # (4, shared) write own segment into the next-parity
-                        # host-shared buffer — that IS the allgather; only
-                        # scalars + lineage go through the mesh. The scalar
-                        # exchange doubles as the barrier that keeps parity
-                        # reuse safe: a task reaches iteration k+2
-                        # (overwriting parity k) only after every peer sent
-                        # its k+1 scalars, i.e. after every read of parity
-                        # k has completed.
-                        vecs[nxt][0, lo:hi] = seg
-                        vecs[nxt][1, lo:hi] = seg * inv_seg
-                        got = mesh.exchange(
-                            {q: (dsq, pmet) for q in range(P) if q != pid}
-                        )
-                        full = vecs[nxt][0]
-                    else:
-                        # (4) allgather segments (mesh round 2) — every task
-                        # re-materializes the full vector, as the
-                        # reference's Allgatherv does
-                        # (pagerank_custom_mpi.h:62-63); per-shard lineage
-                        # metrics piggyback so task 0 logs ALL partitions
-                        segs = mesh.exchange(
-                            {q: (seg, dsq, pmet) for q in range(P) if q != pid}
-                        )
-                        rank = full = np.empty(n, dtype=np.float64)
-                        rank[lo:hi] = seg
-                        got = {}
-                        for q, (qseg, qdsq, qmet) in segs.items():
-                            rank[int(seg_bounds[q]):int(seg_bounds[q + 1])] = qseg
-                            got[q] = (qdsq, qmet)
-                    dsq_by_pid = {pid: dsq}
-                    met_by_pid = {pid: pmet}
-                    for q, (qdsq, qmet) in got.items():
-                        dsq_by_pid[q] = qdsq
-                        met_by_pid[q] = qmet
-                    # accumulate δ² in FIXED global pid order (own dsq
-                    # included at its sorted position, not first): every
-                    # task sums the same floats in the same order, so a
-                    # last-ulp difference cannot make tasks disagree on
-                    # `converged` — a divergent stop decision would
-                    # deadlock the mesh.
-                    nsq = 0.0
-                    for q in sorted(dsq_by_pid):
-                        nsq += dsq_by_pid[q]
+                if shared:
+                    # (4, shared) write own segment into the next-parity
+                    # host-shared buffer — that IS the allgather; only
+                    # scalars + lineage go through the mesh. The scalar
+                    # exchange doubles as the barrier that keeps parity
+                    # reuse safe: a task reaches iteration k+2
+                    # (overwriting parity k) only after every peer sent
+                    # its k+1 scalars, i.e. after every read of parity
+                    # k has completed.
+                    vecs[nxt][0, lo:hi] = seg
+                    vecs[nxt][1, lo:hi] = seg * inv_seg
+                    got = mesh.exchange(
+                        {q: (dsq, pmet) for q in range(P) if q != pid}
+                    )
+                    full = vecs[nxt][0]
+                else:
+                    # (4) allgather segments (mesh round 2) — every task
+                    # re-materializes the full vector, as the
+                    # reference's Allgatherv does
+                    # (pagerank_custom_mpi.h:62-63); per-shard lineage
+                    # metrics piggyback so task 0 logs ALL partitions
+                    segs = mesh.exchange(
+                        {q: (seg, dsq, pmet) for q in range(P) if q != pid}
+                    )
+                    rank = full = np.empty(n, dtype=np.float64)
+                    rank[lo:hi] = seg
+                    got = {}
+                    for q, (qseg, qdsq, qmet) in segs.items():
+                        rank[int(seg_bounds[q]):int(seg_bounds[q + 1])] = qseg
+                        got[q] = (qdsq, qmet)
+                dsq_by_pid = {pid: dsq}
+                met_by_pid = {pid: pmet}
+                for q, (qdsq, qmet) in got.items():
+                    dsq_by_pid[q] = qdsq
+                    met_by_pid[q] = qmet
+                # accumulate δ² in FIXED global pid order (own dsq
+                # included at its sorted position, not first): every
+                # task sums the same floats in the same order, so a
+                # last-ulp difference cannot make tasks disagree on
+                # `converged` — a divergent stop decision would
+                # deadlock the mesh.
+                nsq = 0.0
+                for q in sorted(dsq_by_pid):
+                    nsq += dsq_by_pid[q]
 
                 norm = float(np.sqrt(nsq))
                 converged = bool(check_convergence and norm <= eps)
@@ -711,9 +639,7 @@ def pagerank_barrier(
                 # instead of yielding the n-array through collect(): the
                 # driver materializes the result table DISTRIBUTED via
                 # ShardedGraph.ranks_df — no O(n) driver serialization.
-                tmp = rank_out + f".tmp{os.getpid()}.npy"
-                np.save(tmp, rank)
-                os.replace(tmp, rank_out)
+                save_npy_atomic(rank_out, rank)
                 yield {"kind": "result", "iterations": it,
                        "norm": norm, "converged": converged, "iter_log": iter_log}
             yield {"kind": "task", "pid": pid, "metrics": my_metrics}

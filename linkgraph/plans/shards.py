@@ -143,6 +143,15 @@ def _decode_csr(path: str):
     return src_s, uniq, starts, w
 
 
+def save_npy_atomic(path: str, arr: np.ndarray) -> None:
+    """Write ``arr`` to ``path`` through a per-process tmp file and an
+    atomic rename: a reader never sees a partial file, and concurrent
+    writers of the same array are idempotent."""
+    tmp = path + f".tmp{os.getpid()}.npy"
+    np.save(tmp, arr)
+    os.replace(tmp, path)
+
+
 def load_csr_shard(path: str):
     """One shard in iteration-ready CSR form: src sorted by dst, plus the
     STATIC dst segment index (unique dst values + start offsets — the CSR
@@ -168,9 +177,7 @@ def load_csr_shard(path: str):
         for arr, dest in (
             (uniq, uniq_p), (starts, starts_p), (wt, w_p), (src_s, src_p)
         ):
-            tmp = dest + f".tmp{os.getpid()}.npy"
-            np.save(tmp, arr)
-            os.replace(tmp, dest)
+            save_npy_atomic(dest, arr)
     src_s = np.load(src_p)
     uniq = np.load(uniq_p)
     starts = np.load(starts_p)
@@ -209,32 +216,6 @@ def _ent_nbytes(ent) -> int:
         + (wt.nbytes if wt is not None else 0)
         + sum(a.nbytes for a in plan)
     )
-
-
-_UNIQ_CACHE: dict[tuple, np.ndarray] = {}
-
-
-def _load_uniq(path: str, token: str = "") -> np.ndarray:
-    """Just a shard's static uniq-dst array (csr_uniq.npy sidecar), without
-    decoding the full CSR. Lets the barrier combine resolve destination
-    indices for shards OTHER tasks computed — partial exchanges then ship
-    only the per-iteration sums, not the loop-invariant uniq arrays (halves
-    the per-iteration mesh volume). Tiny (n_dst×8 B) and page-cache-shared
-    across tasks; cached per worker like _load_shard."""
-    key = (path, token)
-    arr = _UNIQ_CACHE.get(key)
-    if arr is None:
-        ent = _SHARD_CACHE.get(key)
-        if ent is not None:
-            arr = ent[1]
-        elif os.path.exists(os.path.join(path, "csr_uniq.npy")):
-            arr = np.load(os.path.join(path, "csr_uniq.npy"))
-        else:  # sidecars not yet written (fresh build): full decode path
-            arr = _load_shard(path, token)[1]
-        if len(_UNIQ_CACHE) > 4096:
-            _UNIQ_CACHE.clear()
-        _UNIQ_CACHE[key] = arr
-    return arr
 
 
 _GATHER_SCRATCH = np.empty(0, dtype=np.float64)
@@ -621,9 +602,7 @@ class ShardedGraph:
         path = os.path.join(
             self.shard_dir, name or f"rank_out_{uuid.uuid4().hex}.npy"
         )
-        tmp = path + f".tmp{os.getpid()}.npy"
-        np.save(tmp, rank)
-        os.replace(tmp, path)
+        save_npy_atomic(path, rank)
         return path
 
     def ranks_df(

@@ -12,6 +12,7 @@ exponential regression (100+ s for these rounds) cannot pass.
 from __future__ import annotations
 
 import time
+import warnings
 
 from pyspark.sql import functions as F
 
@@ -69,3 +70,17 @@ def test_cut_preserves_values(spark):
         a = cut(_round(a, tiny, i))
         b = _round(b, tiny, i).localCheckpoint(eager=True)
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+
+
+def test_cut_takes_the_internal_create_dataframe_path(spark):
+    """Canary for the private-API fast path: on this runtime cut() re-wraps
+    the checkpoint through internalCreateDataFrame instead of falling back
+    to the bare checkpoint, which warns once and sets _WARNED_FALLBACK."""
+    from linkgraph import lineage
+
+    assert lineage._WARNED_FALLBACK is False
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        out = cut(spark.range(10))
+    assert lineage._WARNED_FALLBACK is False
+    assert sorted(r.id for r in out.collect()) == list(range(10))

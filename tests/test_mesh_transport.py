@@ -1,8 +1,8 @@
 """The gang's one transport: the TCP full mesh (plans/barrier._Mesh) carries
-every message, and a one-host gang on the segment-routed path shares its
-rank buffers through /dev/shm. Shared and private buffers must produce
-identical PageRank vectors and iteration counts — the Spark analogue of the
-reference racing its serial/OMP/OCL/MPI implementations against each other
+every message, and a one-host gang shares its rank buffers through
+/dev/shm. Shared and private buffers must produce identical PageRank
+vectors and iteration counts — the Spark analogue of the reference racing
+its serial/OMP/OCL/MPI implementations against each other
 (/root/reference/main.c:109-112) — and mesh peers must authenticate before
 anything they send is unpickled."""
 
@@ -34,27 +34,17 @@ def test_shared_and_private_buffers_identical(spark, monkeypatch):
         return granted[-1]
 
     monkeypatch.setattr(barrier, "_host_shared", record)
-    a = pagerank_barrier(df, eps=1e-9, num_tasks=4, num_shards=4, replicate=False)
+    a = pagerank_barrier(df, eps=1e-9, num_tasks=4, num_shards=4)
     assert granted == [True]  # one host, /dev/shm writable: shared buffers
     monkeypatch.setattr(barrier, "_host_shared", lambda *a: False)
-    b = pagerank_barrier(df, eps=1e-9, num_tasks=4, num_shards=4, replicate=False)
+    b = pagerank_barrier(df, eps=1e-9, num_tasks=4, num_shards=4)
     assert a.iterations == b.iterations
     # same exchange, same combine order => same floats
     assert np.array_equal(_vec(a), _vec(b))
 
 
-def test_replicate_and_routed_paths_allclose(spark):
-    """The two combine strategies differ in FP summation order, so they are
-    compared at the engine's contract tolerance, not bit-exactly."""
-    src, dst, n = fx.toy_chain_dangling()
-    df = fx.edges_df(spark, src, dst)
-    a = pagerank_barrier(df, eps=1e-9, num_tasks=3, replicate=True)
-    b = pagerank_barrier(df, eps=1e-9, num_tasks=3, replicate=False)
-    assert np.allclose(_vec(a), _vec(b), atol=1e-9, rtol=0)
-
-
 def test_shared_buffer_resume_equals_uninterrupted(spark, tmp_path):
-    """Segment-routed on one host => host-shared ping/pong rank buffers. A
+    """A one-host gang => host-shared ping/pong rank buffers. A
     run interrupted at iteration k and resumed must land on the same vector
     as an uninterrupted run (same floats: the shared path reads/writes the
     same values the private path holds, in the same order)."""
@@ -64,52 +54,23 @@ def test_shared_buffer_resume_equals_uninterrupted(spark, tmp_path):
     df = fx.edges_df(spark, src, dst)
     store = ParquetManifestStore(str(tmp_path / "ckpt"))
     pagerank_barrier(
-        df, eps=1e-9, max_iter=5, num_tasks=3, store=store, run_id="sb",
-        replicate=False,
+        df, eps=1e-9, max_iter=5, num_tasks=3, store=store, run_id="sb"
     )
     assert store.latest_iteration("sb") == 5
     resumed = pagerank_barrier(
-        df, eps=1e-9, max_iter=300, num_tasks=3, store=store, run_id="sb",
-        replicate=False,
+        df, eps=1e-9, max_iter=300, num_tasks=3, store=store, run_id="sb"
     )
-    full = pagerank_barrier(df, eps=1e-9, max_iter=300, num_tasks=3, replicate=False)
+    full = pagerank_barrier(df, eps=1e-9, max_iter=300, num_tasks=3)
     assert resumed.iterations == full.iterations
     assert np.array_equal(_vec(resumed), _vec(full))
 
 
-def _watch_shm(pre: set):
-    """Poll /dev/shm for lg_mesh_* names not in ``pre`` until stopped."""
-    seen, stop = set(), threading.Event()
-
-    def poll():
-        while not stop.is_set():
-            seen.update(set(glob.glob("/dev/shm/lg_mesh_*")) - pre)
-            stop.wait(0.002)
-
-    t = threading.Thread(target=poll, daemon=True)
-    t.start()
-
-    def finish():
-        stop.set()
-        t.join()
-        return seen
-
-    return finish
-
-
-def test_shared_buffers_leave_nothing_and_replicated_creates_nothing(spark):
+def test_shared_buffers_leave_nothing_in_dev_shm(spark):
     pre = set(glob.glob("/dev/shm/lg_mesh_*"))  # killed runs may leak dirs
     src, dst, n = fx.toy_cycle()
     df = fx.edges_df(spark, src, dst)
-    pagerank_barrier(df, eps=1e-8, num_tasks=4, replicate=False)
+    pagerank_barrier(df, eps=1e-8, num_tasks=4)
     assert set(glob.glob("/dev/shm/lg_mesh_*")) - pre == set()
-
-    finish = _watch_shm(pre)
-    try:
-        pagerank_barrier(df, eps=1e-8, num_tasks=4, replicate=True)
-    finally:
-        created = finish()
-    assert created == set()
 
 
 _UNPICKLED = threading.Event()

@@ -269,45 +269,57 @@ def test_resume_barrier(spark, tmp_path):
 
 
 def test_gang_task_count_bit_identical_and_checkpoints(spark, tmp_path):
-    """A one-task gang and a four-task gang on the same layout share the
-    part-ascending replicated combine, so they produce identical floats
-    and iteration counts; the in-job checkpoints of a stopped solve let a
-    later call resume to the same fixed point."""
+    """One-, three- and four-task gangs on the same layout combine every
+    vertex's partial sums part-ascending at its segment owner, so they
+    produce identical floats and iteration counts — also on a hub-salted
+    layout, where a hub's in-edges span several parts that different
+    tasks compute; the in-job checkpoints of a stopped solve let a later
+    call resume to the same fixed point."""
     from linkgraph.checkpoint import ParquetManifestStore
+    from linkgraph.sources import derive_edges, generate_transcripts
 
     src, dst, n = fx.karate_club()
-    df = fx.edges_df(spark, src, dst)
-    g = ShardedGraph.build(df, num_shards=3)
-    rb = pagerank_sharded(df, eps=1e-9, max_iter=300, sharded_graph=g, num_tasks=1)
-    rf = pagerank_sharded(df, eps=1e-9, max_iter=300, sharded_graph=g, num_tasks=4)
-    assert rb.strategy == rf.strategy == "barrier"
-    assert rf.iterations == rb.iterations
-    vb = {r["node"]: r["rank"] for r in rb.ranks.collect()}
-    vf = {r["node"]: r["rank"] for r in rf.ranks.collect()}
-    assert vb.keys() == vf.keys()
-    assert np.array_equal(
-        np.array([vb[k] for k in sorted(vb)]), np.array([vf[k] for k in sorted(vf)])
-    ), "gang floats must not depend on the task count"
+    karate = fx.edges_df(spark, src, dst)
+    salted = derive_edges(generate_transcripts(spark, n_convs=5000, seed=11))
+    salted = salted.select("src", "dst")
+    for name, df, build_kw in (
+        ("karate", karate, {"num_shards": 3}),
+        ("salted", salted, {"num_shards": 6, "hub_salt_factor": 0.3}),
+    ):
+        g = ShardedGraph.build(df, **build_kw)
+        if name == "salted":
+            assert g.hub_count > 0  # a hub's in-edges really span parts
+        rb = pagerank_sharded(df, eps=1e-9, max_iter=300, sharded_graph=g, num_tasks=1)
+        vb = {r["node"]: r["rank"] for r in rb.ranks.collect()}
+        for P in (3, 4):
+            rf = pagerank_sharded(df, eps=1e-9, max_iter=300, sharded_graph=g, num_tasks=P)
+            assert rb.strategy == rf.strategy == "barrier"
+            assert rf.iterations == rb.iterations, (name, P)
+            vf = {r["node"]: r["rank"] for r in rf.ranks.collect()}
+            assert vb.keys() == vf.keys()
+            assert np.array_equal(
+                np.array([vb[k] for k in sorted(vb)]), np.array([vf[k] for k in sorted(vf)])
+            ), f"gang floats must not depend on the task count ({name}, P={P})"
 
-    # the gang checkpoints every iteration and a later call resumes from
-    # the manifest
-    store = ParquetManifestStore(str(tmp_path / "ckpt"))
-    half = pagerank_sharded(
-        df, eps=1e-9, max_iter=6, store=store, run_id="f", sharded_graph=g
-    )
-    assert half.iterations == 6
-    assert store.latest_iteration("f") == 6
-    resumed = pagerank_sharded(
-        df, eps=1e-9, max_iter=300, store=store, run_id="f", sharded_graph=g
-    )
-    assert resumed.iterations == rb.iterations
-    vr = {r["node"]: r["rank"] for r in resumed.ranks.collect()}
-    assert np.allclose(
-        np.array([vb[k] for k in sorted(vb)]),
-        np.array([vr[k] for k in sorted(vr)]),
-        atol=1e-9, rtol=0,
-    )
-    g.unpersist()
+        # the gang checkpoints every iteration and a later call resumes from
+        # the manifest
+        store = ParquetManifestStore(str(tmp_path / f"ckpt_{name}"))
+        half = pagerank_sharded(
+            df, eps=1e-9, max_iter=6, store=store, run_id="f", sharded_graph=g
+        )
+        assert half.iterations == 6
+        assert store.latest_iteration("f") == 6
+        resumed = pagerank_sharded(
+            df, eps=1e-9, max_iter=300, store=store, run_id="f", sharded_graph=g
+        )
+        assert resumed.iterations == rb.iterations
+        vr = {r["node"]: r["rank"] for r in resumed.ranks.collect()}
+        assert np.allclose(
+            np.array([vb[k] for k in sorted(vb)]),
+            np.array([vr[k] for k in sorted(vr)]),
+            atol=1e-9, rtol=0,
+        )
+        g.unpersist()
 
 
 def test_resumed_gang_runs_one_spark_job(spark, tmp_path):

@@ -1,7 +1,7 @@
 """The gang's driver-side rendezvous (plans/barrier._Rendezvous): tasks
 register their mesh endpoint over one TCP connection to the driver and all
 receive the same pid-ordered reply, with a /dev/shm buffer root only for a
-one-host gang that asked for shared buffers; anything without the launch
+one-host gang whose tasks can all write there; anything without the launch
 secret is refused, and closing the server releases every waiting task."""
 
 import os
@@ -45,7 +45,7 @@ def _register_all(rdv, addrs, shm_ok, order):
 
 def test_rendezvous_replies_in_pid_order():
     P = 4
-    rdv = _Rendezvous("127.0.0.1", P, shm=True)
+    rdv = _Rendezvous("127.0.0.1", P)
     order = list(range(P))
     random.Random(5).shuffle(order)
     try:
@@ -72,12 +72,11 @@ def test_rendezvous_grants_a_buffer_root_to_a_one_host_gang():
     os.makedirs(stale)
     os.utime(stale, (time.time() - 3 * 3600,) * 2)
     try:
-        for shm, shm_ok, granted in (
-            (True, [True] * 3, True),
-            (True, [True, False, True], False),  # one task cannot write there
-            (False, [True] * 3, False),  # the replicated path asks for none
+        for shm_ok, granted in (
+            ([True] * 3, True),
+            ([True, False, True], False),  # one task cannot write there
         ):
-            rdv = _Rendezvous("127.0.0.1", 3, shm=shm)
+            rdv = _Rendezvous("127.0.0.1", 3)
             try:
                 replies = _register_all(rdv, addrs, shm_ok, [2, 0, 1])
             finally:
