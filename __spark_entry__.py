@@ -293,7 +293,7 @@ def q_pagerank(spark, sf_dir):
     """Full converged PageRank (loop — rows-only check; exactness is pinned
     by tests/ against the numpy oracle instead). Routes through the
     regime-dispatching ``pagerank`` entry point: at contract scale it picks
-    the fused sharded batch engine; above the dense-vector budget it would
+    the barrier gang; above the dense-vector budget it would
     fall back to the unbounded dataframe plan (round-2 VERDICT #1)."""
     from linkgraph.operators.pagerank import pagerank
 
@@ -909,16 +909,16 @@ def q_pagerank_b_k5(spark, sf_dir):
 
 
 def q_pagerank_ws_k5(spark, sf_dir):
-    """Weighted PageRank through the SHARDED CSR engine (plans/shards.py
+    """Weighted PageRank through the barrier gang (plans/shards.py
     per-edge weight sidecar — the reference's COO data[] slot,
-    readers/mtx_sparse.h:123-132 — + the barrier gang), five fixed
+    readers/mtx_sparse.h:123-132 — in the CSR kernel), five fixed
     Family-A iterations on the same reply-count-weighted graph as
     q_pagerank_w_k5. Node names are densified via xxhash64 for the dense
     vector layout and mapped back before returning, so the SAME
     unrolled-CTE oracle value-checks the fast path — driver-level proof
     that the weighted kernel (gather ∘ weight-stream multiply ∘ segment
     reduce) computes the identical recurrence."""
-    from linkgraph.operators.pagerank import pagerank_sharded
+    from linkgraph.plans.barrier import pagerank_barrier
 
     edges = (
         _user_transition_edges(spark, sf_dir)
@@ -930,7 +930,7 @@ def q_pagerank_ws_k5(spark, sf_dir):
         F.xxhash64("dst").alias("dst"),
         "weight",
     )
-    res = pagerank_sharded(
+    res = pagerank_barrier(
         ids, eps=0.0, max_iter=5, check_convergence=False, weight_col="weight"
     )
     names = (
@@ -945,19 +945,19 @@ def q_pagerank_ws_k5(spark, sf_dir):
 
 
 def q_pagerank_bs_k5(spark, sf_dir):
-    """Family-B PageRank through the SHARDED engine (the gang's
+    """Family-B PageRank through the barrier gang (its
     family-aware combine: plain (1-d)/n base, leaking mass, ONE final
     sum-normalization at publish), five fixed iterations on
     the same bipartite graph as q_pagerank_b_k5, names densified via
     xxhash64 and mapped back — the second semantic family's fast path,
     value-checked by the same unrolled-CTE B oracle."""
-    from linkgraph.operators.pagerank import pagerank_sharded
+    from linkgraph.plans.barrier import pagerank_barrier
 
     edges = _bipartite_edges(spark, sf_dir)
     ids = edges.select(
         F.xxhash64("src").alias("src"), F.xxhash64("dst").alias("dst")
     )
-    res = pagerank_sharded(
+    res = pagerank_barrier(
         ids, eps=0.0, max_iter=5, check_convergence=False, family="b"
     )
     names = (

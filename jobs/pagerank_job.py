@@ -57,11 +57,10 @@ def main(argv: list[str] | None = None) -> dict:
     p.add_argument("--num-shards", type=int, default=None)
     p.add_argument(
         "--strategy",
-        choices=["auto", "barrier", "sharded", "dataframe"],
+        choices=["auto", "barrier", "dataframe"],
         default="barrier",
         help="physical engine; auto picks by regime (n over the dense "
-        "budget -> dataframe, else barrier); sharded is an older name of "
-        "barrier",
+        "budget -> dataframe, else barrier)",
     )
     p.add_argument(
         "--shard-dir",
@@ -103,7 +102,7 @@ def main(argv: list[str] | None = None) -> dict:
 
     t_ingest0 = time.monotonic()
     edges = None
-    if not (prebuilt and strategy in ("auto", "barrier", "sharded")):
+    if not (prebuilt and strategy in ("auto", "barrier")):
         if args.edges:
             edges = spark.read.parquet(args.edges).select("src", "dst")
         else:
@@ -146,7 +145,7 @@ def main(argv: list[str] | None = None) -> dict:
     # (/root/reference/main.c:32-33,55-61)
     build_sec = 0.0
     g = None
-    if strategy in ("barrier", "sharded"):
+    if strategy == "barrier":
         from linkgraph.plans.barrier import pagerank_barrier
         from linkgraph.plans.shards import ShardedGraph
 

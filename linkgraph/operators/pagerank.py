@@ -20,8 +20,7 @@ Two physical strategies, identical semantics (allclose 1e-6 asserted in tests):
   reference loops over all i∈[0,n), pagerank_custom.h:81). This path has no
   driver-size assumptions — it is the unbounded-scale fallback.
 
-* ``pagerank_barrier`` (plans/barrier.py; ``pagerank_sharded`` is the same
-  engine under its older name) — partitioned-CSR gather-scatter in numpy
+* ``pagerank_barrier`` (plans/barrier.py) — partitioned-CSR gather-scatter in numpy
   kernels over salted, edge-balanced adjacency shards (plans/shards.py),
   the idiomatic analogue of the reference's MPI design
   (main_mpi.c:67-154): the whole loop runs in one barrier gang whose
@@ -363,28 +362,18 @@ def personalized_pagerank(
     )
 
 
-def pagerank_sharded(edges: DataFrame | None = None, **kw) -> PageRankResult:
-    """The gang engine under its older name: ``plans/barrier.pagerank_barrier``
-    with the same keyword arguments. The contract queries, the CLI's
-    ``--strategy sharded`` and tests call it by this name."""
-    from linkgraph.plans.barrier import pagerank_barrier
-
-    return pagerank_barrier(edges, **kw)
-
-
-def choose_strategy(n: int, *, dense_budget_bytes: int | None = None) -> str:
+def choose_strategy(n: int) -> str:
     """The regime rule behind ``pagerank(strategy="auto")``, shared with the
     spark-submit job so the CLI can resolve the engine from cheap scalars
     (meta.json n, or one O(m) aggregation) BEFORE any O(n) driver
     materialization — loading a shard layout's node arrays just to decide
     to fall back to the dataframe engine would defeat the budget."""
-    budget = dense_budget_bytes if dense_budget_bytes is not None else DENSE_BUDGET_BYTES
     # family "b" and weighted graphs run through the SAME gang engine (the
     # per-edge weight sidecar + family-aware combine), and the gang beats
     # the deleted single-task batch regime at small m too (341k-edge ingest
     # graph: P=4 gang 0.68 s, batch 1.14 s); only the dense-vector budget
     # and non-integral ids (checked by the caller) force the dataframe plan
-    return "dataframe" if n * DENSE_BYTES_PER_VERTEX > budget else "barrier"
+    return "dataframe" if n * DENSE_BYTES_PER_VERTEX > DENSE_BUDGET_BYTES else "barrier"
 
 
 def pagerank(
@@ -399,7 +388,6 @@ def pagerank(
     strategy: str = "auto",
     sharded_graph=None,
     num_shards: int | None = None,
-    dense_budget_bytes: int | None = None,
     weight_col: str | None = None,
 ) -> PageRankResult:
     """Flagship entry point: pick the physical strategy by regime, so no
@@ -408,7 +396,7 @@ def pagerank(
     (allclose 1e-6 pinned in tests); the dispatch only changes the physical
     plan:
 
-    * n over the dense-vector budget (``dense_budget_bytes``, default
+    * n over the dense-vector budget (``DENSE_BUDGET_BYTES``, default
       LINKGRAPH_DENSE_BUDGET_BYTES / 16 GiB ≈ 5×10^8 vertices), or
       non-integral ids → ``pagerank_dataframe`` — the unbounded join-gather
       plan with no driver-size assumptions.
@@ -416,11 +404,9 @@ def pagerank(
       exchange happens executor-to-executor inside ONE barrier stage (no
       per-iteration Spark job floor), checkpoints via ``store``.
 
-    ``strategy`` forces a specific engine ("dataframe" | "barrier";
-    "sharded" is an older spelling of "barrier"); "auto" applies the
-    regime rules above. The chosen engine is recorded in
+    ``strategy`` forces a specific engine ("dataframe" | "barrier");
+    "auto" applies the regime rules above. The chosen engine is recorded in
     ``PageRankResult.strategy``."""
-    budget = dense_budget_bytes if dense_budget_bytes is not None else DENSE_BUDGET_BYTES
     if edges is None and (sharded_graph is None or strategy == "dataframe"):
         raise ValueError(
             "pagerank: an edge table is required unless a prebuilt "
@@ -440,7 +426,7 @@ def pagerank(
             # the rule needs only n: free from a layout, else one cheap
             # O(m) aggregation, one-time vs. the whole run
             n_est = sharded_graph.n if sharded_graph is not None else vertices(edges).count()
-            strategy = choose_strategy(n_est, dense_budget_bytes=budget)
+            strategy = choose_strategy(n_est)
         if strategy == "dataframe" and edges is None:
             raise ValueError(
                 f"pagerank: n={n_est} exceeds the dense-vector budget and "
@@ -454,7 +440,7 @@ def pagerank(
             check_convergence=check_convergence, store=store, run_id=run_id,
             family=family, weight_col=weight_col,
         )
-    if strategy in ("barrier", "sharded"):
+    if strategy == "barrier":
         from linkgraph.plans.barrier import pagerank_barrier
 
         return pagerank_barrier(

@@ -10,8 +10,9 @@ mpirun gang-starts W ranks                  | one barrier() stage of P tasks
                                             | the TorchDistributor/Horovod
                                             | pattern: barrier for rendezvous,
                                             | framework-owned data plane)
-CSR block scattered once, resident per rank | shard parquet files read once per
-(main_mpi.c:122-126)                        | task, resident numpy CSR arrays
+CSR block scattered once, resident per rank | each task loads its LPT-assigned
+(main_mpi.c:122-126)                        | shards once, before the loop, and
+                                            | keeps the numpy CSR arrays
 contiguous node blocks per rank             | each task OWNS a contiguous
 (main_mpi.c:88-108)                         | vertex segment [n·p/P, n·(p+1)/P)
                                             | of the rank vector
@@ -61,7 +62,7 @@ tolerates executor churn.
 Checkpointing: task 0 (which holds the full assembled vector after round 2)
 writes rank snapshots + per-partition lineage/metrics in the exact
 ParquetManifestStore layout (checkpoint.py) via pyarrow — manifest-committed
-per checkpoint interval, resumable mid-convergence (north rule).
+every iteration, resumable mid-convergence (north rule).
 """
 
 from __future__ import annotations
@@ -79,7 +80,9 @@ import time
 
 import numpy as np
 
-from linkgraph.plans.shards import ShardedGraph, csr_partials, save_npy_atomic
+from linkgraph.plans.shards import (
+    ShardedGraph, csr_partials, load_csr_shard, save_npy_atomic,
+)
 
 _MSG_LIMIT = 1 << 34
 
@@ -355,7 +358,6 @@ def pagerank_barrier(
     store=None,
     run_id: str | None = None,
     sharded_graph: ShardedGraph | None = None,
-    checkpoint_interval: int = 1,
     family: str = "a",
     weight_col: str | None = None,
 ):
@@ -399,7 +401,6 @@ def pagerank_barrier(
     dangling_idx = np.flatnonzero(g.dangling_mask)
     bc = sc.broadcast((rank0, dangling_idx, g.inv_od, node_ids if ckpt_root else None))
     path_of = dict(g.parts)
-    build_token = g.build_token  # keys the worker shard cache per build
 
     # task 0 publishes the final vector here — a UNIQUE file, so earlier
     # results' lazy plans are never silently retargeted by a later solve
@@ -413,12 +414,9 @@ def pagerank_barrier(
     def run(it_rows):
         from pyspark import BarrierTaskContext
 
-        from linkgraph.plans.shards import _load_shard
-
         pid = BarrierTaskContext.get().partitionId()
         list(it_rows)  # drain; partition index IS the task id
         rank_init, dang_idx, inv_od, ids = bc.value
-        rank = rank_init.copy()
         lo, hi = int(seg_bounds[pid]), int(seg_bounds[pid + 1])
 
         # Static deterministic LPT assignment, identical on every task:
@@ -440,6 +438,9 @@ def pagerank_barrier(
             load[q] += size_of[part]
             if q == pid:
                 mine_parts.append(part)
+        # the task's CSR blocks, loaded once and resident for the whole
+        # loop (main_mpi.c:122-126)
+        shards = [(part, load_csr_shard(path_of[part])) for part in mine_parts]
         mesh, root = _make_mesh(pid, P, rendezvous)
 
         def base_of(old: np.ndarray) -> float:
@@ -449,23 +450,25 @@ def pagerank_barrier(
             return (leaked + (1.0 - leaked) * (1.0 - d)) / n
 
         try:
-            # Shared rank buffers (one-host gang):
-            # ONE ping/pong pair of n-vector mmaps on /dev/shm holds
-            # rank and w=rank·inv_od; each task writes only its own
-            # [lo,hi) segment (no races) and every task's gather reads the
-            # SAME physical pages. This is Spark-broadcast semantics for
-            # processes (one copy per node, readers share), and on this
-            # host it is the difference between P private n-vectors
-            # thrashing the shared L3 and one L3-resident copy (measured
-            # at n=4M: 32-proc aggregate gather 2.05G/s shared vs 1.62G/s
-            # private, self-relative efficiency 0.87 vs 0.37 — see
-            # BENCH/BASELINE.md). The per-iteration exchange shrinks to
-            # one scalar plus lineage per task over TCP: writing your
-            # segment IS the allgather. tmpfs pages cannot be hugepage-backed here
+            # ONE ping/pong pair of [rank | w=rank·inv_od] n-vector
+            # buffers; iteration k gathers from parity (k-1)&1 and writes
+            # parity k&1. Shared (one-host gang): the pair is mmaps on
+            # /dev/shm, each task writes only its own [lo,hi) segment (no
+            # races) and every task's gather reads the SAME physical
+            # pages. This is Spark-broadcast semantics for processes (one
+            # copy per node, readers share), and on this host it is the
+            # difference between P private n-vectors thrashing the shared
+            # L3 and one L3-resident copy (measured at n=4M: 32-proc
+            # aggregate gather 2.05G/s shared vs 1.62G/s private,
+            # self-relative efficiency 0.87 vs 0.37 — see
+            # BENCH/BASELINE.md); writing your segment IS the allgather.
+            # tmpfs pages cannot be hugepage-backed here
             # (shmem_enabled=never), which costs ~2x single-proc gather
             # TLB overhead vs THP-backed private arrays — the right trade
             # exactly when n·P exceeds LLC; below that both buffer kinds
-            # measure within noise (BENCH/BASELINE.md).
+            # measure within noise (BENCH/BASELINE.md). Private: the same
+            # pair in task memory, each task writing every segment it
+            # receives.
             shared = root is not None
             if shared:
                 bufs = [os.path.join(root, f"vec{p}.buf") for p in (0, 1)]
@@ -473,14 +476,17 @@ def pagerank_barrier(
                     os.mkdir(root, 0o700)
                     for b in bufs:
                         with open(b, "wb") as f:
-                            f.truncate(2 * n * 8)  # [rank | w] halves
+                            f.truncate(2 * n * 8)
                 mesh.exchange({q: None for q in mesh.conns})  # buffers exist
                 vecs = [np.memmap(b, dtype=np.float64, mode="r+", shape=(2, n))
                         for b in bufs]
-                inv_seg = inv_od[lo:hi]
-                cur = start_iter & 1
-                vecs[cur][0, lo:hi] = rank[lo:hi]
-                vecs[cur][1, lo:hi] = rank[lo:hi] * inv_seg
+                init = slice(lo, hi)
+            else:
+                vecs = [np.empty((2, n), dtype=np.float64) for _p in (0, 1)]
+                init = slice(0, n)
+            vecs[start_iter & 1][0, init] = rank_init[init]
+            vecs[start_iter & 1][1, init] = rank_init[init] * inv_od[init]
+            if shared:
                 mesh.exchange({q: None for q in mesh.conns})  # segments written
                 if pid == 0:
                     # every task has mapped both buffers: the mappings
@@ -489,10 +495,9 @@ def pagerank_barrier(
             my_metrics: list[dict] = []
             iter_log: list[dict] = []
 
-            def record(it_no, norm, full, met_by_pid, t0, t_kernel, t_route, done):
+            def record(it_no, norm, full, met_by_pid, t0, t_kernel, t_route):
                 """pid 0's lineage for one iteration: the iter_log entry
-                plus, every ``checkpoint_interval`` iterations and at the
-                stop, the manifest checkpoint with every task's
+                plus the manifest checkpoint with every task's
                 per-partition metrics in pid order."""
                 all_met = [mm for q in sorted(met_by_pid) for mm in met_by_pid[q]]
                 now = time.monotonic()
@@ -503,7 +508,7 @@ def pagerank_barrier(
                          "partitions": len(all_met),
                          "nnz": int(sum(mm["nnz"] for mm in all_met))}
                 iter_log.append(entry)
-                if ckpt_root is not None and (done or it_no % checkpoint_interval == 0):
+                if ckpt_root is not None:
                     from linkgraph.checkpoint import write_iteration_arrays
 
                     write_iteration_arrays(
@@ -516,21 +521,15 @@ def pagerank_barrier(
             converged = False
             for it in range(start_iter + 1, max_iter + 1):
                 t0 = time.monotonic()
-                # (1) SpMV partials over this task's statically assigned
-                # shards (shared CSR kernel; worker-cached decoded arrays).
-                # Shared mode gathers from the host-shared w half of the
-                # current parity buffer — no per-task O(n) multiply, no
-                # private copy.
-                if shared:
-                    cur, nxt = (it - 1) & 1, it & 1
-                    w_rank = vecs[cur][1]
-                else:
-                    w_rank = rank * inv_od
+                cur, nxt = (it - 1) & 1, it & 1
+                # (1) SpMV partials over this task's resident shards,
+                # gathered from the w half of the current parity buffer
+                w_rank = vecs[cur][1]
                 pmet = []
                 per_shard = []  # (part, u, s)
-                for part in mine_parts:
+                for part, shard in shards:
                     tk = time.monotonic()
-                    u, s, nnz = csr_partials(_load_shard(path_of[part], build_token), w_rank)
+                    u, s, nnz = csr_partials(shard, w_rank)
                     per_shard.append((part, u, s))
                     pmet.append(
                         {"part_id": part, "nnz": nnz, "rows": len(u),
@@ -558,13 +557,10 @@ def pagerank_barrier(
                 t_route = time.monotonic()
 
                 # (3) owner update of [lo, hi): base + d·contrib, δ²
-                # local. leaked is computed from the full OLD rank —
-                # gathered from the shared buffer (shared path) or the
-                # private copy: the SAME dang_idx order over the same
-                # floats either way, so shared and private
-                # vectors stay bit-identical and every task reaches the
-                # same stop decision.
-                old_full = vecs[cur][0] if shared else rank
+                # local. leaked is computed from the full OLD rank half:
+                # the SAME dang_idx order over the same floats on every
+                # task, so every task reaches the same stop decision.
+                old_full = vecs[cur][0]
                 seg = np.full(hi - lo, base_of(old_full), dtype=np.float64)
                 if mine:
                     all_u = np.concatenate([u for _p, u, _s in mine])
@@ -572,39 +568,29 @@ def pagerank_barrier(
                     seg += d * np.bincount(all_u - lo, weights=all_s, minlength=hi - lo)
                 dsq = float(((seg - old_full[lo:hi]) ** 2).sum())
 
-                if shared:
-                    # (4, shared) write own segment into the next-parity
-                    # host-shared buffer — that IS the allgather; only
-                    # scalars + lineage go through the mesh. The scalar
-                    # exchange doubles as the barrier that keeps parity
-                    # reuse safe: a task reaches iteration k+2
-                    # (overwriting parity k) only after every peer sent
-                    # its k+1 scalars, i.e. after every read of parity
-                    # k has completed.
-                    vecs[nxt][0, lo:hi] = seg
-                    vecs[nxt][1, lo:hi] = seg * inv_seg
-                    got = mesh.exchange(
-                        {q: (dsq, pmet) for q in range(P) if q != pid}
-                    )
-                    full = vecs[nxt][0]
-                else:
-                    # (4) allgather segments (mesh round 2) — every task
-                    # re-materializes the full vector, as the
-                    # reference's Allgatherv does
-                    # (pagerank_custom_mpi.h:62-63); per-shard lineage
-                    # metrics piggyback so task 0 logs ALL partitions
-                    segs = mesh.exchange(
-                        {q: (seg, dsq, pmet) for q in range(P) if q != pid}
-                    )
-                    rank = full = np.empty(n, dtype=np.float64)
-                    rank[lo:hi] = seg
-                    got = {}
-                    for q, (qseg, qdsq, qmet) in segs.items():
-                        rank[int(seg_bounds[q]):int(seg_bounds[q + 1])] = qseg
-                        got[q] = (qdsq, qmet)
+                # (4) write the own segment into both halves of the
+                # next-parity buffer, then one mesh round. Shared, the
+                # write IS the allgather and the round carries only δ²
+                # and lineage; it doubles as the barrier that keeps
+                # parity reuse safe: a task reaches iteration k+2
+                # (overwriting parity k) only after every peer sent its
+                # k+1 round, i.e. after every read of parity k has
+                # completed. Private, the round also carries the segment
+                # (the reference's Allgatherv, pagerank_custom_mpi.h:
+                # 62-63) and each task writes what it receives; per-shard
+                # lineage metrics piggyback so task 0 logs ALL partitions.
+                vecs[nxt][0, lo:hi] = seg
+                vecs[nxt][1, lo:hi] = seg * inv_od[lo:hi]
+                got = mesh.exchange(
+                    {q: (None if shared else seg, dsq, pmet) for q in range(P) if q != pid}
+                )
                 dsq_by_pid = {pid: dsq}
                 met_by_pid = {pid: pmet}
-                for q, (qdsq, qmet) in got.items():
+                for q, (qseg, qdsq, qmet) in got.items():
+                    if qseg is not None:
+                        qlo, qhi = int(seg_bounds[q]), int(seg_bounds[q + 1])
+                        vecs[nxt][0, qlo:qhi] = qseg
+                        vecs[nxt][1, qlo:qhi] = qseg * inv_od[qlo:qhi]
                     dsq_by_pid[q] = qdsq
                     met_by_pid[q] = qmet
                 # accumulate δ² in FIXED global pid order (own dsq
@@ -619,16 +605,16 @@ def pagerank_barrier(
 
                 norm = float(np.sqrt(nsq))
                 converged = bool(check_convergence and norm <= eps)
-                done = converged or it >= max_iter
                 my_metrics.extend(pmet)
                 if pid == 0:
-                    record(it, norm, full, met_by_pid, t0, t_kernel, t_route, done)
-                if done:
-                    if shared and pid == 0:
-                        rank = np.array(vecs[nxt][0])  # the vector to publish
+                    record(it, norm, vecs[nxt][0], met_by_pid, t0, t_kernel, t_route)
+                if converged or it >= max_iter:
                     break
 
             if pid == 0:
+                # the last written parity (the start vector when no
+                # iteration ran)
+                rank = np.asarray(vecs[it & 1][0])
                 if fam_b:
                     # Family B's ONE final sum-normalization
                     # (pagerank_OCL.h:156-161) — applied exactly once, at

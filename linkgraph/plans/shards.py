@@ -18,10 +18,10 @@ JDS degree-bucketing of skewed rows         | explicit hub split: vertices with
                                             | dedicated shards; partial sums
                                             | combined in a second level
                                             | (SURVEY §4 X3)
-CSR block resident per MPI rank for the     | shard parquet read ONCE per
-whole run (scattered at :122-126, reused    | Python worker, decoded numpy
-every iteration)                            | arrays cached in-process across
-                                            | iterations (worker reuse)
+CSR block resident per MPI rank for the     | each gang task loads its shards
+whole run (scattered at :122-126, reused    | ONCE, before the loop; the
+every iteration)                            | decoded numpy arrays stay
+                                            | resident for the whole solve
 MPI_Allgatherv of the dense rank vector     | partial sums exchanged task-to-
 every iteration (pagerank_custom_mpi.h:62)  | task inside one barrier gang
                                             | (plans/barrier.py)
@@ -34,13 +34,14 @@ Why shard FILES instead of a cached DataFrame: feeding a cached relational
 DataFrame back through the JVM→Arrow→Python pipe re-serializes every edge
 every iteration and measures ~2M rows/s TOTAL regardless of core count (the
 columnar cache is row-materialized before Arrow conversion) — an iteration-
-scaling dead end. Parquet shard files are decoded by pyarrow inside the
-worker at >100M rows/s, and with `spark.python.worker.reuse` (default on)
-the decoded numpy arrays persist in the worker process, so steady-state
-iterations ship only the rank vector down and partial sums up — O(n), not
-O(m), per iteration, like the reference MPI loop. On a real cluster the
-shard directory lives on DFS/object storage; worker-local caching degrades
-gracefully to a re-read when the scheduler moves a shard between workers.
+scaling dead end. The whole PageRank loop runs inside one barrier gang
+task per process (plans/barrier.py): each task loads its shards once, as
+.npy CSR sidecars next to the parquet (the first load decodes the parquet
+and writes them), and keeps the arrays for the whole solve, so iterations
+exchange only O(n) partial sums, not O(m) edges, like the reference MPI
+loop. The sidecars are the only shard cache: loading one is a file read,
+where a decode re-reads the parquet and sorts it by dst. On a real
+cluster the shard directory lives on DFS/object storage.
 
 Scale notes (100 TB / 1000-executor design):
 
@@ -82,6 +83,9 @@ from linkgraph.operators.degrees import in_degrees, out_degrees
 # executor memory with headroom (per-edge state here is 3×8 B), large enough
 # to amortize task overhead. ~8M edges ≈ 200 MB working set.
 TARGET_EDGES_PER_SHARD = 8_000_000
+# non-hub parts per requested shard: the in-degree CDF is cut into
+# num_shards * 2 edge-balanced dst-range buckets, one part each
+_BUCKETS_PER_SHARD = 2
 
 
 def tune_shuffle_partitions(spark: SparkSession, m_edges: int, floor: int | None = None) -> int:
@@ -93,28 +97,6 @@ def tune_shuffle_partitions(spark: SparkSession, m_edges: int, floor: int | None
     p = max(floor, math.ceil(m_edges / TARGET_EDGES_PER_SHARD))
     spark.conf.set("spark.sql.shuffle.partitions", str(p))
     return p
-
-
-# Worker-process shard cache: {(shard_path, build_token): decoded arrays}.
-# Lives across iterations because Spark reuses Python workers; the build
-# token (uuid written to meta.json) makes keys unique even when a caller
-# rebuilds into the same shard_dir within one app. Bounded LRU.
-# Shards carry NO per-edge weight: weight = 1/outdeg(src) is a function of
-# src, kept as one n-sized float64 array per task (ShardedGraph.inv_od) — this
-# cuts the per-edge memory stream from 24 B to 8 B (int32 src + int32 dst),
-# which is what the aggregate SpMV throughput is bound by at high core
-# counts. Float math is bit-identical: 1/outdeg is computed once either way.
-_SHARD_CACHE: dict[tuple, tuple] = {}
-# Byte-budget LRU (was a 16-entry cap): with large shards the entry cap
-# forced ~GBs of np.load re-reads per iteration per worker — and unfairly
-# vs the bench's sync-free control, which holds every shard resident. A
-# worker only caches the shards statically assigned to it, so the fleet
-# footprint is ~total_decoded_bytes regardless of P. Override via
-# LINKGRAPH_SHARD_CACHE_BYTES (read at worker import).
-_SHARD_CACHE_BUDGET = int(
-    os.environ.get("LINKGRAPH_SHARD_CACHE_BYTES", 4 << 30)
-)
-_SHARD_CACHE_BYTES = 0
 
 
 def _decode_csr(path: str):
@@ -157,19 +139,23 @@ def load_csr_shard(path: str):
     STATIC dst segment index (unique dst values + start offsets — the CSR
     rowptr, pagerank_custom.h:128-134, built once). Per iteration only src
     and the contrib vector are streamed; dst never touches memory again.
+    Shards carry no per-edge weight when unweighted: 1/outdeg is a function
+    of src, kept as one n-sized array per task (ShardedGraph.inv_od), so
+    the per-edge stream is 4 B of int32 src.
 
     The decoded arrays are persisted as .npy sidecars next to the parquet
     (first toucher writes them, tmp+rename so concurrent creation is
-    idempotent): re-opening a shard is a page-cache-speed file read, so
-    work redistribution between tasks costs ~ms, not a parquet decode +
-    sort. Arrays are loaded INTO RAM, not mmap'd — numpy fancy indexing
-    with a memmap index array measures ~2× slower than with a plain
-    ndarray, and the gather is the hot loop."""
-    src_p = os.path.join(path, "csr_src.npy")
-    uniq_p = os.path.join(path, "csr_uniq.npy")
-    starts_p = os.path.join(path, "csr_starts.npy")
-    w_p = os.path.join(path, "csr_w.npy")
-    # csr_w is ALWAYS written (0-length for unweighted shards), so sidecar
+    idempotent): re-opening a shard for a later solve on the same layout
+    is a page-cache-speed file read, not a parquet decode + sort. The
+    sidecar names start with "_", which pyarrow's dataset discovery skips,
+    so a part dir holding only some of them still decodes. Arrays are
+    loaded INTO RAM, not mmap'd — numpy fancy indexing with a memmap index
+    array measures ~2× slower than with a plain ndarray, and the gather is
+    the hot loop."""
+    src_p, uniq_p, starts_p, w_p = (
+        os.path.join(path, f"_csr_{k}.npy") for k in ("src", "uniq", "starts", "w")
+    )
+    # _csr_w is ALWAYS written (0-length for unweighted shards), so sidecar
     # completeness is a single all-exist check — a weighted shard can never
     # be mistaken for unweighted by a missing file
     if not all(os.path.exists(p) for p in (src_p, uniq_p, starts_p, w_p)):
@@ -191,55 +177,31 @@ def load_csr_shard(path: str):
     )
 
 
-def _load_shard(path: str, token: str = ""):
-    """Worker-cache lookup keyed by (path, build token): rebuilding into the
-    SAME shard_dir within one Spark app (jobs --shard-dir, bench_scaling)
-    must not serve the previous build's decoded arrays from a reused
-    worker."""
-    global _SHARD_CACHE_BYTES
-    key = (path, token)
-    ent = _SHARD_CACHE.pop(key, None)
-    if ent is None:
-        ent = load_csr_shard(path)
-        _SHARD_CACHE_BYTES += _ent_nbytes(ent)
-    _SHARD_CACHE[key] = ent  # re-insert = move to MRU
-    while _SHARD_CACHE and _SHARD_CACHE_BYTES > _SHARD_CACHE_BUDGET:
-        old_ent = _SHARD_CACHE.pop(next(iter(_SHARD_CACHE)))
-        _SHARD_CACHE_BYTES -= _ent_nbytes(old_ent)
-    return ent
-
-
-def _ent_nbytes(ent) -> int:
-    src_s, uniq, starts, plan, wt = ent
-    return (
-        src_s.nbytes + uniq.nbytes + starts.nbytes
-        + (wt.nbytes if wt is not None else 0)
-        + sum(a.nbytes for a in plan)
-    )
-
-
 _GATHER_SCRATCH = np.empty(0, dtype=np.float64)
 _OUT_SCRATCH = np.empty(0, dtype=np.float64)
 
 
-_KERNEL_BLOCK = int(os.environ.get("LINKGRAPH_KERNEL_BLOCK", 16384))
+# edges per kernel block: 64 KB of int32 src + 128 KB of gathered
+# contributions stay L1/L2-resident; 8-64 KB blocks measured 449M
+# gathers/s single-core and 9.0G/s at 32 procs, against a ~1.1G/s
+# aggregate ceiling for shard-sized buffers (BENCH/BASELINE.md:83-90)
+_KERNEL_BLOCK = 16384
 
 
-def _block_plan(starts: np.ndarray, nnz: int, block: int = _KERNEL_BLOCK):
+def _block_plan(starts: np.ndarray, nnz: int):
     """Static per-shard plan for the L1-blocked gather+reduce kernel:
-    for each ``block``-edge slice of the shard, the range of CSR segments
-    it touches and the reduceat indices local to the slice (segments
-    spanning a slice boundary contribute partial sums that accumulate in
-    the output — the carry). Built once per decode; all-numpy so the
-    shard cache's byte accounting sees it."""
+    for each ``_KERNEL_BLOCK``-edge slice of the shard, the range of CSR
+    segments it touches and the reduceat indices local to the slice
+    (segments spanning a slice boundary contribute partial sums that
+    accumulate in the output — the carry). Built once per load."""
     if nnz == 0:
         return (
             np.empty(0, np.int64), np.empty(0, np.int64),
             np.empty(0, np.int64), np.empty(0, np.int64),
             np.empty(0, np.int64), np.zeros(1, np.int64),
         )
-    los = np.arange(0, nnz, block, dtype=np.int64)
-    his = np.minimum(los + block, nnz)
+    los = np.arange(0, nnz, _KERNEL_BLOCK, dtype=np.int64)
+    his = np.minimum(los + _KERNEL_BLOCK, nnz)
     s0 = np.searchsorted(starts, los, side="right") - 1
     s1 = np.searchsorted(starts, his, side="left")  # exclusive
     off = np.r_[0, np.cumsum(s1 - s0)]
@@ -358,7 +320,6 @@ class ShardedGraph:
     num_shards: int
     hub_count: int
     hub_threshold: int
-    build_token: str = ""  # unique per build; keys the worker-side caches
     weighted: bool = False  # per-edge w stream present; inv_od is a 0/1 mask
     _owns_dir: bool = True
 
@@ -367,7 +328,6 @@ class ShardedGraph:
         edges: DataFrame,
         num_shards: int | None = None,
         hub_salt_factor: float = 1.0,
-        buckets_per_shard: int = 2,
         shard_dir: str | None = None,
         weight_col: str | None = None,
     ) -> "ShardedGraph":
@@ -445,7 +405,7 @@ class ShardedGraph:
         in_deg = deg["in_deg"].to_numpy()
         m = int(in_deg.sum())
         num_shards = num_shards or tune_shuffle_partitions(spark, m)
-        n_buckets = num_shards * buckets_per_shard
+        n_buckets = num_shards * _BUCKETS_PER_SHARD
 
         # 2) bucket/salt plan: exact edge-balanced boundaries from the
         #    exclusive in-degree CDF in idx order (the CSR rowptr prefix
@@ -534,14 +494,12 @@ class ShardedGraph:
         np.save(os.path.join(shard_dir, "inv_od.npy"), inv_od)
         np.save(os.path.join(shard_dir, "node_ids.npy"), node_ids)
         import json
-        import uuid
 
-        build_token = uuid.uuid4().hex
         with open(os.path.join(shard_dir, "meta.json"), "w") as f:
             json.dump(
                 {"n": n, "m": m, "num_shards": num_shards,
                  "hub_count": hub_count, "hub_threshold": hub_threshold,
-                 "build_token": build_token, "weighted": weighted},
+                 "weighted": weighted},
                 f,
             )
 
@@ -557,7 +515,6 @@ class ShardedGraph:
             num_shards=num_shards,
             hub_count=hub_count,
             hub_threshold=hub_threshold,
-            build_token=build_token,
             weighted=weighted,
             _owns_dir=owns,
         )
@@ -586,44 +543,22 @@ class ShardedGraph:
             num_shards=meta["num_shards"],
             hub_count=meta["hub_count"],
             hub_threshold=meta["hub_threshold"],
-            build_token=meta.get(
-                "build_token", str(os.path.getmtime(os.path.join(shard_dir, "meta.json")))
-            ),
             weighted=meta.get("weighted", False),
             _owns_dir=False,
         )
 
-    def publish_vector(self, rank: np.ndarray, name: str | None = None) -> str:
-        """Atomically write an n-vector to a UNIQUE file under shard_dir and
-        return its path. A shared file name would let a later solve on the
-        same graph silently retarget every earlier lazy result plan."""
-        import uuid
-
-        path = os.path.join(
-            self.shard_dir, name or f"rank_out_{uuid.uuid4().hex}.npy"
-        )
-        save_npy_atomic(path, rank)
-        return path
-
-    def ranks_df(
-        self, rank: np.ndarray | None = None, vector_path: str | None = None
-    ) -> DataFrame:
-        """Distributed [node: long, rank: double] materialization of a rank
-        vector: publish once to a unique file (atomic rename), then ~cores
-        executor tasks mmap-slice node_ids.npy + the vector file and emit
-        Arrow batches. The n-row result never passes through a driver
-        ``createDataFrame`` — at n≈10^9 that single-process serialization
-        was the last O(n) driver choke point on the flagship path (round-2
-        VERDICT #1). The returned plan reads files under ``shard_dir``:
-        callers that own a temp dir must pin the result
-        (``localCheckpoint(eager=True)``) before ``unpersist`` removes the
-        directory. Each call with ``rank`` leaves one 8n-byte vector file in
-        the layout (the result artifact); owned temp dirs reclaim it at
-        ``unpersist``."""
-        if rank is not None:
-            vector_path = self.publish_vector(rank)
-        if vector_path is None:
-            raise ValueError("ranks_df: give a rank vector or a published vector_path")
+    def ranks_df(self, vector_path: str) -> DataFrame:
+        """Distributed [node: long, rank: double] materialization of an
+        n-vector published at ``vector_path`` (an .npy file, written with
+        an atomic rename — the gang's task 0 publishes each result to a
+        unique file under ``shard_dir``): ~cores executor tasks mmap-slice
+        node_ids.npy + the vector file and emit Arrow batches. The n-row
+        result never passes through a driver ``createDataFrame`` — at
+        n≈10^9 that single-process serialization was the last O(n) driver
+        choke point on the flagship path (round-2 VERDICT #1). The
+        returned plan reads files under ``shard_dir``: callers that own a
+        temp dir must pin the result (``localCheckpoint(eager=True)``)
+        before ``unpersist`` removes the directory."""
         parts = max(
             1,
             min(

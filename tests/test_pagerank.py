@@ -195,8 +195,8 @@ def test_weighted_equal_weights_match_unweighted(spark):
 
 def test_weighted_runs_on_every_strategy(spark):
     """Round 4 removed the weighted->dataframe forcing: the per-edge weight
-    sidecar carries w/Σw through the CSR kernel, so barrier and sharded
-    accept weight_col and agree with the dataframe plan (the strategy
+    sidecar carries w/Σw through the CSR kernel, so the barrier gang
+    accepts weight_col and agrees with the dataframe plan (the strategy
     equality suite lives in test_pagerank_sharded.py)."""
     from pyspark.sql import functions as F
 

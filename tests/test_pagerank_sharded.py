@@ -5,9 +5,8 @@ OCL vs MPI implementations and comparing at 1e-6
 (/root/reference/main.c:109-112, main_mpi.c:142-150).
 
 The exhaustive fixture sweep runs on ``pagerank_barrier`` (whole loop in one
-barrier stage — cheap per fixture); ``pagerank_sharded``, the same gang
-under its older name, is pinned by the equivalence, salting, metrics and
-resume tests below.
+barrier stage — cheap per fixture); the equivalence, salting, metrics and
+resume tests below pin the same gang on prebuilt layouts.
 """
 
 import hashlib
@@ -17,10 +16,10 @@ import numpy as np
 import pyarrow.parquet as pq
 import pytest
 
-from linkgraph.operators.pagerank import pagerank_dataframe, pagerank_sharded
+from linkgraph.operators.pagerank import pagerank_dataframe
 from linkgraph.oracle import pagerank_family_a
 from linkgraph.plans.barrier import pagerank_barrier
-from linkgraph.plans.shards import ShardedGraph
+from linkgraph.plans.shards import ShardedGraph, load_csr_shard, save_npy_atomic
 from tests import conftest as fx
 
 
@@ -67,7 +66,7 @@ def test_barrier_matches_oracle(spark, fixture):
 def test_sharded_matches_oracle(spark):
     src, dst, n = fx.karate_club()
     df = fx.edges_df(spark, src, dst)
-    res = pagerank_sharded(df, eps=1e-9, max_iter=300, num_shards=3)
+    res = pagerank_barrier(df, eps=1e-9, max_iter=300, num_shards=3)
     got = {r["node"]: r["rank"] for r in res.ranks.collect()}
     oracle, oiters = pagerank_family_a(src, dst, n, eps=1e-9, max_iter=300)
     present = sorted(set(src.tolist()) | set(dst.tolist()))
@@ -84,7 +83,7 @@ def test_star_hub_salting_matches_unsalted(spark):
     df = fx.edges_df(spark, src, dst)
     g_salted = ShardedGraph.build(df, num_shards=4, hub_salt_factor=0.05)
     assert g_salted.hub_count >= 1  # the hub actually got split
-    salted = pagerank_sharded(df, eps=1e-8, sharded_graph=g_salted)
+    salted = pagerank_barrier(df, eps=1e-8, sharded_graph=g_salted)
     unsalted = pagerank_barrier(df, eps=1e-8, num_shards=1, num_tasks=1)
     assert np.allclose(_vec(salted), _vec(unsalted), atol=1e-6, rtol=0)
     g_salted.unpersist()
@@ -94,7 +93,7 @@ def test_sharded_and_barrier_equal_dataframe_path(spark):
     src, dst, n = fx.karate_club()
     df = fx.edges_df(spark, src, dst)
     g = ShardedGraph.build(df, num_shards=4)
-    a = pagerank_sharded(df, eps=1e-8, sharded_graph=g)
+    a = pagerank_barrier(df, eps=1e-8, sharded_graph=g)
     c = pagerank_barrier(df, eps=1e-8, sharded_graph=g, num_tasks=3)
     b = pagerank_dataframe(df, eps=1e-8)
     assert np.allclose(_vec(a), _vec(b), atol=1e-6, rtol=0)
@@ -178,6 +177,45 @@ def test_layout_pinned(spark, case):
         g.unpersist()
 
 
+def test_partial_sidecar_set_loads(spark):
+    """A task that dies between the sidecar renames leaves a part dir with
+    only some of the .npy files; the next load must still decode the
+    parquet (the sidecars are invisible to it) and equal a clean load."""
+    src, dst, n = fx.karate_club()
+    g = ShardedGraph.build(fx.edges_df(spark, src, dst), num_shards=2)
+    try:
+        for _part, path in g.parts:
+            clean = load_csr_shard(path)
+            for f in os.listdir(path):
+                if f.endswith(".npy") and "uniq" not in f:
+                    os.remove(os.path.join(path, f))
+            assert len([f for f in os.listdir(path) if f.endswith(".npy")]) == 1
+            again = load_csr_shard(path)
+            for a, b in zip(clean[:3] + clean[3], again[:3] + again[3]):
+                assert np.array_equal(a, b)
+            assert clean[4] is None and again[4] is None
+    finally:
+        g.unpersist()
+
+
+def test_rebuild_into_same_shard_dir(spark, tmp_path):
+    """Rebuilding a different graph into the same caller-given shard_dir
+    within one app must solve the NEW layout: nothing of the previous
+    build's decoded shards is served again."""
+    sd = str(tmp_path / "shards")
+    src, dst, n = fx.karate_club()
+    df_a = fx.edges_df(spark, src, dst)
+    keep = np.arange(len(src)) % 3 != 0  # B: a third of A's edges dropped
+    df_b = fx.edges_df(spark, src[keep], dst[keep])
+    g_a = ShardedGraph.build(df_a, num_shards=3, shard_dir=sd)
+    pagerank_barrier(sharded_graph=g_a, eps=1e-9, max_iter=300, num_tasks=3)
+    g_b = ShardedGraph.build(df_b, num_shards=3, shard_dir=sd)
+    got = pagerank_barrier(sharded_graph=g_b, eps=1e-9, max_iter=300, num_tasks=3)
+    want = pagerank_dataframe(df_b, eps=1e-9, max_iter=300)
+    assert np.allclose(_vec(got), _vec(want), atol=1e-9, rtol=0)
+    g_b.unpersist()
+
+
 def test_build_releases_what_it_persists(spark):
     src, dst, n = fx.karate_club()
     df = fx.edges_df(spark, src, dst)
@@ -215,7 +253,7 @@ def test_per_partition_metrics_lineage(spark, tmp_path):
     src, dst, n = fx.karate_club()
     df = fx.edges_df(spark, src, dst)
     store = ParquetManifestStore(str(tmp_path / "ckpt"))
-    res = pagerank_sharded(df, eps=1e-6, max_iter=5, num_shards=3, store=store, run_id="m")
+    res = pagerank_barrier(df, eps=1e-6, max_iter=5, num_shards=3, store=store, run_id="m")
     pm = store.read_metrics(spark, "m")
     assert pm is not None
     rows = pm.collect()
@@ -236,11 +274,11 @@ def test_resume_sharded(spark, tmp_path):
     df = fx.edges_df(spark, src, dst)
     store = ParquetManifestStore(str(tmp_path / "ckpt"))
     full = pagerank_barrier(df, eps=1e-9)
-    half = pagerank_sharded(
+    half = pagerank_barrier(
         df, eps=1e-9, max_iter=6, store=store, run_id="r", num_shards=2
     )
     assert store.latest_iteration("r") == half.iterations == 6
-    resumed = pagerank_sharded(
+    resumed = pagerank_barrier(
         df, eps=1e-9, max_iter=300, store=store, run_id="r", num_shards=2
     )
     assert np.allclose(_vec(full), _vec(resumed), atol=1e-9, rtol=0)
@@ -289,10 +327,10 @@ def test_gang_task_count_bit_identical_and_checkpoints(spark, tmp_path):
         g = ShardedGraph.build(df, **build_kw)
         if name == "salted":
             assert g.hub_count > 0  # a hub's in-edges really span parts
-        rb = pagerank_sharded(df, eps=1e-9, max_iter=300, sharded_graph=g, num_tasks=1)
+        rb = pagerank_barrier(df, eps=1e-9, max_iter=300, sharded_graph=g, num_tasks=1)
         vb = {r["node"]: r["rank"] for r in rb.ranks.collect()}
         for P in (3, 4):
-            rf = pagerank_sharded(df, eps=1e-9, max_iter=300, sharded_graph=g, num_tasks=P)
+            rf = pagerank_barrier(df, eps=1e-9, max_iter=300, sharded_graph=g, num_tasks=P)
             assert rb.strategy == rf.strategy == "barrier"
             assert rf.iterations == rb.iterations, (name, P)
             vf = {r["node"]: r["rank"] for r in rf.ranks.collect()}
@@ -304,12 +342,12 @@ def test_gang_task_count_bit_identical_and_checkpoints(spark, tmp_path):
         # the gang checkpoints every iteration and a later call resumes from
         # the manifest
         store = ParquetManifestStore(str(tmp_path / f"ckpt_{name}"))
-        half = pagerank_sharded(
+        half = pagerank_barrier(
             df, eps=1e-9, max_iter=6, store=store, run_id="f", sharded_graph=g
         )
         assert half.iterations == 6
         assert store.latest_iteration("f") == 6
-        resumed = pagerank_sharded(
+        resumed = pagerank_barrier(
             df, eps=1e-9, max_iter=300, store=store, run_id="f", sharded_graph=g
         )
         assert resumed.iterations == rb.iterations
@@ -366,7 +404,7 @@ def test_read_rank_arrays_matches_the_spark_read(spark, tmp_path):
     assert np.array_equal(ranks[order], want["rank"].to_numpy())
 
 
-def test_auto_dispatch_regimes(spark, tmp_path):
+def test_auto_dispatch_regimes(spark, tmp_path, monkeypatch):
     """`pagerank(strategy="auto")` must (a) pick the barrier gang at
     contract scale, (b) fall back to the UNBOUNDED dataframe plan when n
     exceeds the dense-vector budget (round-2 VERDICT #1 — the O(n)-driver
@@ -374,6 +412,7 @@ def test_auto_dispatch_regimes(spark, tmp_path):
     checkpointed large-m runs to the barrier engine, and stay oracle-equal
     in every regime."""
     from linkgraph.checkpoint import ParquetManifestStore
+    from linkgraph.operators import pagerank as pr
     from linkgraph.operators.pagerank import pagerank
 
     src, dst, n = fx.karate_club()
@@ -384,7 +423,9 @@ def test_auto_dispatch_regimes(spark, tmp_path):
 
     # graph "above the threshold": shrink the budget instead of building
     # 10^9 vertices — the dispatch arithmetic is what's under test
-    big = pagerank(df, eps=1e-8, dense_budget_bytes=10)
+    with monkeypatch.context() as mp:
+        mp.setattr(pr, "DENSE_BUDGET_BYTES", 10)
+        big = pagerank(df, eps=1e-8)
     assert big.strategy == "dataframe"
     assert np.allclose(_vec(auto), _vec(big), atol=1e-6, rtol=0)
 
@@ -395,6 +436,9 @@ def test_auto_dispatch_regimes(spark, tmp_path):
 
     forced = pagerank(df, eps=1e-8, strategy="barrier")
     assert forced.strategy == "barrier"
+    # one name per engine: the gang's older spelling is gone
+    with pytest.raises(ValueError, match="unknown strategy"):
+        pagerank(df, eps=1e-8, strategy="sharded")
 
 
 def test_ranks_df_distributed_and_isolated(spark):
@@ -407,10 +451,12 @@ def test_ranks_df_distributed_and_isolated(spark):
     g = ShardedGraph.build(df, num_shards=3)
 
     vec = np.arange(g.n, dtype=np.float64) / g.n
-    got = {r["node"]: r["rank"] for r in g.ranks_df(vec).collect()}
+    vec_path = os.path.join(g.shard_dir, "vec.npy")
+    save_npy_atomic(vec_path, vec)
+    got = {r["node"]: r["rank"] for r in g.ranks_df(vec_path).collect()}
     assert got == {int(nid): float(v) for nid, v in zip(g.node_ids, vec)}
 
-    a = pagerank_sharded(df, eps=1e-8, sharded_graph=g)
+    a = pagerank_barrier(df, eps=1e-8, sharded_graph=g)
     a_before = _vec(a)
     # second solve on the SAME graph (different engine, different scratch)
     pagerank_barrier(df, eps=1e-4, max_iter=3, sharded_graph=g, num_tasks=2)
@@ -438,7 +484,7 @@ def test_weighted_all_strategies_equal_dataframe(spark):
     b = pagerank_dataframe(df, eps=1e-8, weight_col="wt")
     g = ShardedGraph.build(df, num_shards=4, weight_col="wt")
     assert g.weighted
-    a = pagerank_sharded(df, eps=1e-8, sharded_graph=g, weight_col="wt")
+    a = pagerank_barrier(df, eps=1e-8, sharded_graph=g, weight_col="wt")
     c = pagerank_barrier(df, eps=1e-8, sharded_graph=g, num_tasks=3)
     assert np.allclose(_vec(a), _vec(b), atol=1e-6, rtol=0)
     assert np.allclose(_vec(c), _vec(b), atol=1e-6, rtol=0)
@@ -451,8 +497,8 @@ def test_weighted_uniform_equals_unweighted_sharded(spark):
 
     src, dst, n = fx.karate_club()
     df = fx.edges_df(spark, src, dst).withColumn("wt", F.lit(3.0))
-    w = pagerank_sharded(df, eps=1e-8, weight_col="wt")
-    u = pagerank_sharded(fx.edges_df(spark, src, dst), eps=1e-8)
+    w = pagerank_barrier(df, eps=1e-8, weight_col="wt")
+    u = pagerank_barrier(fx.edges_df(spark, src, dst), eps=1e-8)
     assert np.allclose(_vec(w), _vec(u), atol=1e-9, rtol=0)
     assert w.iterations == u.iterations
 
@@ -464,7 +510,7 @@ def test_family_b_all_strategies_equal_dataframe(spark):
     src, dst, n = fx.toy_chain_dangling()
     df = fx.edges_df(spark, src, dst)
     b = pagerank_dataframe(df, eps=1e-10, family="b")
-    a = pagerank_sharded(df, eps=1e-10, family="b")
+    a = pagerank_barrier(df, eps=1e-10, family="b")
     c = pagerank_barrier(df, eps=1e-10, family="b", num_tasks=3)
     assert np.allclose(_vec(a), _vec(b), atol=1e-6, rtol=0)
     assert np.allclose(_vec(c), _vec(b), atol=1e-6, rtol=0)
@@ -473,7 +519,7 @@ def test_family_b_all_strategies_equal_dataframe(spark):
     # iteration, B's mass leaks through the dangling tail (the converged
     # fixed points still coincide after B's one normalization — documented
     # in pagerank_dataframe)
-    a_fam_a = pagerank_sharded(df, eps=1e-10)
+    a_fam_a = pagerank_barrier(df, eps=1e-10)
     assert all(abs(mm["mass"] - 1.0) < 1e-9 for mm in a_fam_a.iter_metrics)
     assert a.iter_metrics[1]["mass"] < 1.0 - 1e-6
     # B's published vector is normalized exactly once
@@ -485,17 +531,20 @@ def test_weighted_family_b_combined(spark):
     src, dst, n = fx.toy_chain_dangling()
     df = _weighted_df(spark, src, dst)
     b = pagerank_dataframe(df, eps=1e-10, family="b", weight_col="wt")
-    a = pagerank_sharded(df, eps=1e-10, family="b", weight_col="wt")
+    a = pagerank_barrier(df, eps=1e-10, family="b", weight_col="wt")
     assert np.allclose(_vec(a), _vec(b), atol=1e-6, rtol=0)
     assert a.iterations == b.iterations
 
 
-def test_weighted_auto_dispatch_and_guards(spark):
+def test_weighted_auto_dispatch_and_guards(spark, monkeypatch):
+    from linkgraph.operators import pagerank as pr
     from linkgraph.operators.pagerank import choose_strategy, pagerank
 
     # weighted / family b no longer force the dataframe plan: only n does
     assert choose_strategy(100) == "barrier"
-    assert choose_strategy(100, dense_budget_bytes=1) == "dataframe"
+    with monkeypatch.context() as mp:
+        mp.setattr(pr, "DENSE_BUDGET_BYTES", 1)
+        assert choose_strategy(100) == "dataframe"
     src, dst, n = fx.karate_club()
     df = _weighted_df(spark, src, dst)
     res = pagerank(df, eps=1e-8, weight_col="wt")
@@ -516,5 +565,5 @@ def test_weighted_auto_dispatch_and_guards(spark):
     # prebuilt unweighted layout + weight_col is a loud error
     g = ShardedGraph.build(fx.edges_df(spark, src, dst), num_shards=2)
     with pytest.raises(ValueError, match="unweighted"):
-        pagerank_sharded(df, sharded_graph=g, weight_col="wt")
+        pagerank_barrier(df, sharded_graph=g, weight_col="wt")
     g.unpersist()
