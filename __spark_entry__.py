@@ -910,7 +910,7 @@ def q_pagerank_b_k5(spark, sf_dir):
 
 def q_pagerank_ws_k5(spark, sf_dir):
     """Weighted PageRank through the barrier gang (plans/shards.py
-    per-edge weight sidecar — the reference's COO data[] slot,
+    per-edge weight column — the reference's COO data[] slot,
     readers/mtx_sparse.h:123-132 — in the CSR kernel), five fixed
     Family-A iterations on the same reply-count-weighted graph as
     q_pagerank_w_k5. Node names are densified via xxhash64 for the dense

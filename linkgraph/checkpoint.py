@@ -147,6 +147,19 @@ class ParquetManifestStore:
         return sorted(self._read_manifest(run_id)["iterations"], key=lambda e: e["iteration"])
 
 
+def write_rank_table(path: str, node_ids, rank) -> None:
+    """One [node: long, rank: double] parquet file at ``path``, written
+    with pyarrow under a hidden tmp name (Spark and pyarrow readers skip
+    names starting with "_") and renamed: a reader never sees a partial
+    file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tmp = os.path.join(os.path.dirname(path), f"_tmp{os.getpid()}_{os.path.basename(path)}")
+    pq.write_table(pa.table({"node": node_ids, "rank": rank}), tmp)
+    os.replace(tmp, path)
+
+
 def write_iteration_arrays(
     root: str,
     run_id: str,
@@ -166,10 +179,7 @@ def write_iteration_arrays(
     d = os.path.join(root, run_id)
     rank_path = os.path.join(d, "ranks", f"iter={iteration}")
     os.makedirs(rank_path, exist_ok=True)
-    pq.write_table(
-        pa.table({"node": node_ids, "rank": rank}),
-        os.path.join(rank_path, "part-0.parquet"),
-    )
+    write_rank_table(os.path.join(rank_path, "part-0.parquet"), node_ids, rank)
     metrics_path = None
     if partition_metrics:
         metrics_path = os.path.join(d, "metrics", f"iter={iteration}")

@@ -41,6 +41,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from linkgraph.checkpoint import ParquetManifestStore
 from linkgraph.operators.degrees import out_degrees, vertices, weighted_edges
 
 
@@ -369,7 +370,7 @@ def choose_strategy(n: int) -> str:
     materialization — loading a shard layout's node arrays just to decide
     to fall back to the dataframe engine would defeat the budget."""
     # family "b" and weighted graphs run through the SAME gang engine (the
-    # per-edge weight sidecar + family-aware combine), and the gang beats
+    # per-edge weight column + family-aware combine), and the gang beats
     # the deleted single-task batch regime at small m too (341k-edge ingest
     # graph: P=4 gang 0.68 s, batch 1.14 s); only the dense-vector budget
     # and non-integral ids (checked by the caller) force the dataframe plan
@@ -400,6 +401,10 @@ def pagerank(
       LINKGRAPH_DENSE_BUDGET_BYTES / 16 GiB ≈ 5×10^8 vertices), or
       non-integral ids → ``pagerank_dataframe`` — the unbounded join-gather
       plan with no driver-size assumptions.
+    * a ``store`` other than a ``ParquetManifestStore`` →
+      ``pagerank_dataframe``, which commits through
+      ``store.write_iteration`` (the gang writes the parquet manifest
+      layout only).
     * otherwise → ``pagerank_barrier`` — the fused loop: every iteration's
       exchange happens executor-to-executor inside ONE barrier stage (no
       per-iteration Spark job floor), checkpoints via ``store``.
@@ -415,7 +420,9 @@ def pagerank(
 
     if strategy == "auto":
         integral = ("byte", "short", "int", "long", "integer", "bigint")
-        if sharded_graph is None and any(
+        if store is not None and not isinstance(store, ParquetManifestStore):
+            strategy, why = "dataframe", f"a {type(store).__name__} store needs"
+        elif sharded_graph is None and any(
             dict(edges.dtypes).get(c) not in integral for c in ("src", "dst")
         ):
             # the shard layout's dense vectors need integral ids — string
@@ -427,11 +434,11 @@ def pagerank(
             # O(m) aggregation, one-time vs. the whole run
             n_est = sharded_graph.n if sharded_graph is not None else vertices(edges).count()
             strategy = choose_strategy(n_est)
+            why = f"n={n_est} exceeds the dense-vector budget and needs"
         if strategy == "dataframe" and edges is None:
             raise ValueError(
-                f"pagerank: n={n_est} exceeds the dense-vector budget and "
-                "no edge table was given for the unbounded dataframe "
-                "fallback"
+                f"pagerank: {why} the unbounded dataframe plan, but no "
+                "edge table was given"
             )
 
     if strategy == "dataframe":

@@ -1,1 +1,1 @@
-from linkgraph.plans.shards import ShardedGraph, tune_shuffle_partitions  # noqa: F401
+from linkgraph.plans.shards import ShardedGraph  # noqa: F401

@@ -10,8 +10,9 @@ mpirun gang-starts W ranks                  | one barrier() stage of P tasks
                                             | the TorchDistributor/Horovod
                                             | pattern: barrier for rendezvous,
                                             | framework-owned data plane)
-CSR block scattered once, resident per rank | each task loads its LPT-assigned
-(main_mpi.c:122-126)                        | shards once, before the loop, and
+CSR block scattered once, resident per rank | each task decodes its LPT-
+(main_mpi.c:122-126)                        | assigned (dst, src)-sorted parquet
+                                            | shards once, before the loop, and
                                             | keeps the numpy CSR arrays
 contiguous node blocks per rank             | each task OWNS a contiguous
 (main_mpi.c:88-108)                         | vertex segment [n·p/P, n·(p+1)/P)
@@ -62,7 +63,9 @@ tolerates executor churn.
 Checkpointing: task 0 (which holds the full assembled vector after round 2)
 writes rank snapshots + per-partition lineage/metrics in the exact
 ParquetManifestStore layout (checkpoint.py) via pyarrow — manifest-committed
-every iteration, resumable mid-convergence (north rule).
+every iteration, resumable mid-convergence (north rule). Any other store
+is refused: it commits through ``store.write_iteration`` on the dataframe
+plan.
 """
 
 from __future__ import annotations
@@ -80,9 +83,10 @@ import time
 
 import numpy as np
 
-from linkgraph.plans.shards import (
-    ShardedGraph, csr_partials, load_csr_shard, save_npy_atomic,
+from linkgraph.checkpoint import (
+    ParquetManifestStore, write_iteration_arrays, write_rank_table,
 )
+from linkgraph.plans.shards import ShardedGraph, csr_partials, load_csr_shard
 
 _MSG_LIMIT = 1 << 34
 
@@ -367,10 +371,17 @@ def pagerank_barrier(
     entire iteration loop inside one barrier stage. Weighted layouts
     (ShardedGraph.build weight_col) work unchanged: the per-edge weight
     stream lives inside csr_partials and inv_od is the 0/1 dangling
-    mask. Returns a PageRankResult whose ranks DataFrame is rebuilt from
-    the collected vector."""
+    mask. ``store`` must be a ParquetManifestStore (task 0 commits into
+    its layout with pyarrow). Returns a PageRankResult whose ranks
+    DataFrame reads the [node, rank] parquet file task 0 published."""
     if family not in ("a", "b"):
         raise ValueError(f"family must be 'a' or 'b', got {family!r}")
+    if store is not None and not isinstance(store, ParquetManifestStore):
+        raise ValueError(
+            "pagerank_barrier: the gang checkpoints into a "
+            f"ParquetManifestStore, got {type(store).__name__}; use "
+            "pagerank_dataframe for other stores"
+        )
     fam_b = family == "b"
     from linkgraph.operators.pagerank import PageRankResult
 
@@ -398,16 +409,15 @@ def pagerank_barrier(
         rank0[np.searchsorted(node_ids, snap_nodes)] = snap_ranks
 
     ckpt_root = store.root if store is not None and run_id is not None else None
-    dangling_idx = np.flatnonzero(g.dangling_mask)
-    bc = sc.broadcast((rank0, dangling_idx, g.inv_od, node_ids if ckpt_root else None))
+    dangling_idx = np.flatnonzero(g.inv_od == 0.0)
+    bc = sc.broadcast((rank0, dangling_idx, g.inv_od, node_ids))
     path_of = dict(g.parts)
 
-    # task 0 publishes the final vector here — a UNIQUE file, so earlier
-    # results' lazy plans are never silently retargeted by a later solve
-    # on the same graph
-    rank_out = os.path.join(g.shard_dir, f"rank_out_{secrets.token_hex(16)}.npy")
+    # task 0 publishes the final [node, rank] table here — a UNIQUE file,
+    # so earlier results' lazy plans are never silently retargeted by a
+    # later solve on the same graph
+    rank_out = os.path.join(g.shard_dir, f"rank_out_{secrets.token_hex(16)}.parquet")
     parts_sized = [(part, _dir_bytes(path)) for part, path in g.parts]
-    tasks = list(range(P))
     rdv = _Rendezvous(sc.getConf().get("spark.driver.host"), P) if P > 1 else None
     rendezvous = rdv.address if rdv is not None else None
 
@@ -492,7 +502,6 @@ def pagerank_barrier(
                     # every task has mapped both buffers: the mappings
                     # outlive the names, so nothing stays in /dev/shm
                     shutil.rmtree(root, ignore_errors=True)
-            my_metrics: list[dict] = []
             iter_log: list[dict] = []
 
             def record(it_no, norm, full, met_by_pid, t0, t_kernel, t_route):
@@ -509,8 +518,6 @@ def pagerank_barrier(
                          "nnz": int(sum(mm["nnz"] for mm in all_met))}
                 iter_log.append(entry)
                 if ckpt_root is not None:
-                    from linkgraph.checkpoint import write_iteration_arrays
-
                     write_iteration_arrays(
                         ckpt_root, run_id, it_no, ids, np.asarray(full), entry,
                         [{"iteration": it_no, **mm} for mm in all_met],
@@ -605,7 +612,6 @@ def pagerank_barrier(
 
                 norm = float(np.sqrt(nsq))
                 converged = bool(check_convergence and norm <= eps)
-                my_metrics.extend(pmet)
                 if pid == 0:
                     record(it, norm, vecs[nxt][0], met_by_pid, t0, t_kernel, t_route)
                 if converged or it >= max_iter:
@@ -621,25 +627,23 @@ def pagerank_barrier(
                     # publish; iteration checkpoints stay raw so a resume
                     # continues the genuine leaking trajectory
                     rank = rank / rank.sum()
-                # publish the final vector to shard storage (atomic rename)
-                # instead of yielding the n-array through collect(): the
-                # driver materializes the result table DISTRIBUTED via
-                # ShardedGraph.ranks_df — no O(n) driver serialization.
-                save_npy_atomic(rank_out, rank)
-                yield {"kind": "result", "iterations": it,
-                       "norm": norm, "converged": converged, "iter_log": iter_log}
-            yield {"kind": "task", "pid": pid, "metrics": my_metrics}
+                # publish the final [node, rank] table to shard storage
+                # (atomic rename) instead of yielding the n-array through
+                # collect(): the driver reads it back as a parquet scan —
+                # no O(n) driver serialization.
+                write_rank_table(rank_out, ids, rank)
+                yield {"iterations": it, "norm": norm,
+                       "converged": converged, "iter_log": iter_log}
         finally:
             mesh.close()
 
     try:
-        out = sc.parallelize(tasks, P).barrier().mapPartitions(run).collect()
+        (res,) = sc.parallelize(range(P), P).barrier().mapPartitions(run).collect()
     finally:
         if rdv is not None:
             rdv.close()
         bc.destroy()
-    res = next(o for o in out if o["kind"] == "result")
-    ranks_df = g.ranks_df(vector_path=rank_out)  # published by task 0
+    ranks_df = spark.read.schema("node long, rank double").parquet(rank_out)
     if sharded_graph is None:
         # pin the distributed result before the owned temp dir is removed
         ranks_df = ranks_df.localCheckpoint(eager=True)

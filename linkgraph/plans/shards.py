@@ -18,9 +18,11 @@ JDS degree-bucketing of skewed rows         | explicit hub split: vertices with
                                             | dedicated shards; partial sums
                                             | combined in a second level
                                             | (SURVEY §4 X3)
-CSR block resident per MPI rank for the     | each gang task loads its shards
-whole run (scattered at :122-126, reused    | ONCE, before the loop; the
-every iteration)                            | decoded numpy arrays stay
+CSR built once from (dst, src)-sorted COO   | the build writes every shard
+(readers/mtx_sparse.h:55-69), resident per  | sorted by (dst_idx, src_idx);
+MPI rank for the whole run (scattered at    | each gang task decodes its
+:122-126, reused every iteration)           | shards ONCE, before the loop,
+                                            | and keeps the numpy arrays
                                             | resident for the whole solve
 MPI_Allgatherv of the dense rank vector     | partial sums exchanged task-to-
 every iteration (pagerank_custom_mpi.h:62)  | task inside one barrier gang
@@ -35,12 +37,11 @@ DataFrame back through the JVM→Arrow→Python pipe re-serializes every edge
 every iteration and measures ~2M rows/s TOTAL regardless of core count (the
 columnar cache is row-materialized before Arrow conversion) — an iteration-
 scaling dead end. The whole PageRank loop runs inside one barrier gang
-task per process (plans/barrier.py): each task loads its shards once, as
-.npy CSR sidecars next to the parquet (the first load decodes the parquet
-and writes them), and keeps the arrays for the whole solve, so iterations
+task per process (plans/barrier.py): each task reads its part dirs once
+with pyarrow and keeps the arrays for the whole solve, so iterations
 exchange only O(n) partial sums, not O(m) edges, like the reference MPI
-loop. The sidecars are the only shard cache: loading one is a file read,
-where a decode re-reads the parquet and sorts it by dst. On a real
+loop. The parquet is the only format: rows arrive already in CSR order,
+so a load is a column read plus one diff over dst, with no sort. On a real
 cluster the shard directory lives on DFS/object storage.
 
 Scale notes (100 TB / 1000-executor design):
@@ -57,13 +58,13 @@ Scale notes (100 TB / 1000-executor design):
   memory (~10^9 vertices at 8 B/vertex) — the same envelope as the
   reference's MPI Allgatherv. Beyond that, `pagerank_dataframe` is the
   unbounded join-gather fallback (SURVEY §3.3).
-* Shard count is tuned from the edge count (`tune_shuffle_partitions`) —
-  the north rule's per-iteration shuffle tuning applies to the build and
-  to the fallback path's per-iteration joins.
+* Shard count follows the edge count when not given: at least one shard
+  per core, and about ``TARGET_EDGES_PER_SHARD`` edges or fewer each.
 """
 
 from __future__ import annotations
 
+import json
 import math
 import os
 import shutil
@@ -72,7 +73,6 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -88,54 +88,13 @@ TARGET_EDGES_PER_SHARD = 8_000_000
 _BUCKETS_PER_SHARD = 2
 
 
-def tune_shuffle_partitions(spark: SparkSession, m_edges: int, floor: int | None = None) -> int:
-    """Pick shuffle/shard parallelism from observed edge mass (north rule:
-    'shuffle partitioning tuned per iteration'). Called before every shuffle
-    stage whose input size we know."""
-    cores = spark.sparkContext.defaultParallelism
-    floor = floor or cores
-    p = max(floor, math.ceil(m_edges / TARGET_EDGES_PER_SHARD))
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    return p
-
-
-def _decode_csr(path: str):
-    """Returns (src_sorted, uniq_dst, starts, w_sorted) — ``w_sorted`` is a
-    0-length array for unweighted shards (the sidecar marker for "no per-
-    edge weight stream"), else the per-edge normalized weights in the same
-    dst-sorted order as src (the COO data[] array of the reference,
-    readers/mtx_sparse.h:123-132, re-sorted into our CSR layout)."""
-    t = pq.read_table(path)
-    src = t.column("src_idx").to_numpy(zero_copy_only=False)
-    dst = t.column("dst_idx").to_numpy(zero_copy_only=False)
-    w = (
-        t.column("w").to_numpy(zero_copy_only=False).astype(np.float64)
-        if "w" in t.column_names
-        else np.empty(0, np.float64)
-    )
-    if len(dst) == 0:
-        return src, np.empty(0, np.int64), np.empty(0, np.int64), w
-    order = np.argsort(dst, kind="stable")
-    src_s = np.ascontiguousarray(src[order])
-    if len(w):
-        w = np.ascontiguousarray(w[order])
-    dst_s = dst[order]
-    starts = np.flatnonzero(np.r_[True, np.diff(dst_s) != 0])
-    uniq = dst_s[starts].astype(np.int64)
-    return src_s, uniq, starts, w
-
-
-def save_npy_atomic(path: str, arr: np.ndarray) -> None:
-    """Write ``arr`` to ``path`` through a per-process tmp file and an
-    atomic rename: a reader never sees a partial file, and concurrent
-    writers of the same array are idempotent."""
-    tmp = path + f".tmp{os.getpid()}.npy"
-    np.save(tmp, arr)
-    os.replace(tmp, path)
+# a vertex whose in-degree exceeds this multiple of one shard's edge share
+# (m / num_shards) is a hub: its in-edges are salted across several shards
+_HUB_SALT_FACTOR = 1.0
 
 
 def load_csr_shard(path: str):
-    """One shard in iteration-ready CSR form: src sorted by dst, plus the
+    """One shard in iteration-ready CSR form: src in dst order, plus the
     STATIC dst segment index (unique dst values + start offsets — the CSR
     rowptr, pagerank_custom.h:128-134, built once). Per iteration only src
     and the contrib vector are streamed; dst never touches memory again.
@@ -143,38 +102,26 @@ def load_csr_shard(path: str):
     of src, kept as one n-sized array per task (ShardedGraph.inv_od), so
     the per-edge stream is 4 B of int32 src.
 
-    The decoded arrays are persisted as .npy sidecars next to the parquet
-    (first toucher writes them, tmp+rename so concurrent creation is
-    idempotent): re-opening a shard for a later solve on the same layout
-    is a page-cache-speed file read, not a parquet decode + sort. The
-    sidecar names start with "_", which pyarrow's dataset discovery skips,
-    so a part dir holding only some of them still decodes. Arrays are
-    loaded INTO RAM, not mmap'd — numpy fancy indexing with a memmap index
-    array measures ~2× slower than with a plain ndarray, and the gather is
-    the hot loop."""
-    src_p, uniq_p, starts_p, w_p = (
-        os.path.join(path, f"_csr_{k}.npy") for k in ("src", "uniq", "starts", "w")
-    )
-    # _csr_w is ALWAYS written (0-length for unweighted shards), so sidecar
-    # completeness is a single all-exist check — a weighted shard can never
-    # be mistaken for unweighted by a missing file
-    if not all(os.path.exists(p) for p in (src_p, uniq_p, starts_p, w_p)):
-        src_s, uniq, starts, wt = _decode_csr(path)
-        for arr, dest in (
-            (uniq, uniq_p), (starts, starts_p), (wt, w_p), (src_s, src_p)
-        ):
-            save_npy_atomic(dest, arr)
-    src_s = np.load(src_p)
-    uniq = np.load(uniq_p)
-    starts = np.load(starts_p)
-    wt = np.load(w_p)
-    return (
-        src_s,
-        uniq,
-        starts,
-        _block_plan(starts, len(src_s)),
-        wt if len(wt) else None,
-    )
+    The build writes each part sorted by (dst_idx, src_idx), so the rows
+    are already in CSR order: one diff over dst finds the segments. A part
+    whose dst_idx decreases somewhere (a layout written without that sort)
+    raises ValueError; rebuild it. The arrays are plain ndarrays in RAM —
+    numpy fancy indexing with a memmap index array measures ~2× slower,
+    and the gather is the hot loop."""
+    t = pq.read_table(path)
+    src = t.column("src_idx").to_numpy()
+    dst = t.column("dst_idx").to_numpy()
+    step = np.diff(dst, prepend=dst[:1] - 1)
+    if (step < 0).any():
+        raise ValueError(
+            f"load_csr_shard: {path} is not sorted by dst_idx; rebuild the "
+            "layout with ShardedGraph.build"
+        )
+    starts = np.flatnonzero(step)
+    # the per-edge normalized weights of a weighted layout (the COO data[]
+    # array of the reference, readers/mtx_sparse.h:123-132), in src order
+    wt = t.column("w").to_numpy().astype(np.float64) if "w" in t.column_names else None
+    return src, dst[starts].astype(np.int64), starts, _block_plan(starts, len(src)), wt
 
 
 _GATHER_SCRATCH = np.empty(0, dtype=np.float64)
@@ -264,38 +211,6 @@ def csr_partials(shard, w_rank: np.ndarray):
     return uniq, out.copy(), nnz
 
 
-# distributed rank materialization: executors read their [lo, hi) slice of
-# the published node_ids/rank arrays — the n-row result table never funnels
-# through a driver createDataFrame (round-2 VERDICT's one O(n) driver
-# serialization point on the flagship path).
-_RANKS_SCHEMA = "node long, rank double"
-_RANKS_CHUNK = 1 << 20  # rows per Arrow batch (~16 MB)
-
-
-def _make_ranks_reader(node_ids_path: str, rank_path: str):
-    """Arrow kernel: rows are (lo, hi) vertex-segment descriptors; each task
-    mmap-slices the published node_ids.npy / rank vector file (shared
-    storage, the same assumption as the shard files) and emits its segment as
-    [node, rank] batches — only the slice is ever faulted into memory."""
-
-    def read(batches):
-        ids = np.load(node_ids_path, mmap_mode="r")
-        rk = np.load(rank_path, mmap_mode="r")
-        for b in batches:
-            for lo, hi in zip(b.column("lo").to_pylist(), b.column("hi").to_pylist()):
-                for c in range(lo, hi, _RANKS_CHUNK):
-                    ce = min(c + _RANKS_CHUNK, hi)
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            pa.array(np.asarray(ids[c:ce], dtype=np.int64)),
-                            pa.array(np.asarray(rk[c:ce], dtype=np.float64)),
-                        ],
-                        names=["node", "rank"],
-                    )
-
-    return read
-
-
 def _shard_paths(shard_dir: str) -> list[tuple[int, str]]:
     """[(part, path)], one entry per part dir, part-ascending."""
     return sorted(
@@ -313,7 +228,6 @@ class ShardedGraph:
     parts: list[tuple[int, str]]  # [(part, path)], part-ascending
     shard_dir: str
     node_ids: np.ndarray  # sorted long[n]; idx = position (driver copy)
-    dangling_mask: np.ndarray  # bool[n]
     inv_od: np.ndarray  # float64[n], 1/outdeg (0 for dangling)
     n: int
     m: int
@@ -327,7 +241,6 @@ class ShardedGraph:
     def build(
         edges: DataFrame,
         num_shards: int | None = None,
-        hub_salt_factor: float = 1.0,
         shard_dir: str | None = None,
         weight_col: str | None = None,
     ) -> "ShardedGraph":
@@ -404,14 +317,17 @@ class ShardedGraph:
         node_ids = deg["node"].to_numpy()  # sorted; idx = position
         in_deg = deg["in_deg"].to_numpy()
         m = int(in_deg.sum())
-        num_shards = num_shards or tune_shuffle_partitions(spark, m)
+        num_shards = num_shards or max(
+            spark.sparkContext.defaultParallelism,
+            math.ceil(m / TARGET_EDGES_PER_SHARD),
+        )
         n_buckets = num_shards * _BUCKETS_PER_SHARD
 
         # 2) bucket/salt plan: exact edge-balanced boundaries from the
         #    exclusive in-degree CDF in idx order (the CSR rowptr prefix
         #    sum, pagerank_custom.h:128-134), hub split where
         #    in_deg > threshold (JDS precedent, mtx_hybrid.h:39-221).
-        hub_threshold = max(1, int(hub_salt_factor * m / num_shards))
+        hub_threshold = max(1, int(_HUB_SALT_FACTOR * m / num_shards))
         per_bucket = max(1, math.ceil(m / n_buckets))
         cdf = np.cumsum(in_deg) - in_deg
         bucket = np.minimum(n_buckets - 1, (cdf / per_bucket).astype(np.int64))
@@ -473,6 +389,10 @@ class ShardedGraph:
             # execute the m-row joins twice. At scale the doubled map work
             # costs more than the write tail (measured equal at sf0.1).
             .repartition(n_parts, "part")
+            # CSR order inside every part (the reference's (dst, src) sort,
+            # readers/mtx_sparse.h:55-69): the partitioned writer sorts by
+            # part anyway, so this only lengthens its sort key
+            .sortWithinPartitions("part", "dst_idx", "src_idx")
             .write.mode("overwrite")
             .partitionBy("part")
             .parquet(shard_dir)
@@ -484,17 +404,15 @@ class ShardedGraph:
         # per-rank dense vector): 1/outdeg array + dangling mask — the
         # leaves[] list of custom_matrix.h:40-59
         out_deg = deg["out_deg"].to_numpy().astype(np.float64)
-        dangling_mask = out_deg == 0
+        dangling = out_deg == 0
         if weighted:
             # weights ship pre-normalized per edge; the n-vector is just the
             # dangling mask (gather rank·1, multiply by the w stream)
-            inv_od = np.where(dangling_mask, 0.0, 1.0)
+            inv_od = np.where(dangling, 0.0, 1.0)
         else:
-            inv_od = np.where(dangling_mask, 0.0, 1.0 / np.where(dangling_mask, 1.0, out_deg))
+            inv_od = np.where(dangling, 0.0, 1.0 / np.where(dangling, 1.0, out_deg))
         np.save(os.path.join(shard_dir, "inv_od.npy"), inv_od)
         np.save(os.path.join(shard_dir, "node_ids.npy"), node_ids)
-        import json
-
         with open(os.path.join(shard_dir, "meta.json"), "w") as f:
             json.dump(
                 {"n": n, "m": m, "num_shards": num_shards,
@@ -508,7 +426,6 @@ class ShardedGraph:
             parts=_shard_paths(shard_dir),
             shard_dir=shard_dir,
             node_ids=node_ids,
-            dangling_mask=dangling_mask,
             inv_od=inv_od,
             n=n,
             m=m,
@@ -525,8 +442,6 @@ class ShardedGraph:
         part dirs) without touching the edge table — a built layout is a
         reusable physical artifact, like the reference's formatted matrix
         files."""
-        import json
-
         with open(os.path.join(shard_dir, "meta.json")) as f:
             meta = json.load(f)
         inv_od = np.load(os.path.join(shard_dir, "inv_od.npy"))
@@ -536,7 +451,6 @@ class ShardedGraph:
             parts=_shard_paths(shard_dir),
             shard_dir=shard_dir,
             node_ids=node_ids,
-            dangling_mask=inv_od == 0.0,
             inv_od=inv_od,
             n=meta["n"],
             m=meta["m"],
@@ -545,37 +459,6 @@ class ShardedGraph:
             hub_threshold=meta["hub_threshold"],
             weighted=meta.get("weighted", False),
             _owns_dir=False,
-        )
-
-    def ranks_df(self, vector_path: str) -> DataFrame:
-        """Distributed [node: long, rank: double] materialization of an
-        n-vector published at ``vector_path`` (an .npy file, written with
-        an atomic rename — the gang's task 0 publishes each result to a
-        unique file under ``shard_dir``): ~cores executor tasks mmap-slice
-        node_ids.npy + the vector file and emit Arrow batches. The n-row
-        result never passes through a driver ``createDataFrame`` — at
-        n≈10^9 that single-process serialization was the last O(n) driver
-        choke point on the flagship path (round-2 VERDICT #1). The
-        returned plan reads files under ``shard_dir``: callers that own a
-        temp dir must pin the result (``localCheckpoint(eager=True)``)
-        before ``unpersist`` removes the directory."""
-        parts = max(
-            1,
-            min(
-                self.spark.sparkContext.defaultParallelism,
-                math.ceil(self.n / _RANKS_CHUNK),
-            ),
-        )
-        bounds = np.linspace(0, self.n, parts + 1).astype(np.int64)
-        seg = self.spark.createDataFrame(
-            [(int(bounds[i]), int(bounds[i + 1])) for i in range(parts)],
-            "lo long, hi long",
-        ).repartition(parts)
-        return seg.mapInArrow(
-            _make_ranks_reader(
-                os.path.join(self.shard_dir, "node_ids.npy"), vector_path
-            ),
-            _RANKS_SCHEMA,
         )
 
     def unpersist(self):

@@ -19,7 +19,8 @@ import pytest
 from linkgraph.operators.pagerank import pagerank_dataframe
 from linkgraph.oracle import pagerank_family_a
 from linkgraph.plans.barrier import pagerank_barrier
-from linkgraph.plans.shards import ShardedGraph, load_csr_shard, save_npy_atomic
+from linkgraph.plans import shards
+from linkgraph.plans.shards import ShardedGraph, load_csr_shard
 from tests import conftest as fx
 
 
@@ -76,12 +77,14 @@ def test_sharded_matches_oracle(spark):
     assert res.iterations == oiters
 
 
-def test_star_hub_salting_matches_unsalted(spark):
+def test_star_hub_salting_matches_unsalted(spark, monkeypatch):
     """FIXTURES §F3 star_hub: with a tiny hub threshold the hub's in-edges
     are salted across shards; result must equal the unsalted run (1e-6)."""
     src, dst, n = fx.star_hub(2000)
     df = fx.edges_df(spark, src, dst)
-    g_salted = ShardedGraph.build(df, num_shards=4, hub_salt_factor=0.05)
+    with monkeypatch.context() as mp:
+        mp.setattr(shards, "_HUB_SALT_FACTOR", 0.05)
+        g_salted = ShardedGraph.build(df, num_shards=4)
     assert g_salted.hub_count >= 1  # the hub actually got split
     salted = pagerank_barrier(df, eps=1e-8, sharded_graph=g_salted)
     unsalted = pagerank_barrier(df, eps=1e-8, num_shards=1, num_tasks=1)
@@ -125,7 +128,7 @@ def test_shard_layout_reload(spark, tmp_path):
     g2 = ShardedGraph.load(spark, sd)
     assert (g2.n, g2.m, g2.num_shards) == (g.n, g.m, g.num_shards)
     assert np.array_equal(g2.node_ids, g.node_ids)
-    assert np.array_equal(g2.dangling_mask, g.dangling_mask)
+    assert np.array_equal(g2.inv_od, g.inv_od)
     b = pagerank_barrier(df, eps=1e-8, sharded_graph=g2, num_tasks=2)
     assert np.allclose(_vec(a), _vec(b), atol=1e-9, rtol=0)
     g2.unpersist()
@@ -156,12 +159,13 @@ _LAYOUT_PINS = {
 
 
 @pytest.mark.parametrize("case", sorted(_LAYOUT_PINS))
-def test_layout_pinned(spark, case):
+def test_layout_pinned(spark, monkeypatch, case):
     """Bucket boundaries (exact in-degree CDF), hub salts and per-part rows
     are pinned on three fixtures, salted and weighted included."""
     if case == "star_hub":
         src, dst, _ = fx.star_hub(2000)
-        df, kw = fx.edges_df(spark, src, dst), dict(hub_salt_factor=0.05)
+        df, kw = fx.edges_df(spark, src, dst), {}
+        monkeypatch.setattr(shards, "_HUB_SALT_FACTOR", 0.05)
     else:
         src, dst, _ = fx.karate_club()
         if case == "karate":
@@ -177,25 +181,63 @@ def test_layout_pinned(spark, case):
         g.unpersist()
 
 
-def test_partial_sidecar_set_loads(spark):
-    """A task that dies between the sidecar renames leaves a part dir with
-    only some of the .npy files; the next load must still decode the
-    parquet (the sidecars are invisible to it) and equal a clean load."""
-    src, dst, n = fx.karate_club()
-    g = ShardedGraph.build(fx.edges_df(spark, src, dst), num_shards=2)
+def test_parts_are_written_in_csr_order(spark, monkeypatch):
+    """Every part file of a hub-salted and of a weighted build holds its
+    rows sorted by (dst_idx, src_idx): the gang decodes them without a
+    sort."""
+    src, dst, _ = fx.star_hub(2000)
+    with monkeypatch.context() as mp:
+        mp.setattr(shards, "_HUB_SALT_FACTOR", 0.05)
+        salted = ShardedGraph.build(fx.edges_df(spark, src, dst), num_shards=4)
+    ksrc, kdst, _ = fx.karate_club()
+    weighted = ShardedGraph.build(
+        _weighted_df(spark, ksrc, kdst), num_shards=4, weight_col="wt"
+    )
     try:
-        for _part, path in g.parts:
-            clean = load_csr_shard(path)
-            for f in os.listdir(path):
-                if f.endswith(".npy") and "uniq" not in f:
-                    os.remove(os.path.join(path, f))
-            assert len([f for f in os.listdir(path) if f.endswith(".npy")]) == 1
-            again = load_csr_shard(path)
-            for a, b in zip(clean[:3] + clean[3], again[:3] + again[3]):
-                assert np.array_equal(a, b)
-            assert clean[4] is None and again[4] is None
+        assert salted.hub_count >= 1 and weighted.weighted
+        for g in (salted, weighted):
+            for _part, path in g.parts:
+                files = [f for f in os.listdir(path) if f.endswith(".parquet")]
+                assert files
+                for f in files:
+                    t = pq.read_table(os.path.join(path, f))
+                    d = t.column("dst_idx").to_numpy().astype(np.int64)
+                    s = t.column("src_idx").to_numpy().astype(np.int64)
+                    order = np.lexsort((s, d))
+                    assert np.array_equal(order, np.arange(len(d))), (path, f)
     finally:
+        salted.unpersist()
+        weighted.unpersist()
+
+
+def test_unsorted_shard_is_refused(tmp_path):
+    """A part whose dst_idx is not non-decreasing (a layout written before
+    the build sorted its parts) raises instead of decoding wrong segments."""
+    import pyarrow as pa
+
+    part = tmp_path / "part=0"
+    part.mkdir()
+    pq.write_table(
+        pa.table({"src_idx": np.array([0, 1, 2], np.int32),
+                  "dst_idx": np.array([1, 0, 1], np.int32)}),
+        str(part / "part-0.parquet"),
+    )
+    with pytest.raises(ValueError, match="not sorted by dst_idx"):
+        load_csr_shard(str(part))
+
+
+def test_build_keeps_session_shuffle_partitions(spark):
+    """A build that picks its own shard count leaves the session's
+    spark.sql.shuffle.partitions as the caller set it."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    src, dst, n = fx.karate_club()
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "7")
+        g = ShardedGraph.build(fx.edges_df(spark, src, dst))
         g.unpersist()
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def test_rebuild_into_same_shard_dir(spark, tmp_path):
@@ -306,7 +348,7 @@ def test_resume_barrier(spark, tmp_path):
     assert pm is not None and pm.count() > 0
 
 
-def test_gang_task_count_bit_identical_and_checkpoints(spark, tmp_path):
+def test_gang_task_count_bit_identical_and_checkpoints(spark, tmp_path, monkeypatch):
     """One-, three- and four-task gangs on the same layout combine every
     vertex's partial sums part-ascending at its segment owner, so they
     produce identical floats and iteration counts — also on a hub-salted
@@ -322,9 +364,12 @@ def test_gang_task_count_bit_identical_and_checkpoints(spark, tmp_path):
     salted = salted.select("src", "dst")
     for name, df, build_kw in (
         ("karate", karate, {"num_shards": 3}),
-        ("salted", salted, {"num_shards": 6, "hub_salt_factor": 0.3}),
+        ("salted", salted, {"num_shards": 6}),
     ):
-        g = ShardedGraph.build(df, **build_kw)
+        with monkeypatch.context() as mp:
+            if name == "salted":
+                mp.setattr(shards, "_HUB_SALT_FACTOR", 0.3)
+            g = ShardedGraph.build(df, **build_kw)
         if name == "salted":
             assert g.hub_count > 0  # a hub's in-edges really span parts
         rb = pagerank_barrier(df, eps=1e-9, max_iter=300, sharded_graph=g, num_tasks=1)
@@ -441,20 +486,55 @@ def test_auto_dispatch_regimes(spark, tmp_path, monkeypatch):
         pagerank(df, eps=1e-8, strategy="sharded")
 
 
+class _MemoryStore:
+    """A duck-typed checkpoint store with no ``root``: it keeps every
+    committed snapshot in memory."""
+
+    def __init__(self):
+        self.snaps = {}
+
+    def latest_iteration(self, run_id):
+        return max((k for r, k in self.snaps if r == run_id), default=None)
+
+    def write_iteration(self, run_id, iteration, ranks, iter_metrics, partition_metrics=None):
+        self.snaps[(run_id, iteration)] = ranks.toPandas()
+
+    def read_ranks(self, spark, run_id, iteration):
+        return spark.createDataFrame(self.snaps[(run_id, iteration)])
+
+
+def test_non_parquet_store_takes_the_dataframe_plan(spark):
+    """The gang commits only into the ParquetManifestStore layout: given
+    any other store it refuses before building a layout, and the auto
+    dispatch checkpoints through the store on the dataframe plan."""
+    from linkgraph.operators.pagerank import pagerank
+
+    src, dst, n = fx.karate_club()
+    df = fx.edges_df(spark, src, dst)
+    store = _MemoryStore()
+    sc = spark.sparkContext
+    sc.setJobGroup("test-stub-store", "refused gang")
+    try:
+        with pytest.raises(ValueError, match="ParquetManifestStore"):
+            pagerank_barrier(df, eps=1e-8, store=store, run_id="s")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("test-stub-store")) == []
+
+    res = pagerank(df, eps=1e-8, max_iter=5, store=store, run_id="s")
+    assert res.strategy == "dataframe"
+    assert store.latest_iteration("s") == res.iterations == 5
+    want = pagerank_barrier(df, eps=1e-8, max_iter=5)
+    assert np.allclose(_vec(res), _vec(want), atol=1e-6, rtol=0)
+
+
 def test_ranks_df_distributed_and_isolated(spark):
-    """ShardedGraph.ranks_df materializes [node, rank] from executors (no
-    driver createDataFrame), and each result is published to a UNIQUE
-    vector file: a later solve on the same graph must not retarget an
-    earlier result's lazy plan."""
+    """Each result is published to a UNIQUE parquet file: a later solve on
+    the same graph must not retarget an earlier result's lazy plan."""
     src, dst, n = fx.karate_club()
     df = fx.edges_df(spark, src, dst)
     g = ShardedGraph.build(df, num_shards=3)
-
-    vec = np.arange(g.n, dtype=np.float64) / g.n
-    vec_path = os.path.join(g.shard_dir, "vec.npy")
-    save_npy_atomic(vec_path, vec)
-    got = {r["node"]: r["rank"] for r in g.ranks_df(vec_path).collect()}
-    assert got == {int(nid): float(v) for nid, v in zip(g.node_ids, vec)}
 
     a = pagerank_barrier(df, eps=1e-8, sharded_graph=g)
     a_before = _vec(a)
